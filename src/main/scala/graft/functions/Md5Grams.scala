@@ -12,10 +12,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *   transform(sequence(1, length(text) - L + 1),
   *             i -> unhex(md5(cast(substring(text, i, L) as binary))))
   *
-  * on every input with length(text) >= L (the only domain the substring
-  * dedup operators feed it — they filter shorter docs out first; on a
-  * shorter input this returns an empty array where the builtin's
-  * descending sequence(1, 0) would emit two degenerate windows).
+  * on every input. The substring dedup operators feed it only
+  * length(text) >= L (they filter shorter docs out first); a shorter
+  * input takes a slow path that replays the spec literally — the
+  * descending sequence(1, length - L + 1) and SQL substring's clamping
+  * of positions <= 0 — so it too returns the builtin's degenerate
+  * windows, and NULL stays NULL.
   *
   * Why native (r06, measured): the builtin chain walks the string from
   * position 0 for EVERY window (substring is O(pos) on UTF8String — the
@@ -76,7 +78,7 @@ object Md5Grams {
       if ((bytes(bi) & 0xc0) != 0x80) nChars += 1
       bi += 1
     }
-    if (nChars < l) return new GenericArrayData(Array.empty[Any])
+    if (nChars < l) return shortInput(s, nChars, l)
     val offs = new Array[Int](nChars + 1)
     var ci = 0
     bi = 0
@@ -95,5 +97,15 @@ object Md5Grams {
       i += 1
     }
     new GenericArrayData(out)
+  }
+
+  // below L characters the spec's sequence runs DOWN from 1 and every
+  // window is whatever substring(text, i, L) makes of a position <= 1
+  private def shortInput(s: UTF8String, nChars: Int, l: Int): ArrayData = {
+    val md = digest.get()
+    new GenericArrayData((1 to (nChars - l + 1) by -1).map { i =>
+      md.reset()
+      md.digest(s.substringSQL(i, l).getBytes): Any
+    }.toArray)
   }
 }

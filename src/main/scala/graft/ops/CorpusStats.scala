@@ -313,7 +313,7 @@ object CorpusStats {
     * an exchange. The keep-first scan is an `aggregate` accumulating the
     * kept prefix (`array_contains` + `array_append`) — O(units²)
     * worst-case per document, bounded by page size (a 100 KB page is
-    * ~2.5k units). MEASURED choice (tools/IndocProbe, sf0.1): the
+    * ~2.5k units). MEASURED choice (A/B at sf0.1, BENCH/BASELINE.md): the
     * equivalent `filter(us, (x, i) -> array_position(us, x) = i + 1)`
     * runs 13× SLOWER (6.4 s vs 0.50 s) — the indexed-lambda HOF path is
     * interpreted per element; don't "simplify" back to it. */

@@ -123,9 +123,10 @@ object Dedup {
     * two-phase groupBy+join cap with the est computed after a
     * distinct-pairs step (the "shuffle keys, not payloads" ideal of
     * guide §8) was built and benched at 1.89 s vs 1.25 s for this shape
-    * (VariantProbe, interleaved medians): it pays three extra exchanges
-    * and five extra stages, which at bench scale cost more than the
-    * payload bytes and redundant per-band est evaluations it saves.
+    * (interleaved medians, OPTIMIZATION_r06.md): it pays three extra
+    * exchanges and five extra stages, which at bench scale cost more
+    * than the payload bytes and redundant per-band est evaluations it
+    * saves.
     * The window's skew exposure is bounded by the semantics itself:
     * every row of a hot band partition is dropped by the cap filter
     * immediately after counting, and the window buffers spill rather

@@ -1,6 +1,8 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions.col
 
 /** Input-layout guard for row-multiplying hot projections (optimization
@@ -26,7 +28,7 @@ import org.apache.spark.sql.functions.col
   * work per task. 64 KB of input text per task ≈ 6-25 MB of post-explode
   * rows per task — ordinary task sizing (guide §2.2) expressed against
   * the pre-explode proxy. Override per session with
-  * `spark.graft.spread.bytesPerTask`.
+  * `spark.graft.spread.bytesPerTask` (a positive long).
   *
   * Scale honesty: the guard moves only the narrow pre-explode rows —
   * ~1/expansion of the hot stage's output — and ONLY when the input
@@ -38,11 +40,30 @@ import org.apache.spark.sql.functions.col
   */
 private[graft] object Par {
 
+  private val bytesPerTaskKey = "spark.graft.spread.bytesPerTask"
+
+  /** The session's bytes-per-task setting: a positive long (the target
+    * below divides by it), else an error naming the key and value. */
+  private def bytesPerTask(df: DataFrame): Long =
+    df.sparkSession.conf.getOption(bytesPerTaskKey).fold(64L * 1024) { v =>
+      v.trim.toLongOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException(
+          s"$bytesPerTaskKey must be a positive long, got '$v'"))
+    }
+
   def spread(df: DataFrame, idCol: String): DataFrame = {
     val sc = df.sparkSession.sparkContext
-    val bytesPerTask = df.sparkSession.conf
-      .getOption("spark.graft.spread.bytesPerTask").map(_.toLong)
-      .getOrElse(64L * 1024)
+    val perTask = bytesPerTask(df)
+    // an upstream exchange already redistributes the rows on its own key,
+    // so the single-scan-split case this guards against cannot arise —
+    // and reading its partition count would finalize the adaptive plan,
+    // running that exchange as a discarded job in a lazy builder. The
+    // AQE wrapper's executedPlan is its initial plan: nothing has run.
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    if (plan.find(_.isInstanceOf[Exchange]).isDefined) return df
     // size from the LEAF relations (actual file bytes for a parquet
     // scan), not the projected plan: intermediate Project/Filter stats
     // re-estimate strings at a 20-byte default, 15× under this corpus's
@@ -53,10 +74,11 @@ private[graft] object Par {
     val est = df.queryExecution.optimizedPlan.collectLeaves()
       .map(_.stats.sizeInBytes).sum
     val target = est
-      .min(BigInt(sc.defaultParallelism) * bytesPerTask)
-      .max(BigInt(bytesPerTask)) / bytesPerTask
-    // getNumPartitions plans the physical scan (no job is run); a
-    // degenerate layout is visible there as fewer partitions than target
+      .min(BigInt(sc.defaultParallelism) * perTask)
+      .max(BigInt(perTask)) / perTask
+    // exchange-free, getNumPartitions plans the physical scan (no job is
+    // run); a degenerate layout is visible there as fewer partitions than
+    // target
     if (df.rdd.getNumPartitions >= target.toInt) df
     else df.repartition(target.toInt, col(idCol))
   }

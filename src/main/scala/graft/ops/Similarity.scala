@@ -173,9 +173,12 @@ object Similarity {
     * map-side; the (C·dim)-row model is what crosses to the driver. */
   def kmeansMicro(corpus: DataFrame, idCol: String, vecCol: String,
       centroids: Int = 16, iters: Int = 3): Seq[(Long, Seq[Long])] = {
+    // spread the raw rows BEFORE the micro-quantizing projection, as
+    // sigsOf does: the per-element work then runs after the exchange
     val vm = Par.spread(
         corpus.select(col(idCol).cast("long").as("vec_id"),
-          microCol(col(vecCol)).as("vm")), "vec_id")
+          col(vecCol).as("v")), "vec_id")
+      .select(col("vec_id"), microCol(col("v")).as("vm"))
       // a null ELEMENT would poison the per-dim sums (driver NPE on an
       // all-null (cell, dim) group, silently deflated mean otherwise):
       // train only on fully-defined vectors

@@ -181,23 +181,27 @@ object Jobs {
     * 282-337 `report_output_file_size`; quality.py:12-44 hit-ratio
     * metric). */
   def metrics(extracted: Dataset[ExtractResult], buckets: Int,
-      attempt: Int, wallMs: Long = 0L): DataFrame = {
-    extracted.toDF()
-      .withColumn("url_hash_bucket", bucketCol(buckets))
-      .groupBy(col("url_hash_bucket"))
-      .agg(
-        count(lit(1)).as("docs"),
-        sum(length(col("text"))).as("bytes"),
-        sum(when(col("outcome").startsWith("error"), 1L).otherwise(0L))
-          .as("failures"),
-        sum(when(col("outcome").startsWith("skipped"), 1L).otherwise(0L))
-          .as("skips"),
-        sum(when(col("truncated"), 1L).otherwise(0L)).as("truncations"))
+      attempt: Int, wallMs: Long = 0L): DataFrame =
+    bucketMetrics(extracted.toDF(), bucketCol(buckets), attempt, wallMs,
+      sum(when(col("outcome").startsWith("skipped"), 1L).otherwise(0L))
+        .as("skips"),
+      sum(when(col("truncated"), 1L).otherwise(0L)).as("truncations"))
+
+  /** The core of the FIXTURES.md `metrics` schema, shared by [[metrics]]
+    * and CheckpointedWriter: per `bucket`, docs, bytes and failures
+    * (outcomes starting with "error"), then any `extra` aggregates, then
+    * the lineage columns. */
+  private[spark] def bucketMetrics(rows: DataFrame, bucket: Column,
+      attempt: Int, wallMs: Long, extra: Column*): DataFrame =
+    rows.groupBy(bucket.as("url_hash_bucket"))
+      .agg(count(lit(1)).as("docs"),
+        Seq(sum(length(col("text"))).as("bytes"),
+          sum(when(col("outcome").startsWith("error"), 1L).otherwise(0L))
+            .as("failures")) ++ extra: _*)
       .withColumn("partition_id", col("url_hash_bucket"))
       .withColumn("wall_ms", lit(wallMs))
       .withColumn("attempt", lit(attempt))
       .withColumn("committed_ts", current_timestamp())
-  }
 }
 
 /** Idempotent, resumable bucket-committed writer — the sandbox stand-in
@@ -314,17 +318,10 @@ object CheckpointedWriter {
       // a fresh output dir leaves dataDir with only _SUCCESS, and
       // schema INFERENCE over that throws — the explicit schema makes the
       // empty extraction a (correct) empty metrics write instead.
-      spark.read.schema(withBucket.schema).parquet(dataDir(out))
-        .filter(col("bucket").isin(todo: _*))
-        .groupBy(col("bucket").as("url_hash_bucket"))
-        .agg(count(lit(1)).as("docs"),
-          sum(length(col("text"))).as("bytes"),
-          sum(when(col("outcome").startsWith("error"), 1L).otherwise(0L))
-            .as("failures"))
-        .withColumn("partition_id", col("url_hash_bucket"))
-        .withColumn("wall_ms", lit(wallMs))
-        .withColumn("attempt", lit(attempt))
-        .withColumn("committed_ts", current_timestamp())
+      Jobs.bucketMetrics(
+          spark.read.schema(withBucket.schema).parquet(dataDir(out))
+            .filter(col("bucket").isin(todo: _*)),
+          col("bucket"), attempt, wallMs)
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("url_hash_bucket")

@@ -33,9 +33,9 @@ import org.apache.spark.sql.functions._
   *    in the metrics as a bug).
   *
   * The same session also runs the NO-SPARK kernel twin (plain JVM
-  * threads over the same synthetic rows, ProfileThreads-style): if the
-  * bare kernel shows the same 8→32 ceiling as the Spark job, Spark's
-  * runtime is exonerated entirely.
+  * threads over the same synthetic rows; BENCH/profile_scaling_r05.md
+  * holds its numbers): if the bare kernel shows the same 8→32 ceiling
+  * as the Spark job, Spark's runtime is exonerated entirely.
   *
   * Writes the markdown artifact given as arg(0)
   * (default BENCH/profile_scaling.md).

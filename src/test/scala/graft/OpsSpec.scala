@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{CorpusStats, Dedup, Similarity, TextStats}
+import graft.ops.{CorpusStats, Dedup, Par, Similarity, TextStats}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -815,28 +815,80 @@ class OpsSpec extends AnyFunSuite {
   test("md5_grams native expression equals the builtin spec") {
     import spark.implicits._
     graft.functions.GraftFunctions.register(spark)
-    // every text >= L chars (the operator domain: substringRuns filters
-    // shorter docs before hashing); multibyte rows pin the
-    // byte-offset-per-character window math
+    // texts >= L chars (the operator domain: substringRuns filters
+    // shorter docs before hashing), multibyte rows pinning the
+    // byte-offset-per-character window math, and the rest of the domain:
+    // lengths 0, 1 and L-1 (the builtin's descending sequence gives
+    // degenerate windows there) and NULL
     val docs = Seq("exactly-forty-characters-long-string-42!",
       "the quick brown fox jumps over the lazy dog and keeps running onward",
       "naïve café — résumé text with multibyte çhars über ånd mœre " +
         "padded out to comfortably exceed forty characters",
       "数据处理管道提取文档内容分析系统网络页面文本引擎多字节" * 3,
-      ("repeat me " * 30).trim).zipWithIndex
+      ("repeat me " * 30).trim,
+      "", "x", "thirty-nine-characters-long-string-39!!", "é" * 39,
+      null).zipWithIndex
       .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
     val l = 40
-    val builtin = docs.select(col("doc_id"), expr(
-        s"transform(sequence(1, length(text) - $l + 1)," +
-          s" i -> unhex(md5(substring(text, i, $l))))").as("g"))
-      .collect()
-      .map(r => r.getLong(0) -> r.getSeq[Array[Byte]](1).map(_.toSeq)).toMap
-    val native = docs.select(col("doc_id"),
-        expr(s"md5_grams(text, $l)").as("g"))
-      .collect()
-      .map(r => r.getLong(0) -> r.getSeq[Array[Byte]](1).map(_.toSeq)).toMap
+    def grams(g: org.apache.spark.sql.Column) =
+      docs.select(col("doc_id"), g.as("g")).collect()
+        .map(r => r.getLong(0) ->
+          Option(r.getSeq[Array[Byte]](1)).map(_.map(_.toSeq))).toMap
+    val builtin = grams(expr(s"transform(sequence(1, length(text) - $l + 1)," +
+      s" i -> unhex(md5(substring(text, i, $l))))"))
+    val native = grams(expr(s"md5_grams(text, $l)"))
+    assert(builtin.size == 10 && builtin(9L).isEmpty)
+    assert(builtin(5L).exists(_.size == l + 1)) // "" → sequence(1, 1-L)
     builtin.foreach { case (id, g) =>
       assert(native(id) == g, s"doc $id md5_grams drift")
+    }
+  }
+
+  test("Par.spread: bytesPerTask must be a positive long") {
+    val key = "spark.graft.spread.bytesPerTask"
+    val df = spark.range(0, 100).toDF("id")
+    try {
+      Seq("abc", "0", "-5").foreach { v =>
+        spark.conf.set(key, v)
+        val e = intercept[IllegalArgumentException](Par.spread(df, "id"))
+        assert(e.getMessage.contains(key) && e.getMessage.contains(s"'$v'"),
+          e.getMessage)
+      }
+      // the single-partition setting a whole-input reference run uses
+      spark.conf.set(key, (1L << 50).toString)
+      assert(Par.spread(df, "id").count() == 100)
+    } finally spark.conf.unset(key)
+  }
+
+  test("Par.spread: building over a groupBy result runs no Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val aqeKey = "spark.sql.adaptive.enabled"
+    val aqeWas = spark.conf.getOption(aqeKey)
+    // every job start is counted; the sentinel job run after the build
+    // flushes the (ordered) listener bus, so earlier starts have arrived
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.job.description") == "sentinel")
+          flushed.countDown()
+        else jobs.incrementAndGet()
+    }
+    spark.conf.set(aqeKey, "true")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val grouped = spark.range(0, 1000, 1, 4)
+        .groupBy((col("id") % 10).as("k")).count()
+      val spread = Par.spread(grouped, "k")
+      spark.sparkContext.setJobDescription("sentinel")
+      spark.sparkContext.parallelize(Seq(1), 1).count()
+      spark.sparkContext.setJobDescription(null)
+      assert(flushed.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      assert(jobs.get == 0, s"${jobs.get} job(s) ran while building")
+      assert(spread.count() == 10)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      aqeWas.fold(spark.conf.unset(aqeKey))(spark.conf.set(aqeKey, _))
     }
   }
 

@@ -386,6 +386,14 @@ class PipelineSpec extends AnyFunSuite {
     assert(agg.getLong(0) == 100)
     val failDirect = extracted.filter(col("outcome").startsWith("error")).count()
     assert(agg.getLong(1) == failDirect)
+    // both producers share one core schema: without its extension
+    // columns, Jobs.metrics matches the writer's metrics table read back
+    val out = java.nio.file.Files.createTempDirectory("graft_metrics").toString
+    CheckpointedWriter.run(extracted, out, buckets = 4)
+    def cols(df: org.apache.spark.sql.DataFrame) =
+      df.schema.fields.map(f => f.name -> f.dataType).toSet
+    val written = spark.read.parquet(CheckpointedWriter.metricsDir(out))
+    assert(cols(m.drop("skips", "truncations")) == cols(written))
   }
 
   test("warc source: file round-trip, non-response skip, adversarial bytes") {
