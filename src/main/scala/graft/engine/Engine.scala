@@ -217,17 +217,6 @@ object Sniffer {
   }
 }
 
-/** Engine interface — analog of the reference's `OcrEngine` ABC
-  * (reference: src/ocrmypdf/pluginspec.py:404-544: version, creator_tag,
-  * generate_ocr). The "direct tree, no intermediate file" path
-  * (reference: src/ocrmypdf/_pipeline.py:744-772 `ocr_engine_direct`,
-  * "modern path … bypasses hOCR file generation") is the design here: one
-  * function bytes → (tree, text, spans), no intermediate artifacts. */
-trait ExtractionEngine {
-  def tag: String
-  def extract(row: PageRow): ExtractResult
-}
-
 /** Language resolution — the reference stamps /Lang on output from the
   * language map (reference: src/ocrmypdf/_metadata.py:178-216 +
   * languages.py:848-853). Here: a well-formed ISO-639-3-looking input
@@ -241,7 +230,25 @@ object LangResolve {
     if (validHint(hint)) hint else graft.ops.TextStats.langId(text)
 }
 
-object HtmlEngine extends ExtractionEngine {
+/** The one constructor of outcome-only rows: a typed skip / reject /
+  * error verdict with empty text and no spans (the reference's
+  * placeholder for a page it did not OCR, src/ocrmypdf/_pipeline.py:
+  * 1307-1327). Language comes from the row's hint (predicted from no
+  * text otherwise); `hintLang = false` keeps the "und" default. */
+private[engine] object OutcomeRow {
+  def apply(row: PageRow, outcome: String, engine: String, format: String,
+      charset: String, nNodes: Int = 0, nBlocks: Int = 0,
+      truncated: Boolean = false, hintLang: Boolean = true): ExtractResult =
+    ExtractResult(row.url, row.warc_ts, "", Vector.empty, outcome, engine,
+      format, charset, nNodes, nBlocks, truncated,
+      lang = if (hintLang) LangResolve.resolve(row.lang, "") else "und")
+}
+
+/** The HTML branch — the reference's `OcrEngine` analog (reference:
+  * src/ocrmypdf/pluginspec.py:404-544) on its "direct tree, no
+  * intermediate file" path (src/ocrmypdf/_pipeline.py:744-772
+  * `ocr_engine_direct`): bytes → (tree, text, spans) in one function. */
+object HtmlEngine {
   val tag: String = EngineTags.Html
 
   /** Size reject threshold — the `--skip-big` analog (reference:
@@ -250,15 +257,10 @@ object HtmlEngine extends ExtractionEngine {
     * burning kernel time. */
   val maxHtmlBytes: Int = 2 << 20
 
-  def extract(row: PageRow): ExtractResult =
-    extractDecoded(row, Sniffer.sniff(row.html), ExtractConfig())
-
   def extractDecoded(row: PageRow, s: Sniffer.Sniffed,
       cfg: ExtractConfig): ExtractResult = {
     if (s.bytes.length > maxHtmlBytes)
-      return ExtractResult(row.url, row.warc_ts, "", Vector.empty,
-        "rejected:too_large", tag, s.format, "binary", 0, 0,
-        truncated = false, lang = LangResolve.resolve(row.lang, ""))
+      return OutcomeRow(row, "rejected:too_large", tag, s.format, "binary")
     val (charset, decoded) = Sniffer.decodeHtml(s.bytes)
     val tokens = Tokenizer.tokenize(decoded)
     val dom = TreeBuilder.build(tokens)
@@ -293,10 +295,8 @@ object HtmlEngine extends ExtractionEngine {
     val pageFeeds = effBase.map(graft.extract.Links.feedsOf(dom, _))
       .getOrElse(Vector.empty)
     if (hasRefresh && isRedirect && cfg.mode != ProcessingMode.Force)
-      return ExtractResult(row.url, row.warc_ts, "", Vector.empty,
-        "skipped:redirect", tag, s.format, charset, dom.nodes.length,
-        blocks.length, dom.truncated,
-        lang = LangResolve.resolve(row.lang, ""),
+      return OutcomeRow(row, "skipped:redirect", tag, s.format, charset,
+        dom.nodes.length, blocks.length, dom.truncated).copy(
         redirect = redirectTarget, canonical = canonicalUrl,
         metas = pageMetas, feeds = pageFeeds, title = asm.title)
     val outcome =
@@ -323,7 +323,8 @@ object HtmlEngine extends ExtractionEngine {
   }
 }
 
-object PdfEngine extends ExtractionEngine {
+/** The PDF branch: content-stream text with glyph-to-Unicode mapping. */
+object PdfEngine {
   val tag: String = EngineTags.Pdf
 
   def extract(row: PageRow): ExtractResult =
@@ -333,10 +334,8 @@ object PdfEngine extends ExtractionEngine {
       cfg: ExtractConfig): ExtractResult = {
     val doc = PdfDoc.parse(s.bytes)
     if (doc.encrypted)
-      return ExtractResult(row.url, row.warc_ts, "", Vector.empty,
-        Outcome.SkippedEncrypted, tag, s.format, "binary",
-        doc.objects.size, 0, truncated = false,
-        lang = LangResolve.resolve(row.lang, ""))
+      return OutcomeRow(row, Outcome.SkippedEncrypted, tag, s.format,
+        "binary", doc.objects.size)
     val resolve: Cos => Cos = PdfDoc.resolveIn(doc.objects)
     // Doc-level validation rejects (reference: validate_pdfinfo_options,
     // src/ocrmypdf/_pipeline.py:231-280 — XFA forms :236-240 cannot be
@@ -346,10 +345,7 @@ object PdfEngine extends ExtractionEngine {
         case d: CosDict => d
       }
     def reject(outcome: String): ExtractResult =
-      ExtractResult(row.url, row.warc_ts, "", Vector.empty,
-        outcome, tag, s.format, "binary",
-        doc.objects.size, 0, truncated = false,
-        lang = LangResolve.resolve(row.lang, ""))
+      OutcomeRow(row, outcome, tag, s.format, "binary", doc.objects.size)
     val hasXfa = acroForm.exists(_.get("XFA").isDefined)
     if (hasXfa) return reject("rejected:xfa_form")
     // Doc-level policy matrix, same order as the reference's
@@ -565,15 +561,6 @@ object PdfEngine extends ExtractionEngine {
   }
 }
 
-/** Plumbing-test engine (reference: src/ocrmypdf/builtin_plugins/
-  * null_ocr.py:29-159 `NullEngine`). */
-object NullEngine extends ExtractionEngine {
-  val tag: String = EngineTags.Null
-  def extract(row: PageRow): ExtractResult =
-    ExtractResult(row.url, row.warc_ts, "", Vector.empty, Outcome.Ok, tag,
-      "unknown", "binary", 0, 0, truncated = false)
-}
-
 /** Top-level per-row kernel: triage → dispatch → contain failures.
   * One deterministic function, the whole per-row pipeline fused in one
   * stage (SURVEY.md §4 "stage pipelining": preview→rasterize→ocr run
@@ -594,9 +581,8 @@ object Extractor {
       // like the reference's pdfinfo scan preceding is_ocr_required
       s.error match {
         case Some(err) =>
-          ExtractResult(row.url, row.warc_ts, "", Vector.empty,
-            Outcome.error(err), EngineTags.Html, s.format, s.charset, 0, 0,
-            truncated = false, lang = LangResolve.resolve(row.lang, ""))
+          OutcomeRow(row, Outcome.error(err), EngineTags.Html, s.format,
+            s.charset)
         case None =>
           val branchTag =
             if (s.format.endsWith("pdf")) EngineTags.Pdf else EngineTags.Html
@@ -604,24 +590,18 @@ object Extractor {
           // _options.py:37-55 × _pipeline.py:352-372) — gated rows are
           // never dropped, they flow through with typed outcomes
           if (hasPrior(row) && cfg.mode == ProcessingMode.Default) {
-            ExtractResult(row.url, row.warc_ts, "", Vector.empty,
-              Outcome.RejectedPriorText, branchTag, s.format, s.charset,
-              0, 0, truncated = false,
-              lang = LangResolve.resolve(row.lang, ""))
+            OutcomeRow(row, Outcome.RejectedPriorText, branchTag, s.format,
+              s.charset)
           } else if (cfg.mode == ProcessingMode.Strip) {
             // strip: remove the machine text layer in place, do NOT
             // re-extract (reference `--mode strip`, _options.py:55) — the
             // prior channel is emptied and no engine runs on any row
             if (hasPrior(row))
-              ExtractResult(row.url, row.warc_ts, "", Vector.empty,
-                Outcome.StrippedPriorText, EngineTags.Prior, s.format,
-                s.charset, 0, 0, truncated = false,
-                lang = LangResolve.resolve(row.lang, ""))
+              OutcomeRow(row, Outcome.StrippedPriorText, EngineTags.Prior,
+                s.format, s.charset)
             else
-              ExtractResult(row.url, row.warc_ts, "", Vector.empty,
-                Outcome.SkippedNothingToStrip, EngineTags.Null, s.format,
-                s.charset, 0, 0, truncated = false,
-                lang = LangResolve.resolve(row.lang, ""))
+              OutcomeRow(row, Outcome.SkippedNothingToStrip, EngineTags.Null,
+                s.format, s.charset)
           } else if (hasPrior(row) && cfg.mode == ProcessingMode.Skip) {
             ExtractResult(row.url, row.warc_ts, row.text, Vector.empty,
               Outcome.SkippedPriorText, EngineTags.Prior, s.format,
@@ -641,10 +621,8 @@ object Extractor {
                 // endsWith like the pdf arm: "gzip+unknown" (gzip wrapping
                 // an empty payload) must take the same Null/SkippedEmpty
                 // route as a bare empty payload
-                ExtractResult(row.url, row.warc_ts, "", Vector.empty,
-                  Outcome.SkippedEmpty, EngineTags.Null, s.format, s.charset,
-                  0, 0, truncated = false,
-                  lang = LangResolve.resolve(row.lang, ""))
+                OutcomeRow(row, Outcome.SkippedEmpty, EngineTags.Null,
+                  s.format, s.charset)
               case _ => HtmlEngine.extractDecoded(row, s, effCfg)
             }
           }
@@ -657,9 +635,8 @@ object Extractor {
       // limping on a corrupt heap, and a task kill's InterruptedException
       // must actually stop the partition loop.
       case scala.util.control.NonFatal(e) =>
-        ExtractResult(row.url, row.warc_ts, "", Vector.empty,
-          Outcome.error(e.getClass.getSimpleName), EngineTags.Html,
-          "unknown", "binary", 0, 0, truncated = false)
+        OutcomeRow(row, Outcome.error(e.getClass.getSimpleName),
+          EngineTags.Html, "unknown", "binary", hintLang = false)
     }
   }
 }

@@ -1,8 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
@@ -83,6 +84,37 @@ case class CosineSim(left: Expression, right: Expression)
 }
 
 object GraftFunctions {
+  /** One native SQL function: its name, the expression class catalog
+    * introspection (`DESCRIBE FUNCTION`) reports, and the builder from
+    * the call's argument expressions. */
+  final case class NativeFunction(name: String, cls: Class[_],
+      build: Seq[Expression] => Expression) {
+    def info: ExpressionInfo = new ExpressionInfo(cls.getName, null, name)
+  }
+
+  /** THE table of native SQL functions: [[register]] and
+    * [[GraftExtensions]] both install exactly these rows, so the two
+    * registration paths cannot list different functions. */
+  val table: Seq[NativeFunction] = Seq(
+    NativeFunction("cosine_sim", classOf[CosineSim], // exact float-vector cosine
+      a => CosineSim(a(0), a(1))),
+    NativeFunction("simhash64", classOf[Simhash64], // 64-bit SimHash over tokens
+      a => Simhash64(a(0))),
+    NativeFunction("minhash_sigs", classOf[MinhashSigs], // 8 seeded-md5 minhashes
+      a => MinhashSigs(a(0))),
+    NativeFunction("kmv_minima", classOf[KmvMinima], // bottom-k distinct sketch
+      a => KmvMinima(a(0), litInt(a(1))).toAggregateExpression()),
+    NativeFunction("kll_quantiles", classOf[KllQuantiles], // mergeable quantiles
+      a => KllQuantiles(a(0), litInt(a(1)), a.drop(2).map(litDouble))
+        .toAggregateExpression()),
+    NativeFunction("rolling_hash", classOf[RollingHash], // O(n) Karp-Rabin windows
+      a => RollingHash(a(0), litInt(a(1)), litInt(a(2)).toLong)),
+    NativeFunction("rolling_hash2", classOf[RollingHash2], // fused dual-base windows
+      a => RollingHash2(a(0), litInt(a(1)), litInt(a(2)).toLong,
+        litInt(a(3)).toLong)),
+    NativeFunction("md5_grams", classOf[Md5Grams], // fused md5-per-window grams
+      a => Md5Grams(a(0), litInt(a(1)))))
+
   /** Session-scoped once-marker: graft operators call register() on
     * every invocation; only the FIRST call per session actually writes
     * the registry (kills the replacement-WARN spam) — and that first
@@ -94,7 +126,7 @@ object GraftFunctions {
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
 
-  /** Register SQL-callable graft functions on a session
+  /** Register the [[table]] on a session
     * (`SELECT cosine_sim(a, b)` / `expr("cosine_sim(a, b)")`).
     * Once per session; the first call overwrites any same-name temp
     * functions so graft operators always get graft semantics. */
@@ -106,28 +138,8 @@ object GraftFunctions {
     // to experimental.extraOptimizations below.
     if (registered.putIfAbsent(spark, java.lang.Boolean.TRUE) != null) return
     val reg = spark.sessionState.functionRegistry
-    def reg1(name: String,
-             builder: Seq[Expression] => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, builder, "built-in")
-    reg1("cosine_sim", exprs => CosineSim(exprs(0), exprs(1)))
-    reg1("simhash64", exprs => Simhash64(exprs(0)))
-    reg1("minhash_sigs", exprs => MinhashSigs(exprs(0)))
-    reg1("kmv_minima", exprs =>
-      KmvMinima(exprs(0), GraftFunctions.litInt(exprs(1)))
-        .toAggregateExpression())
-    reg1("kll_quantiles", exprs =>
-      KllQuantiles(exprs(0), GraftFunctions.litInt(exprs(1)),
-        exprs.drop(2).map(GraftFunctions.litDouble))
-        .toAggregateExpression())
-    reg1("rolling_hash", exprs =>
-      RollingHash(exprs(0), GraftFunctions.litInt(exprs(1)),
-        GraftFunctions.litInt(exprs(2)).toLong))
-    reg1("rolling_hash2", exprs =>
-      RollingHash2(exprs(0), GraftFunctions.litInt(exprs(1)),
-        GraftFunctions.litInt(exprs(2)).toLong,
-        GraftFunctions.litInt(exprs(3)).toLong))
-    reg1("md5_grams", exprs =>
-      Md5Grams(exprs(0), GraftFunctions.litInt(exprs(1))))
+    table.foreach(f =>
+      reg.registerFunction(FunctionIdentifier(f.name), f.info, f.build))
     // optimizer integration on a plain (extension-less) session: rewrite
     // builtin HOF cosine trees into the fused native kernel; idempotent
     val extra = spark.experimental.extraOptimizations

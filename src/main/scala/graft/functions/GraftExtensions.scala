@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Library integration point: inject the native graft expressions into any
   * session at build time via
@@ -13,58 +12,13 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * expressions (no per-session `GraftFunctions.register` call needed, and
   * unlike temp functions the injection survives into every session cloned
   * from the build). `GraftFunctions.register` remains for notebook-style
-  * ad-hoc use on an already-built session.
+  * ad-hoc use on an already-built session; both paths install the same
+  * `GraftFunctions.table`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(cls: Class[_], name: String) =
-    new ExpressionInfo(cls.getName, null, name) // catalog introspection
-    // (DESCRIBE FUNCTION) reports each expression's own class
-
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      info(classOf[CosineSim], "cosine_sim"), // exact float-vector cosine
-      (exprs: Seq[Expression]) => CosineSim(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      info(classOf[Simhash64], "simhash64"), // 64-bit SimHash over tokens
-      (exprs: Seq[Expression]) => Simhash64(exprs(0))))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_sigs"),
-      info(classOf[MinhashSigs], "minhash_sigs"), // 8 seeded-md5 minhashes
-      (exprs: Seq[Expression]) => MinhashSigs(exprs(0))))
-    ext.injectFunction((
-      FunctionIdentifier("kmv_minima"),
-      info(classOf[KmvMinima], "kmv_minima"), // bottom-k distinct sketch
-      (exprs: Seq[Expression]) =>
-        KmvMinima(exprs(0), GraftFunctions.litInt(exprs(1)))
-          .toAggregateExpression()))
-    ext.injectFunction((
-      FunctionIdentifier("kll_quantiles"),
-      info(classOf[KllQuantiles], "kll_quantiles"), // mergeable quantile sketch
-      (exprs: Seq[Expression]) =>
-        KllQuantiles(exprs(0), GraftFunctions.litInt(exprs(1)),
-          exprs.drop(2).map(GraftFunctions.litDouble))
-          .toAggregateExpression()))
-    ext.injectFunction((
-      FunctionIdentifier("rolling_hash"),
-      info(classOf[RollingHash], "rolling_hash"), // O(n) Karp-Rabin windows
-      (exprs: Seq[Expression]) =>
-        RollingHash(exprs(0), GraftFunctions.litInt(exprs(1)),
-          GraftFunctions.litInt(exprs(2)).toLong)))
-    ext.injectFunction((
-      FunctionIdentifier("rolling_hash2"),
-      info(classOf[RollingHash2], "rolling_hash2"), // fused dual-base windows
-      (exprs: Seq[Expression]) =>
-        RollingHash2(exprs(0), GraftFunctions.litInt(exprs(1)),
-          GraftFunctions.litInt(exprs(2)).toLong,
-          GraftFunctions.litInt(exprs(3)).toLong)))
-    ext.injectFunction((
-      FunctionIdentifier("md5_grams"),
-      info(classOf[Md5Grams], "md5_grams"), // fused md5-per-window grams
-      (exprs: Seq[Expression]) =>
-        Md5Grams(exprs(0), GraftFunctions.litInt(exprs(1)))))
+    GraftFunctions.table.foreach(f =>
+      ext.injectFunction((FunctionIdentifier(f.name), f.info, f.build)))
     // builtin-HOF-cosine → fused native kernel (semantics-preserving;
     // see NativeCosineRule scaladoc)
     ext.injectOptimizerRule(_ => graft.plans.NativeCosineRule)

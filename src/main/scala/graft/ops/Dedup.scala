@@ -687,21 +687,28 @@ object Dedup {
     * and the join-back, so it is persisted once (the signature-table
     * barrier, same as minhashLsh). */
   def substringRuns(docs: DataFrame, idCol: String, textCol: String,
-      minLen: Int = 40): DataFrame = {
+      minLen: Int = 40): DataFrame =
+    // md5_grams = the fused native form of
+    //   transform(sequence(1, length(text)-L+1),
+    //             i -> unhex(md5(substring(text, i, L))))
+    // — value-identical 16-byte keys (equality with the builtin spec
+    // is test-pinned), without the O(pos) substring walk per window,
+    // the hex/unhex round-trip, or a MessageDigest per call
+    substringRunsFromGrams(gramTable(docs, idCol, textCol, minLen,
+      s"md5_grams(text, $minLen)"), Seq("h"), minLen)
+
+  /** The persisted (doc_id, pos, h) gram table the substring operators
+    * share: every `minLen`-gram of every long-enough doc, 1-based pos,
+    * `h` the key `hashSql` (one array per `text`) yields for it. */
+  private def gramTable(docs: DataFrame, idCol: String, textCol: String,
+      minLen: Int, hashSql: String): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
-    val grams = Par.spread(docs
+    Par.spread(docs
       .select(col(idCol).as("doc_id"), col(textCol).as("text"))
       .filter(length(col("text")) >= minLen), "doc_id")
-      // md5_grams = the fused native form of
-      //   transform(sequence(1, length(text)-L+1),
-      //             i -> unhex(md5(substring(text, i, L))))
-      // — value-identical 16-byte keys (equality with the builtin spec
-      // is test-pinned), without the O(pos) substring walk per window,
-      // the hex/unhex round-trip, or a MessageDigest per call
-      .select(col("doc_id"), posexplode(expr(s"md5_grams(text, $minLen)")))
+      .select(col("doc_id"), posexplode(expr(hashSql)))
       .select(col("doc_id"), (col("pos") + 1).as("pos"), col("col").as("h"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    substringRunsFromGrams(grams, Seq("h"), minLen)
   }
 
   /** As `substringRuns`, but gram hashing is the native O(n) Karp-Rabin
@@ -716,17 +723,9 @@ object Dedup {
     * output as the md5 form up to negligible collision mass, so the
     * md5-based SQL oracle doubles as a cross-strategy check. */
   def substringRunsRolling(docs: DataFrame, idCol: String, textCol: String,
-      minLen: Int = 40): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
-    val grams = Par.spread(docs
-      .select(col(idCol).as("doc_id"), col(textCol).as("text"))
-      .filter(length(col("text")) >= minLen), "doc_id")
-      .select(col("doc_id"),
-        posexplode(expr(s"rolling_hash2(text, $minLen, 131, 137)")))
-      .select(col("doc_id"), (col("pos") + 1).as("pos"), col("col").as("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    substringRunsFromGrams(grams, Seq("h"), minLen)
-  }
+      minLen: Int = 40): DataFrame =
+    substringRunsFromGrams(gramTable(docs, idCol, textCol, minLen,
+      s"rolling_hash2(text, $minLen, 131, 137)"), Seq("h"), minLen)
 
   /** Keep-first variant of exact substring dedup [Lee et al. 2021's
     * keep-one-occurrence option]: per duplicated gram family the OWNER
@@ -747,14 +746,8 @@ object Dedup {
     * step, and text still never moves. */
   def substringRunsKeepFirst(docs: DataFrame, idCol: String, textCol: String,
       minLen: Int = 40): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
-    val grams = Par.spread(docs
-      .select(col(idCol).as("doc_id"), col(textCol).as("text"))
-      .filter(length(col("text")) >= minLen), "doc_id")
-      .select(col("doc_id"),
-        posexplode(expr(s"rolling_hash2(text, $minLen, 131, 137)")))
-      .select(col("doc_id"), (col("pos") + 1).as("pos"), col("col").as("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val grams = gramTable(docs, idCol, textCol, minLen,
+      s"rolling_hash2(text, $minLen, 131, 137)")
     val fam = grams.groupBy("h")
       .agg(count(lit(1)).as("n"),
         min(struct(col("doc_id"), col("pos"))).as("own"))

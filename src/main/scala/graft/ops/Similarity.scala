@@ -26,13 +26,9 @@ import org.apache.spark.sql.functions._
 object Similarity {
 
   /** Sequential double-precision dot product of two float-array columns. */
-  def dot(a: String, b: String): Column = dotC(col(a), col(b))
-
   def dotC(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, v) => acc + v)
-
-  def norm(a: String): Column = normC(col(a))
 
   def normC(a: Column): Column =
     sqrt(aggregate(a, lit(0.0),
@@ -67,11 +63,29 @@ object Similarity {
     * vectors (excluding itself when ids collide). Deterministic ordering:
     * (cos DESC, neighbor id ASC). */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int): DataFrame = {
+      idCol: String, vecCol: String, k: Int): DataFrame =
     // register() also installs NativeCosineRule: this operator DECLARES
-    // the builtin HOF cosine below and the optimizer rewrites it into the
+    // the builtin HOF cosine and the optimizer rewrites it into the
     // fused cosine_hof kernel — the declarative-formulation-fast-plan
     // contract the library's optimizer rule exists for
+    bruteForce(corpus, queries, idCol, vecCol, k,
+      dotC(col("qv"), col("cv")) / (normC(col("qv")) * normC(col("cv"))))
+
+  /** As bruteForceTopK, but scoring through the native codegen'd
+    * `cosine_sim` expression (graft.functions.CosineSim) — one fused loop
+    * per pair instead of three HOF folds; results are bit-identical on
+    * the shared domain (equal-length, non-null, non-zero vectors — the
+    * zero-vector exclusion below makes that the operators' whole input;
+    * only RAGGED dimensions would still differ: cosine_sim truncates to
+    * the shorter array where the HOF form nulls out). */
+  def bruteForceTopKNative(corpus: DataFrame, queries: DataFrame,
+      idCol: String, vecCol: String, k: Int): DataFrame =
+    bruteForce(corpus, queries, idCol, vecCol, k, expr("cosine_sim(qv, cv)"))
+
+  /** The exact top-k body both brute-force operators share; `cos` scores
+    * a (query `qv`, corpus `cv`) pair. */
+  private def bruteForce(corpus: DataFrame, queries: DataFrame,
+      idCol: String, vecCol: String, k: Int, cos: Column): DataFrame = {
     graft.functions.GraftFunctions.register(corpus.sparkSession)
     // spread the corpus side: the O(N·Q) scoring loop is the operator's
     // CPU floor and must not serialize on one scan split (Par.spread is
@@ -86,28 +100,7 @@ object Similarity {
     // broadcast queries; WindowGroupLimit then takes partial top-k per
     // partition before the (tiny) shuffle on query_id
     val scored = c.join(broadcast(q), col("query_id") =!= col("nbr_id"))
-      .withColumn("cos",
-        dotC(col("qv"), col("cv")) / (normC(col("qv")) * normC(col("cv"))))
-    topK(scored, k)
-  }
-
-  /** As bruteForceTopK, but scoring through the native codegen'd
-    * `cosine_sim` expression (graft.functions.CosineSim) — one fused loop
-    * per pair instead of three HOF folds; results are bit-identical on
-    * the shared domain (equal-length, non-null, non-zero vectors — the
-    * zero-vector exclusion above makes that the operators' whole input;
-    * only RAGGED dimensions would still differ: cosine_sim truncates to
-    * the shorter array where the HOF form nulls out). */
-  def bruteForceTopKNative(corpus: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
-    val c = Par.spread(
-      corpus.select(col(idCol).as("nbr_id"), col(vecCol).as("cv"))
-        .filter(nonZeroVec(col("cv"))), "nbr_id")
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .filter(nonZeroVec(col("qv")))
-    val scored = c.join(broadcast(q), col("query_id") =!= col("nbr_id"))
-      .withColumn("cos", expr("cosine_sim(qv, cv)"))
+      .withColumn("cos", cos)
     topK(scored, k)
   }
 

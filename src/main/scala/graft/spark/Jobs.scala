@@ -78,8 +78,8 @@ object Jobs {
     * merge a uniform, skew-free layout (north rule), and extracted text
     * is 10-100× smaller than raw html (a 100 KB page body can extract to
     * 1 KB of main text), so the shuffle goes after the map. For inputs
-    * whose *splits* are skewed (e.g. a pathological file layout), shuffle
-    * first via `rebalanceInput`. */
+    * whose *splits* are skewed (e.g. a pathological file layout),
+    * repartition the pages on url before extracting. */
   def extract(pages: Dataset[PageRow], partitions: Int,
       cfg: ExtractConfig = ExtractConfig()): Dataset[ExtractResult] = {
     // repartition directly on the unique url: HashPartitioning murmurs
@@ -90,11 +90,6 @@ object Jobs {
     // shuffle exists for. Unique urls → murmur3 spread is uniform.
     extractNarrow(pages, cfg).repartition(partitions, col("url"))
   }
-
-  /** Pre-kernel rebalance for skewed input layouts: shuffles the raw rows
-    * on the (unique, hence uniform) url key before extraction. */
-  def rebalanceInput(pages: Dataset[PageRow], partitions: Int): Dataset[PageRow] =
-    pages.repartition(partitions, col("url"))
 
   /** Extraction without the explicit repartition — used when the upstream
     * layout is already balanced (e.g. bucketed Iceberg scan). Narrow, no

@@ -23,6 +23,30 @@ import org.apache.spark.sql.functions._
   * explosion (`files` pins the output fan-out). */
 private[spark] object RecordSink {
 
+  /** Records declare WARC/1.1 — the version that ALLOWS the
+    * fractional-second WARC-Date the micros-exact ts round-trip needs
+    * (WARC/1.0 dates are whole seconds only). */
+  val Version = "WARC/1.1"
+
+  private val UTF8 = java.nio.charset.StandardCharsets.UTF_8
+
+  /** Deterministic ISO 28500 mandatory record id: a NAME-derived (v3)
+    * uuid, so reruns emit identical bytes where a random v4 would not. */
+  def recordId(name: String): String =
+    "<urn:uuid:" + java.util.UUID.nameUUIDFromBytes(name.getBytes(UTF8)) + ">"
+
+  /** The per-file warcinfo header record of a `prefix` sink: fixed
+    * fields and the epoch date only (a wall clock here would break byte
+    * parity). */
+  def warcinfo(prefix: String)(out: java.io.OutputStream): Unit =
+    WarcSource.writeRecord(Version, Seq(
+      "WARC-Type" -> "warcinfo",
+      "WARC-Record-ID" -> recordId(s"$prefix:warcinfo"),
+      "WARC-Date" -> java.time.Instant.EPOCH.toString,
+      "Content-Type" -> "application/warc-fields"),
+      "software: graft\r\nformat: WARC File Format 1.1\r\n".getBytes(UTF8),
+      out)
+
   /** RFC 1952 member header: magic, CM=8 (deflate), FLG=0, MTIME=0
     * (determinism — never the wall clock), XFL=0, OS=0 — byte-for-byte
     * what JDK GZIPOutputStream writes. */

@@ -77,8 +77,7 @@ final class ParquetTableIO(root: String) extends TableIO {
       if (!seen(p)) { seen(p) = true; salts(p) = k; found += 1 }
       k += 1
     }
-    df.withColumn("bucket",
-        pmod(xxhash64(col("url")), lit(buckets)).cast("int"))
+    df.withColumn("bucket", Jobs.bucketCol(buckets))
       .withColumn("__route", element_at(typedLit(salts.toSeq), col("bucket") + 1))
       .repartition(buckets, col("__route"))
       .drop("__route")

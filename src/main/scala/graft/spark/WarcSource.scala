@@ -1,7 +1,7 @@
 package graft.spark
 
 import graft.model.PageRow
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 
 /** WARC ingestion source — the container format Common Crawl actually
   * ships (WARC/1.0, ISO 28500): a file is a sequence of records, each a
@@ -249,15 +249,24 @@ object WarcSource {
     * (magic-sniffed, so mixed directories work). */
   def readWarcFiles(spark: SparkSession, dir: String): Dataset[PageRow] = {
     import spark.implicits._
+    readFiles(spark, dir, "*.warc*", "response")(identity)
+  }
+
+  /** THE WARC-family file reader, shared by [[readWarcFiles]] and the
+    * WET/WAT read-backs: one task per `glob`-matched file, gunzipped
+    * when its magic bytes say so, `recordType` records mapped by `f`. */
+  private[spark] def readFiles[T: Encoder](spark: SparkSession, dir: String,
+      glob: String, recordType: String)(f: PageRow => T): Dataset[T] = {
+    import spark.implicits._
     spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.warc*")
+      .option("pathGlobFilter", glob)
       .load(dir)
       .select("content")
       .as[Array[Byte]]
       .flatMap { b =>
         val raw = if (b.length >= 2 && (b(0) & 0xff) == 0x1f &&
           (b(1) & 0xff) == 0x8b) gunzipAll(b) else b
-        parseRecords(raw)
+        parseRecords(raw, recordType).map(f)
       }
   }
 }

@@ -26,36 +26,23 @@ import org.apache.spark.sql.functions._
 object WatSink {
 
   private val UTF8 = java.nio.charset.StandardCharsets.UTF_8
-  private val Version = "WARC/1.1"
-
-  private def recordId(name: String): String =
-    "<urn:uuid:" + java.util.UUID.nameUUIDFromBytes(name.getBytes(UTF8)) + ">"
 
   /** One page as a WAT metadata record (JSON payload framed by
     * Content-Length like every record — the payload stays opaque). */
   def metadataRecord(url: String, ts: java.sql.Timestamp, payload: String,
       out: java.io.OutputStream): Unit = {
     val date = WarcSource.instantOf(ts).toString
-    WarcSource.writeRecord(Version, Seq(
+    WarcSource.writeRecord(RecordSink.Version, Seq(
       "WARC-Type" -> "metadata",
-      "WARC-Record-ID" -> recordId(s"graft-wat:$url\n$date"),
+      "WARC-Record-ID" -> RecordSink.recordId(s"graft-wat:$url\n$date"),
       // the v3 id a graft WARC response record for the same
       // (url, date) carries — deterministic cross-file linkage
-      "WARC-Refers-To" -> recordId(s"graft-warc:$url\n$date"),
+      "WARC-Refers-To" -> RecordSink.recordId(s"graft-warc:$url\n$date"),
       "WARC-Target-URI" -> url,
       "WARC-Date" -> date,
       "Content-Type" -> "application/json"),
       (if (payload == null) "" else payload).getBytes(UTF8), out)
   }
-
-  private def warcinfo(out: java.io.OutputStream): Unit =
-    WarcSource.writeRecord(Version, Seq(
-      "WARC-Type" -> "warcinfo",
-      "WARC-Record-ID" -> recordId("graft-wat:warcinfo"),
-      "WARC-Date" -> java.time.Instant.EPOCH.toString,
-      "Content-Type" -> "application/warc-fields"),
-      s"software: graft\r\nformat: WARC File Format 1.1\r\n".getBytes(UTF8),
-      out)
 
   /** The JSON envelope column over an extraction-output row (CC WAT's
     * Envelope → Payload-Metadata → HTML-Metadata shape, carrying this
@@ -102,23 +89,14 @@ object WatSink {
       ex.select(col("url"), col("warc_ts"), envelope),
       outDir, "url", "warc_ts", "payload",
       if (gzip) "warc.wat.gz" else "warc.wat", files, gzip,
-      warcinfo, metadataRecord)
+      RecordSink.warcinfo("graft-wat"), metadataRecord)
 
   /** Read WAT files back as (url, warc_ts, payload) — the verification
     * twin of [[writeWat]]: one task per file, metadata records only. */
   def readWat(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.wat*")
-      .load(dir)
-      .select("content")
-      .as[Array[Byte]]
-      .flatMap { b =>
-        val raw = if (b.length >= 2 && (b(0) & 0xff) == 0x1f &&
-          (b(1) & 0xff) == 0x8b) WarcSource.gunzipAll(b) else b
-        WarcSource.parseRecords(raw, "metadata").map(p =>
-          (p.url, p.warc_ts, new String(p.html, UTF8)))
-      }
+    WarcSource.readFiles(spark, dir, "*.wat*", "metadata")(p =>
+      (p.url, p.warc_ts, new String(p.html, UTF8)))
       .toDF("url", "warc_ts", "payload")
   }
 }

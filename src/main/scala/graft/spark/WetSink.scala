@@ -20,11 +20,8 @@ import org.apache.spark.sql.functions._
   * sorted by (url, ts, text) — the FULL row totalizes the order, so
   * even a table carrying one url twice (recrawl snapshots) serializes
   * to the same bytes on every run. Record ids are deterministic v3
-  * UUIDs of (url, date); the warcinfo record carries only fixed
-  * fields and the epoch date (a wall clock here would break byte
-  * parity). Records declare WARC/1.1 — the version that ALLOWS the
-  * fractional-second WARC-Date the micros-exact ts round-trip needs
-  * (WARC/1.0 dates are whole seconds only).
+  * UUIDs of (url, date); the WARC version, record ids and the warcinfo
+  * record are [[RecordSink]]'s.
   *
   * 100 TB shape: one hash exchange of (url, ts, text) rows, then each
   * task streams its records straight to its own file through the
@@ -34,14 +31,7 @@ import org.apache.spark.sql.functions._
   */
 object WetSink {
 
-  private val CRLF = "\r\n"
   private val UTF8 = java.nio.charset.StandardCharsets.UTF_8
-  private val Version = "WARC/1.1"
-
-  /** Deterministic ISO 28500 mandatory record id: a NAME-derived (v3)
-    * uuid, so reruns emit identical bytes where a random v4 would not. */
-  private def recordId(name: String): String =
-    "<urn:uuid:" + java.util.UUID.nameUUIDFromBytes(name.getBytes(UTF8)) + ">"
 
   /** One page as a WET conversion record. Content-Length framing keeps
     * the text payload OPAQUE — embedded "WARC/1.0", CRLFs, anything.
@@ -50,23 +40,14 @@ object WetSink {
   def conversionRecord(url: String, ts: java.sql.Timestamp, text: String,
       out: java.io.OutputStream): Unit = {
     val date = WarcSource.instantOf(ts).toString
-    WarcSource.writeRecord(Version, Seq(
+    WarcSource.writeRecord(RecordSink.Version, Seq(
       "WARC-Type" -> "conversion",
-      "WARC-Record-ID" -> recordId(s"graft-wet:$url\n$date"),
+      "WARC-Record-ID" -> RecordSink.recordId(s"graft-wet:$url\n$date"),
       "WARC-Target-URI" -> url,
       "WARC-Date" -> date,
       "Content-Type" -> "text/plain"),
       (if (text == null) "" else text).getBytes(UTF8), out)
   }
-
-  private def warcinfo(out: java.io.OutputStream): Unit =
-    WarcSource.writeRecord(Version, Seq(
-      "WARC-Type" -> "warcinfo",
-      "WARC-Record-ID" -> recordId("graft-wet:warcinfo"),
-      "WARC-Date" -> java.time.Instant.EPOCH.toString,
-      "Content-Type" -> "application/warc-fields"),
-      s"software: graft${CRLF}format: WARC File Format 1.1$CRLF".getBytes(UTF8),
-      out)
 
   /** Write `df`'s (urlCol, tsCol, textCol) as `files` WET files under
     * `outDir` (part-NNNNN.warc.wet). Rerun-identical bytes (class doc);
@@ -77,24 +58,15 @@ object WetSink {
       files: Int = 32, gzip: Boolean = false): Unit =
     RecordSink.write(df, outDir, urlCol, tsCol, textCol,
       if (gzip) "warc.wet.gz" else "warc.wet", files, gzip,
-      warcinfo, conversionRecord)
+      RecordSink.warcinfo("graft-wet"), conversionRecord)
 
   /** Read WET files back as (url, warc_ts, text) — the verification
     * twin of [[writeWet]] (and a real consumer for third-party WET):
     * one task per file, conversion records only, text decoded UTF-8. */
   def readWet(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.wet*")
-      .load(dir)
-      .select("content")
-      .as[Array[Byte]]
-      .flatMap { b =>
-        val raw = if (b.length >= 2 && (b(0) & 0xff) == 0x1f &&
-          (b(1) & 0xff) == 0x8b) WarcSource.gunzipAll(b) else b
-        WarcSource.parseRecords(raw, "conversion").map(p =>
-          (p.url, p.warc_ts, new String(p.html, UTF8)))
-      }
+    WarcSource.readFiles(spark, dir, "*.wet*", "conversion")(p =>
+      (p.url, p.warc_ts, new String(p.html, UTF8)))
       .toDF("url", "warc_ts", "text")
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.engine.Extractor
+import graft.spark.Jobs
 import graft.model.{ExtractResult, PageRow}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -27,11 +27,8 @@ object StreamJobs {
     StructField("lang", StringType, nullable = true)))
 
   /** Streaming transform: same kernel, streaming Dataset in/out. */
-  def extractStream(pages: Dataset[PageRow]): Dataset[ExtractResult] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages.mapPartitions(it => it.map(Extractor.extract))
-  }
+  def extractStream(pages: Dataset[PageRow]): Dataset[ExtractResult] =
+    Jobs.extractNarrow(pages)
 
   /** File-watch pipeline: parquet files arriving in `inDir` are extracted
     * and appended to `outDir`, exactly-once via the sink checkpoint. */

@@ -792,6 +792,46 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
+  test("function table: both registration paths install every row alike") {
+    import org.apache.spark.sql.SparkSession
+    import graft.functions.GraftFunctions
+    // one NULL-first-argument call per table row; keyed by name so a row
+    // added to the table without a case here fails the key check below
+    val nullCalls = Map(
+      "cosine_sim" -> "cosine_sim(CAST(NULL AS ARRAY<FLOAT>), array(1.0f))",
+      "simhash64" -> "simhash64(CAST(NULL AS STRING))",
+      "minhash_sigs" -> "minhash_sigs(CAST(NULL AS STRING))",
+      "kmv_minima" -> "kmv_minima(CAST(NULL AS STRING), 4)",
+      "kll_quantiles" -> "kll_quantiles(CAST(NULL AS DOUBLE), 8, 0.5)",
+      "rolling_hash" -> "rolling_hash(CAST(NULL AS STRING), 4, 131)",
+      "rolling_hash2" -> "rolling_hash2(CAST(NULL AS STRING), 4, 131, 137)",
+      "md5_grams" -> "md5_grams(CAST(NULL AS STRING), 4)")
+    assert(GraftFunctions.table.map(_.name).sorted == nullCalls.keys.toSeq.sorted)
+    // per row: resolution, the DESCRIBE FUNCTION class, the NULL result
+    def probe(s: SparkSession): Map[String, Seq[Any]] =
+      GraftFunctions.table.map { f =>
+        assert(s.catalog.functionExists(f.name), s"${f.name} unresolved")
+        val cls = s.sql(s"DESCRIBE FUNCTION ${f.name}").collect()
+          .map(_.getString(0)).filter(_.startsWith("Class:")).toSeq
+        assert(cls == Seq(s"Class: ${f.cls.getName}"), s"${f.name}: $cls")
+        f.name -> s.sql(s"SELECT ${nullCalls(f.name)}").collect()(0).toSeq
+      }.toMap
+    GraftFunctions.register(spark)
+    val registered = probe(spark)
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val injected = probe(SparkSession.builder()
+        .withExtensions(new graft.functions.GraftExtensions())
+        .getOrCreate())
+      assert(injected == registered)
+    } finally {
+      // restore the shared test session (do NOT stop — shared context)
+      SparkSession.setDefaultSession(spark)
+      SparkSession.setActiveSession(spark)
+    }
+  }
+
   test("minhash_sigs native expression equals the builtin spec") {
     import spark.implicits._
     graft.functions.GraftFunctions.register(spark)

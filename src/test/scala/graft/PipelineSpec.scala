@@ -614,6 +614,67 @@ class PipelineSpec extends AnyFunSuite {
     assert(want.values.exists(_._3 != null), "fixture has no redirects")
   }
 
+  test("warc-family sinks: one fixed row keeps its pinned bytes") {
+    import graft.model.{ExtractResult, Link, MetaTag}
+    import graft.spark.{WatSink, WetSink}
+    import spark.implicits._
+    // every WET/WAT header, payload and framing byte of one hand-built
+    // row, plain and gzip-membered; the other sink tests only compare two
+    // runs of the same code, so they cannot see the format itself drift.
+    // The .gz pins also fix the platform zlib's deflate output.
+    val ts = java.sql.Timestamp.from(
+      java.time.Instant.parse("2026-02-03T04:05:06.123456Z"))
+    val ex = Seq(ExtractResult("https://pin.test/p?q=1", ts,
+      "pinned body \u2014 \u00fcn\u00efcod\u00e9\r\nWARC/1.0 inside", Nil,
+      "ok", "graft-html/0.2", "html", "utf-8", 12, 3, truncated = false,
+      lang = "eng",
+      links = Seq(Link(0, "/next", "https://pin.test/next", chrome = true,
+        "next \"page\"")),
+      canonical = "https://pin.test/p", ldjson = Seq("{\"@type\":\"Thing\"}"),
+      metas = Seq(MetaTag("og:title", "Pin")),
+      feeds = Seq("https://pin.test/feed"), title = "Pin")).toDS().toDF()
+    val dir = java.nio.file.Files.createTempDirectory("graft_pin").toString
+    def sha256(sub: String, file: String): String =
+      java.security.MessageDigest.getInstance("SHA-256")
+        .digest(java.nio.file.Files.readAllBytes(
+          java.nio.file.Paths.get(dir, sub, file)))
+        .map(b => f"${b & 0xff}%02x").mkString
+    val got = Seq(false, true).flatMap { gz =>
+      val sfx = if (gz) ".gz" else ""
+      WetSink.writeWet(ex, s"$dir/wet$gz", files = 1, gzip = gz)
+      WatSink.writeWat(ex, s"$dir/wat$gz", files = 1, gzip = gz)
+      Seq(s"wet$sfx" -> sha256(s"wet$gz", s"part-00000.warc.wet$sfx"),
+        s"wat$sfx" -> sha256(s"wat$gz", s"part-00000.warc.wat$sfx"))
+    }.toMap
+    assert(got == Map(
+      "wet" -> "f4487f44e222b015f312231a1746ac0247e200157ca7ce554162b96ca0cd340c",
+      "wet.gz" -> "4b7a19d3e4a5ed84217ec6cca3fe13773b5a9f8b168707b6345e16a405bbe50b",
+      "wat" -> "f9e5cd2862f4c22c9c3fe6f079354e9e85d746b21da376370e59a371d28b92f3",
+      "wat.gz" -> "ff7d2cf879db439d7efbf7d7be777ba42484037abd81f66cdc576c36621a3c84"),
+      s"WARC-family bytes drifted: $got")
+  }
+
+  test("bucket layout: writer and table IO place every url in one bucket") {
+    // the checkpointed writer and the table IO must agree on bucket
+    // membership (Jobs.bucketCol) — a url in bucket=K of one output
+    // and bucket=J of the other would split the table's layout
+    val extracted = Jobs.extract(Jobs.syntheticPages(spark, 60), 4)
+    val out = java.nio.file.Files.createTempDirectory("graft_buckets").toString
+    CheckpointedWriter.run(extracted, s"$out/ckpt", buckets = 4)
+    new graft.spark.ParquetTableIO(out).writeExtracted(
+      extracted.toDF().withColumn("spans", to_json(col("spans"))),
+      "table", buckets = 4)
+    def layout(path: String): Map[String, String] =
+      spark.read.parquet(path)
+        .select(col("url"), input_file_name().as("f")).collect()
+        .map(r => r.getString(0) ->
+          "bucket=\\d+".r.findFirstIn(r.getString(1)).get).toMap
+    val ckpt = layout(CheckpointedWriter.dataDir(s"$out/ckpt"))
+    val table = layout(s"$out/table")
+    assert(ckpt.size == 60 && ckpt.values.toSet.size == 4)
+    assert(table == ckpt, "bucket membership differs between the writers")
+  }
+
   test("subset filter: open-ended `end` selects the same rows as resolved") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
