@@ -59,18 +59,50 @@ object CorpusStats {
              else cast(array() as array<string>) end"""))
       .select(
         col("doc_id"),
-        expr("cast(size(ws) as bigint)").as("n_words"),
+        nWords,
         expr("cast(size(array_distinct(ws)) as bigint)").as("n_distinct_words"),
         expr("cast(size(bg) as bigint)").as("n_bigrams"),
         expr("cast(size(array_distinct(bg)) as bigint)").as("n_distinct_bigrams"),
-        // integer milli-fraction: exact in any engine, no IEEE hazard
-        expr("(1000L * cast(size(ws) - size(array_distinct(ws)) as bigint)) div greatest(cast(size(ws) as bigint), 1L)")
-          .as("dup_word_milli"))
+        dupWordMilli)
 
   /** English stopword markers for the ratio signal — THE source of truth
     * is TextStats.stopwords("eng"); referenced (sorted for a stable SQL
     * literal) so the scalar kernel and this operator can never diverge. */
   val stopwordList: Seq[String] = TextStats.stopwords("eng").toSeq.sorted
+
+  // The per-document signal columns, each spelled ONCE: the module
+  // operators and [[signalsFused]] select these same expressions over a
+  // (doc_id, ws = words, t = text) projection, so the fused vector
+  // cannot drift from the modules. Every fraction is an integer
+  // milli-fraction: exact in any engine, no IEEE hazard.
+  private val nWords = expr("cast(size(ws) as bigint)").as("n_words")
+  private val dupWordMilli = expr("(1000L * cast(size(ws) - size(array_distinct(ws)) as bigint)) div greatest(cast(size(ws) as bigint), 1L)")
+    .as("dup_word_milli")
+  private val stopwordMilli = {
+    val sw = stopwordList.map(w => s"'$w'").mkString(", ")
+    expr(s"(1000L * cast(size(filter(ws, w -> lower(w) in ($sw))) as bigint)) div greatest(cast(size(ws) as bigint), 1L)")
+      .as("stopword_milli")
+  }
+  private val nonalnumMilli = expr("(1000L * cast(length(regexp_replace(t, '[a-zA-Z0-9 ]', '')) as bigint)) div greatest(cast(length(t) as bigint), 1L)")
+    .as("nonalnum_milli")
+  private val nSentences =
+    expr("cast(regexp_count(t, '[.!?]+') as bigint)").as("n_sentences")
+  private val nSyllables = expr("aggregate(ws, 0L, (acc, w) -> acc + " +
+    "greatest(1L, cast(regexp_count(lower(w), '[aeiouy]+') as bigint)))")
+    .as("n_syllables")
+  // the Flesch chain over the three counts above
+  private val wpsMilli =
+    expr("(1000L * n_words) div greatest(n_sentences, 1L)").as("wps_milli")
+  private val spwMilli =
+    expr("(1000L * n_syllables) div greatest(n_words, 1L)").as("spw_milli")
+  private val fleschMilli = expr("206835L - (1015L * wps_milli) div 1000L" +
+    " - (84600L * spw_milli) div 1000L").as("flesch_milli")
+
+  /** The (doc_id, ws, t) projection every signal column reads. */
+  private def tokenized(docs: DataFrame, idCol: String,
+      textCol: String): DataFrame =
+    docs.select(col(idCol).as("doc_id"), wordsExpr(textCol).as("ws"),
+      col(textCol).as("t"))
 
   /** Per-document quality-signal ratios (the length/punct/stopword family
     * of training-data filters, à la C4/Gopher quality rules), as exact
@@ -83,20 +115,9 @@ object CorpusStats {
     *    non-ASCII text scores high by design and should be routed by
     *    langId, not this filter.
     * Narrow builtins projection — zero shuffle, codegen'd. */
-  def qualitySignals(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val sw = stopwordList.map(w => s"'$w'").mkString(", ")
-    docs.select(
-      col(idCol).as("doc_id"),
-      wordsExpr(textCol).as("ws"),
-      col(textCol).as("t"))
-      .select(
-        col("doc_id"),
-        expr("cast(size(ws) as bigint)").as("n_words"),
-        expr(s"(1000L * cast(size(filter(ws, w -> lower(w) in ($sw))) as bigint)) div greatest(cast(size(ws) as bigint), 1L)")
-          .as("stopword_milli"),
-        expr("(1000L * cast(length(regexp_replace(t, '[a-zA-Z0-9 ]', '')) as bigint)) div greatest(cast(length(t) as bigint), 1L)")
-          .as("nonalnum_milli"))
-  }
+  def qualitySignals(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    tokenized(docs, idCol, textCol)
+      .select(col("doc_id"), nWords, stopwordMilli, nonalnumMilli)
 
   /** Flesch reading-ease readability signal [public technique: Flesch
     * 1948, as standardized in Kincaid et al. 1975], in exact integer
@@ -115,27 +136,11 @@ object CorpusStats {
     * 100 TB shape: one narrow builtins projection — zero shuffle, whole
     * expression codegen'd (regexp_count + an aggregate HOF per row). */
   def readability(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs.select(
-      col(idCol).as("doc_id"),
-      wordsExpr(textCol).as("ws"),
-      col(textCol).as("t"))
-      .select(
-        col("doc_id"),
-        expr("cast(size(ws) as bigint)").as("n_words"),
-        expr("cast(regexp_count(t, '[.!?]+') as bigint)").as("n_sentences"),
-        expr("aggregate(ws, 0L, (acc, w) -> acc + greatest(1L, " +
-          "cast(regexp_count(lower(w), '[aeiouy]+') as bigint)))")
-          .as("n_syllables"))
-      .select(
-        col("doc_id"), col("n_words"), col("n_sentences"),
-        col("n_syllables"),
-        expr("(1000L * n_words) div greatest(n_sentences, 1L)")
-          .as("wps_milli"),
-        expr("(1000L * n_syllables) div greatest(n_words, 1L)")
-          .as("spw_milli"))
-      .withColumn("flesch_milli",
-        expr("206835L - (1015L * wps_milli) div 1000L" +
-          " - (84600L * spw_milli) div 1000L"))
+    tokenized(docs, idCol, textCol)
+      .select(col("doc_id"), nWords, nSentences, nSyllables)
+      .select(col("doc_id"), col("n_words"), col("n_sentences"),
+        col("n_syllables"), wpsMilli, spwMilli)
+      .select(col("*"), fleschMilli)
 
   /** Rule-based sentence segmentation: one row per sentence-ish chunk,
     * split where runs of [.!?] end, with the terminator run attached to
@@ -735,15 +740,21 @@ object CorpusStats {
       .select(wordsExpr(benchTextCol).as("ws"))
       .select(explode(wordGramsExpr(n)).as("gh"))
       .distinct()
-    val hits = docGrams.join(broadcast(benchGrams), Seq("gh"))
+    flagHits(docs, idCol, docGrams.join(broadcast(benchGrams), Seq("gh"))
       .groupBy("doc_id")
-      .agg(countDistinct(col("gh")).as("n_hits"))
+      .agg(countDistinct(col("gh")).as("n_hits")))
+  }
+
+  /** The decontamination output contract both forms share: every input
+    * doc as (doc_id, n_hits, contaminated), zero hits when `hits` (per-doc
+    * `n_hits`) has no row for it — rows are never dropped. */
+  private def flagHits(docs: DataFrame, idCol: String,
+      hits: DataFrame): DataFrame =
     docs.select(col(idCol).as("doc_id"))
       .join(hits, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_hits"), lit(0L)).as("n_hits"),
         (coalesce(col("n_hits"), lit(0L)) > 0).as("contaminated"))
-  }
 
   /** Character-level decontamination — the exact-substring twin of
     * [[decontaminate]] [public technique: Lee et al. 2021 §4 run exact
@@ -774,14 +785,9 @@ object CorpusStats {
     val benchGrams = grams(
       bench.select(col(benchTextCol).as("btext")), "btext")
       .select(col("gh")).distinct()
-    val hits = docGrams.join(broadcast(benchGrams), Seq("gh"))
+    flagHits(docs, idCol, docGrams.join(broadcast(benchGrams), Seq("gh"))
       .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_hits")) // grams already doc-distinct
-    docs.select(col(idCol).as("doc_id"))
-      .join(hits, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-        (coalesce(col("n_hits"), lit(0L)) > 0).as("contaminated"))
+      .agg(count(lit(1)).as("n_hits"))) // grams already doc-distinct
   }
 
   /** Deterministic per-group quota sampling — the domain-mixing primitive
@@ -832,48 +838,28 @@ object CorpusStats {
     * FineWeb pipelines compute the whole per-document signal vector in
     * one scan, then cut with one predicate — running each signal as
     * its own job re-reads and re-tokenizes the corpus once per
-    * signal]. Recomputes the EXACT formulas of [[repetition]]
+    * signal]. Selects the SAME signal columns as [[repetition]]
     * (dup_word_milli), [[qualitySignals]] (stopword_milli,
-    * nonalnum_milli) and [[readability]] (flesch_milli) in ONE
-    * projection over one tokenize pass. Two independent pins: the
-    * DuckDB oracle respells every formula, and a SPEC asserts this
-    * fused output row-for-row equals the JOIN of the three module
-    * operators — so the fused copy cannot drift from the modules even
-    * if it drifted in lockstep with its own oracle.
+    * nonalnum_milli) and [[readability]] (flesch_milli) over one
+    * tokenize pass. Two independent pins: the DuckDB oracle respells
+    * every formula, and a SPEC asserts this fused output row-for-row
+    * equals the JOIN of the three module operators.
     * `composite_milli` is a documented demo blend:
     * (stopword + (1000−nonalnum) + (1000−min(dup,1000)) ) div 3 —
     * monotone in each "good" direction, pinned here as the contract.
     *
     * 100 TB shape: one narrow codegen'd projection, zero shuffle —
     * four signal jobs' worth of scan+tokenize collapsed into one. */
-  def signalsFused(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val sw = stopwordList.map(w => s"'$w'").mkString(", ")
-    docs.select(
-      col(idCol).as("doc_id"),
-      wordsExpr(textCol).as("ws"),
-      col(textCol).as("t"))
-      .select(
-        col("doc_id"),
-        expr("cast(size(ws) as bigint)").as("n_words"),
-        expr("(1000L * cast(size(ws) - size(array_distinct(ws)) as bigint)) div greatest(cast(size(ws) as bigint), 1L)")
-          .as("dup_word_milli"),
-        expr(s"(1000L * cast(size(filter(ws, w -> lower(w) in ($sw))) as bigint)) div greatest(cast(size(ws) as bigint), 1L)")
-          .as("stopword_milli"),
-        expr("(1000L * cast(length(regexp_replace(t, '[a-zA-Z0-9 ]', '')) as bigint)) div greatest(cast(length(t) as bigint), 1L)")
-          .as("nonalnum_milli"),
-        expr("(1000L * cast(size(ws) as bigint)) div greatest(cast(regexp_count(t, '[.!?]+') as bigint), 1L)")
-          .as("wps_milli"),
-        expr("(1000L * aggregate(ws, 0L, (acc, w) -> acc + greatest(1L, " +
-          "cast(regexp_count(lower(w), '[aeiouy]+') as bigint)))) div greatest(cast(size(ws) as bigint), 1L)")
-          .as("spw_milli"))
-      .withColumn("flesch_milli",
-        expr("206835L - (1015L * wps_milli) div 1000L" +
-          " - (84600L * spw_milli) div 1000L"))
+  def signalsFused(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    tokenized(docs, idCol, textCol)
+      .select(col("doc_id"), nWords, dupWordMilli, stopwordMilli,
+        nonalnumMilli, nSentences, nSyllables)
+      .select(col("*"), wpsMilli, spwMilli)
+      .select(col("*"), fleschMilli)
       .withColumn("composite_milli",
         expr("(stopword_milli + (1000L - nonalnum_milli)" +
           " + (1000L - least(dup_word_milli, 1000L))) div 3L"))
-      .drop("wps_milli", "spw_milli")
-  }
+      .drop("n_sentences", "n_syllables", "wps_milli", "spw_milli")
 
   /** Per-document script mix — the mixed-script spam / wrong-decode
     * signal (a page claiming one language whose characters split

@@ -92,18 +92,8 @@ object Events {
     * evaluation strategy over the same semantics. */
   def rangeJoinSessions(events: DataFrame, pointType: String,
       gapSec: Long = 86400): DataFrame = {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts").asc, col("event_id").asc)
-    val iv = events.filter(col("event_type") =!= pointType)
-      .withColumn("prev_ts", lag(col("ts"), 1).over(w))
-      .withColumn("ns",
-        when(col("prev_ts").isNull, 1L)
-          .when(unix_micros(col("ts").cast("timestamp"))
-            - unix_micros(col("prev_ts").cast("timestamp"))
-            > gapSec * 1000000L, 1L)
-          .otherwise(0L))
-      .withColumn("session_idx",
-        sum(col("ns")).over(w.rowsBetween(Window.unboundedPreceding, 0)))
+    val iv = withSessionIdx(
+        events.filter(col("event_type") =!= pointType), gapSec)
       .groupBy(col("user_id"), col("session_idx"))
       .agg(min(col("ts")).as("ts"), max(col("ts")).as("e_ts"))
     val rights = iv.select(col("user_id"), col("ts"),
@@ -131,7 +121,17 @@ object Events {
 
   /** Gap-based sessionization: a new session starts after `gapSec` of
     * inactivity; session index = running count of session starts. */
-  def sessionize(events: DataFrame, gapSec: Long = 1800): DataFrame = {
+  def sessionize(events: DataFrame, gapSec: Long = 1800): DataFrame =
+    withSessionIdx(events, gapSec)
+      .select(col("user_id"), col("event_id"), col("session_idx"))
+      .orderBy("user_id", "event_id")
+
+  /** The session-gap rule [[sessionize]] and [[rangeJoinSessions]] share
+    * (and `StreamJobs.streamingSessionize` must match): per user in
+    * (ts, event_id) order, an event opens a new session when it is the
+    * user's first or follows the previous one by more than `gapSec`;
+    * `session_idx` is the running count of session starts. */
+  private def withSessionIdx(events: DataFrame, gapSec: Long): DataFrame = {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts").asc, col("event_id").asc)
     events
@@ -144,7 +144,5 @@ object Events {
           .otherwise(0L))
       .withColumn("session_idx",
         sum(col("new_session")).over(w.rowsBetween(Window.unboundedPreceding, 0)))
-      .select(col("user_id"), col("event_id"), col("session_idx"))
-      .orderBy("user_id", "event_id")
   }
 }

@@ -329,37 +329,21 @@ object Similarity {
     * stay in the sizes but skip the join (they cannot form a pair).
     *
     * 100 TB shape: only (token, id) pairs shuffle — never text; the df
-    * window and the self-join share the token key; per-token join
+    * cap's window and the self-join share the token key; per-token join
     * fan-out is ≤ dfCap² by construction; the pair aggregation carries
     * compact (a, b, 1) rows collapsed map-side. */
   def allPairsSetCosine(docs: DataFrame, idCol: String, textCol: String,
       minCos2Ppm: Long = 640000L, dfCap: Int = 100): DataFrame = {
     require(dfCap >= 2, s"dfCap must be >= 2, got $dfCap")
-    // r5 window-cap shape kept DELIBERATELY (r06, measured): the same
-    // two-phase groupBy+join cap that de-skewed gramIntersections benched
-    // 0.42 -> 0.62 s here — the token explode is cheap (no md5), so the
-    // extra persist + agg exchange dominate; the window's exchange is the
-    // only one in the path and the self-join reuses its partitioning off
-    // the cache (same trade-off as bandedCapped's r06 shape note)
-    val toks = docs.select(col(idCol).as("id"),
-      explode(array_distinct(TextGrams.wordsExpr(textCol))).as("token"))
-    // capped is the FORK (sizes + both join sides) — persist barrier per
-    // the file-wide signature-table convention
-    val capped = toks.withColumn("df", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("token")))
-      .filter(col("df") <= dfCap)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sizes = capped.groupBy("id").agg(count(lit(1)).as("sz"))
-    val joinable = capped.filter(col("df") >= 2)
-    val dots = joinable.select(col("token"), col("id").as("doc_a"))
-      .join(joinable.select(col("token"), col("id").as("doc_b")), Seq("token"))
-      .filter(col("doc_a") < col("doc_b"))
+    // window shape (r06): the two-phase cap benched 0.42 -> 0.62 s here —
+    // the token explode is cheap (no md5), so its extra agg exchange
+    // dominates. capped is the FORK (sizes + both join sides)
+    val capped = Cap.window(docs.select(col(idCol).as("id"),
+        explode(array_distinct(TextGrams.wordsExpr(textCol))).as("token")),
+      Seq("token"), dfCap)
+    val dots = Cap.pairs(capped.filter(col("bucket_n") >= 2), Seq("token"))
       .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("dot"))
-    dots
-      .join(sizes.withColumnRenamed("id", "doc_a")
-        .withColumnRenamed("sz", "sz_a"), Seq("doc_a"))
-      .join(sizes.withColumnRenamed("id", "doc_b")
-        .withColumnRenamed("sz", "sz_b"), Seq("doc_b"))
+    Cap.withSizes(dots, capped)
       .withColumn("cos2_ppm",
         // squared in DECIMAL(38,0): dot > ~3.03e6 would wrap BIGINT
         // (non-ANSI silently, ANSI as a job-killing error) and silently

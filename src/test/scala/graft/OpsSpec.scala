@@ -2786,4 +2786,88 @@ class OpsSpec extends AnyFunSuite {
     val expect = (0 until 50).map(i => w(s"t$i")).sum
     assert(got.getLong(1) == 50L && got.getLong(2) == expect)
   }
+
+  /** The eight skew-capped candidate operators, each as cap => output
+    * over `docs` (doc_id, text) or `vecs` (vec_id, embedding), the first
+    * two columns the candidate pair. minhashIncremental admits docs 3..
+    * against archive docs 1-2. */
+  private def cappedOps(docs: org.apache.spark.sql.DataFrame,
+      vecs: org.apache.spark.sql.DataFrame)
+      : Seq[(String, Int => org.apache.spark.sql.DataFrame)] = {
+    val archive = docs.filter(col("doc_id") <= 2)
+    val batch = docs.filter(col("doc_id") > 2)
+    Seq(
+      "minhashLsh" -> (c => Dedup.minhashLsh(docs, "doc_id", "text",
+        maxBucket = c)),
+      "minhashIncremental" -> (c => Dedup.minhashIncremental(archive, batch,
+        "doc_id", "text", maxBucket = c)),
+      "simhash" -> (c => Dedup.simhash(docs, "doc_id", "text",
+        maxBucket = c)),
+      "embeddingCosineLsh" -> (c => Dedup.embeddingCosineLsh(vecs, "vec_id",
+        "embedding", maxBucket = c)),
+      "ngramJaccard" -> (c => Dedup.ngramJaccard(docs, "doc_id", "text",
+        maxBucket = c)),
+      "containmentPairs" -> (c => Dedup.containmentPairs(docs, "doc_id",
+        "text", maxBucket = c)),
+      "winnow" -> (c => Dedup.winnow(docs, "doc_id", "text", minShared = 1L,
+        maxBucket = c)),
+      "allPairsSetCosine" -> (c => Similarity.allPairsSetCosine(docs,
+        "doc_id", "text", dfCap = c)))
+  }
+
+  test("skew cap boundary: n key-sharing docs pair at cap n, never at n-1") {
+    import spark.implicits._
+    val n = 4
+    val text = "the quick brown fox jumps over the lazy dog again and again"
+    val docs = (1L to n).map(i => (i, text)).toDF("doc_id", "text")
+    val vec = Array.tabulate(64)(d => math.sin(d * 0.7).toFloat)
+    val vecs = (1L to n).map(i => (i, vec)).toDF("vec_id", "embedding")
+    val all = (for (a <- 1L to n; b <- a + 1 to n) yield (a, b)).toSet
+    // minhashIncremental's buckets hold 2 rows on each side, under cap
+    // n-1, but n across the union: the cap counts BOTH sides together
+    val admitted = for (d <- 3L to n; e <- 1L to 2) yield (d, e)
+    cappedOps(docs, vecs).foreach { case (name, op) =>
+      def pairs(cap: Int) = op(cap).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(pairs(n - 1).isEmpty, s"$name kept a key group over its cap")
+      val want = if (name == "minhashIncremental") admitted.toSet else all
+      assert(pairs(n) == want, s"$name at cap $n")
+    }
+  }
+
+  test("skew cap shapes: each candidate operator keeps its measured plan") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    // text no other test uses, so no foreign cache entry can stand in
+    // for a subplan of these operators
+    val text = "shape pin corpus words for the skew cap plan test alpha beta"
+    val docs = (1L to 3L).map(i => (i, text)).toDF("doc_id", "text")
+    val vec = Array.tabulate(64)(d => math.cos(d * 0.9).toFloat)
+    val vecs = (1L to 3L).map(i => (i, vec)).toDF("vec_id", "embedding")
+    // (Window, Aggregate, Join) nodes of the analyzed plan, then the
+    // cached relations it reads: the window shape shows as a Window and
+    // its persist, the two-phase shape as an Aggregate plus a Join
+    def shape(df: org.apache.spark.sql.DataFrame): Seq[Int] = {
+      val a = df.queryExecution.analyzed
+      Seq(a.collect { case w: logical.Window => w }.size,
+        a.collect { case g: logical.Aggregate => g }.size,
+        a.collect { case j: logical.Join => j }.size,
+        df.queryExecution.withCachedData
+          .collect { case m: InMemoryRelation => m }.size)
+    }
+    val got = cappedOps(docs, vecs).map { case (name, op) =>
+      name -> shape(op(100)) }.toMap
+    // the shapes r06 measured per site (OPTIMIZATION_r06.md "Skew-cap
+    // shape work"); a shape switch must change these visibly
+    assert(got == Map(
+      "minhashLsh" -> Seq(2, 1, 1, 2),
+      "minhashIncremental" -> Seq(2, 1, 1, 2),
+      "simhash" -> Seq(2, 0, 1, 2),
+      "embeddingCosineLsh" -> Seq(2, 0, 1, 2),
+      "ngramJaccard" -> Seq(0, 7, 7, 4),
+      "containmentPairs" -> Seq(0, 7, 7, 4),
+      "winnow" -> Seq(0, 3, 3, 4),
+      "allPairsSetCosine" -> Seq(4, 3, 3, 4)), got)
+  }
 }
