@@ -44,10 +44,6 @@ object Compact {
       bytesBefore: Long, filesAfter: Long, bytesAfter: Long,
       action: String)
 
-  private def fsFor(p: String, spark: SparkSession) =
-    new org.apache.hadoop.fs.Path(p)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   private def partFiles(fs: org.apache.hadoop.fs.FileSystem,
       dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
     if (!fs.exists(dir)) Seq.empty
@@ -79,7 +75,7 @@ object Compact {
     * the action taken (`skipped` / `compacted` / `kept`). */
   def compactTable(spark: SparkSession, tableDir: String,
       targetBytes: Long = 128L << 20): Seq[BucketStat] = {
-    val fs = fsFor(tableDir, spark)
+    val fs = Jobs.fsFor(tableDir, spark)
     val root = new org.apache.hadoop.fs.Path(tableDir)
     if (!fs.exists(root)) return Seq.empty
     // recovery sweep FIRST: a bucket stranded as `bucket=K.trash` with
@@ -109,7 +105,7 @@ object Compact {
 
   def compactBucket(spark: SparkSession, tableDir: String, bucket: Int,
       targetBytes: Long): BucketStat = {
-    val fs = fsFor(tableDir, spark)
+    val fs = Jobs.fsFor(tableDir, spark)
     val live = new org.apache.hadoop.fs.Path(s"$tableDir/bucket=$bucket")
     recoverBucket(fs, live)
     val before = partFiles(fs, live)

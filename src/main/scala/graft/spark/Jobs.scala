@@ -5,21 +5,21 @@ import graft.engine.Extractor
 import graft.extract.Ranges
 import graft.gen.SyntheticCorpus
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Spark lifecycle of the extraction pipeline (SURVEY.md §3.1 "Spark shape
-  * of the same lifecycle"): read → triage/validate → url-hash repartition (unique key, no salt needed) →
-  * one fused mapPartitions kernel stage → ordered deterministic output →
-  * metrics + idempotent commit.
+  * of the same lifecycle"): read → triage/validate → one fused
+  * mapPartitions kernel stage → url-hash repartition (partition = output
+  * bucket) → metrics + idempotent commit.
   *
   * Design notes for 100 TB scale:
   *  - The kernel is a NARROW map: no shuffle is required for extraction
   *    itself. The single repartition exists to (a) decouple task count
-  *    from input file layout and (b) break up skewed hosts (70% of rows
-  *    can share one host in CC crawls); its key is the URL hash — urls
-  *    are unique, so the key is uniform by construction and host skew
-  *    never enters it (no salting step is needed or present).
+  *    from input file layout, (b) break up skewed hosts (70% of rows
+  *    can share one host in CC crawls) and (c) hand the writer one task
+  *    per bucket; its key is the URL hash — urls are unique, so the key
+  *    is uniform by construction and host skew never enters it.
   *  - All per-row stages are fused in ONE mapPartitions (reference analog:
   *    src/ocrmypdf/_pipelines/_common.py:446-476 runs preview→rasterize→
   *    preprocess→ocr back-to-back per page inside one task). Never one
@@ -60,16 +60,18 @@ object Jobs {
     }
   }
 
-  /** The url-hash bucket/partition key — THE single definition: metrics,
-    * the bucketed writer, and the table layout must agree on bucket
-    * membership, so they all call this. */
+  /** The url-hash bucket key — THE single definition: metrics, the
+    * bucketed writer, and the table layout must agree on bucket
+    * membership, so they all call this. It is exactly the partition id
+    * `HashPartitioning(url, buckets)` computes (murmur3 seed 42, pmod
+    * n), so after `repartition(buckets, col("url"))` partition k holds
+    * exactly bucket k. Changing it moves every url's bucket on disk. */
   def bucketCol(buckets: Int) =
-    pmod(xxhash64(col("url")), lit(buckets)).cast("int")
+    pmod(hash(col("url")), lit(buckets))
 
   /** The extraction pipeline: narrow fused kernel first, THEN the
-    * url-hash repartition on the *output* (the key is the unique url —
-    * uniform under murmur3, so no salting step exists or is needed;
-    * see the comment in `extract`).
+    * url-hash repartition on the *output*. Partition k of the result
+    * holds exactly the rows whose [[bucketCol]]`(partitions)` is k.
     *
     * Ordering rationale (100 TB): the kernel is a narrow map — input
     * splits already balance it, so shuffling raw `html` bytes before
@@ -82,12 +84,7 @@ object Jobs {
     * repartition the pages on url before extracting. */
   def extract(pages: Dataset[PageRow], partitions: Int,
       cfg: ExtractConfig = ExtractConfig()): Dataset[ExtractResult] = {
-    // repartition directly on the unique url: HashPartitioning murmurs
-    // the expression value, so pre-bucketing with pmod(xxhash64, n)
-    // would be DOUBLE hashing — n coarse key classes rehashed into n
-    // partitions leaves ~1/e of tasks empty and piles 2-3 classes on
-    // others (balls-in-bins), the opposite of the uniform layout this
-    // shuffle exists for. Unique urls → murmur3 spread is uniform.
+    // partition id = pmod(murmur3(url), n) = bucketCol(n), row for row
     extractNarrow(pages, cfg).repartition(partitions, col("url"))
   }
 
@@ -197,6 +194,28 @@ object Jobs {
       .withColumn("wall_ms", lit(wallMs))
       .withColumn("attempt", lit(attempt))
       .withColumn("committed_ts", current_timestamp())
+
+  /** The one bucketed-table write: `bucket=K` dirs, ZSTD (the text-heavy
+    * output's storage contract, whatever the session codec), the
+    * caller's save mode. Dynamic partition overwrite scopes an Overwrite
+    * to the buckets present in `df` (static mode would truncate the
+    * whole table — the parquet spelling of Iceberg's
+    * overwritePartitions()); an Append ignores it. */
+  private[spark] def writeBuckets(df: DataFrame, path: String,
+      mode: SaveMode): Unit =
+    df.write.partitionBy("bucket")
+      .option("compression", "zstd")
+      .option("partitionOverwriteMode", "dynamic")
+      .mode(mode)
+      .parquet(path)
+
+  /** The path's OWN filesystem — FileSystem.get(conf) resolves the
+    * default FS and throws "Wrong FS" for any other scheme (s3a/hdfs
+    * output with a file:// default — the warehouse swap-in scenario). */
+  private[spark] def fsFor(path: String,
+      spark: SparkSession): org.apache.hadoop.fs.FileSystem =
+    new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
 }
 
 /** Idempotent, resumable bucket-committed writer — the sandbox stand-in
@@ -215,6 +234,12 @@ object Jobs {
   * A rerun processes only unmarked buckets, deleting any partial dir
   * first — so a crash between payload and marker re-does exactly that
   * bucket and the final table never contains duplicates.
+  *
+  * Given `Jobs.extract(pages, buckets)`, whose partition k holds exactly
+  * bucket k, the write runs one task per bucket and leaves one ZSTD part
+  * file in each non-empty `bucket=K` dir. Bucket membership is
+  * `Jobs.bucketCol`; do not resume an output written under another
+  * definition of it.
   */
 object CheckpointedWriter {
 
@@ -222,16 +247,8 @@ object CheckpointedWriter {
   def dataDir(out: String) = s"$out/data"
   def metricsDir(out: String) = s"$out/metrics"
 
-  /** The out path's OWN filesystem — FileSystem.get(conf) resolves the
-    * default FS and throws "Wrong FS" for any other scheme (s3a/hdfs
-    * output with a file:// default — the warehouse swap-in scenario). */
-  private def fsFor(out: String,
-      spark: SparkSession): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   def committedBuckets(spark: SparkSession, out: String): Set[Int] = {
-    val fs = fsFor(out, spark)
+    val fs = Jobs.fsFor(out, spark)
     val p = new org.apache.hadoop.fs.Path(commitDir(out))
     if (!fs.exists(p)) Set.empty
     else fs.listStatus(p).map(_.getPath.getName).flatMap(n =>
@@ -279,7 +296,7 @@ object CheckpointedWriter {
   def run(extracted: Dataset[ExtractResult], out: String, buckets: Int,
       failAfterBuckets: Int = -1): Int = {
     val spark = extracted.sparkSession
-    val fs = fsFor(out, spark)
+    val fs = Jobs.fsFor(out, spark)
     val done = committedBuckets(spark, out)
     val todo = (0 until buckets).filterNot(done.contains)
     if (todo.isEmpty) return 0
@@ -299,7 +316,7 @@ object CheckpointedWriter {
         if (fs.exists(d)) fs.delete(d, true)
       }
       val t0 = System.nanoTime()
-      pending.write.partitionBy("bucket").mode("append").parquet(dataDir(out))
+      Jobs.writeBuckets(pending, dataDir(out), SaveMode.Append)
       val wallMs = (System.nanoTime() - t0) / 1000000L
       // per-bucket lineage metrics (FIXTURES.md `metrics` schema), written
       // BEFORE the commit markers so a marker implies metrics exist; attempt

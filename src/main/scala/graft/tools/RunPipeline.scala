@@ -6,14 +6,16 @@ import org.apache.spark.sql.functions._
 
 /** The full production lifecycle as ONE spark-submit-able job — the shape
   * a cluster run uses (SURVEY.md §3.1 "Spark shape of the same
-  * lifecycle"): source → fused narrow extract kernel → salted url-hash
-  * repartition → idempotent bucket-committed write (+ per-bucket lineage
-  * metrics) → read-back verification (the reference's report_output_pdf /
-  * check_pdf discipline: re-open what you just wrote and validate).
+  * lifecycle"): source → fused narrow extract kernel → url-hash
+  * repartition (one partition per output bucket) → idempotent
+  * bucket-committed write (+ per-bucket lineage metrics) → read-back
+  * verification (the reference's report_output_pdf / check_pdf
+  * discipline: re-open what you just wrote and validate).
   *
   * Usage: runMain graft.tools.RunPipeline [nDocs] [outDir] [buckets]
   * Re-running against the same outDir resumes: committed buckets are
-  * skipped (delete outDir for a fresh run). Prints one JSON line.
+  * skipped (delete outDir for a fresh run). Prints one JSON line and
+  * exits 1 when the read-back disagrees with `nDocs` or the metrics.
   */
 object RunPipeline {
   def main(args: Array[String]): Unit = {
@@ -40,20 +42,22 @@ object RunPipeline {
     val wallS = (System.nanoTime() - t0) / 1e9
 
     // read-back verification: row count, per-url uniqueness, content
-    // checksum, and metrics-table reconciliation
+    // checksum, and metrics-table reconciliation (the dynamic partition
+    // overwrite leaves exactly one metrics row per bucket)
     val back = CheckpointedWriter.readBack(spark, out)
     val agg = back.agg(count(lit(1)).as("docs"),
       countDistinct(col("url")).as("urls"),
-      expr("bit_xor(xxhash64(url, text, outcome))").as("checksum")).collect()(0)
+      expr("bit_xor(xxhash64(url, text, outcome))").as("checksum"),
+      sum(length(col("text"))).as("bytes"),
+      sum(when(col("outcome").startsWith("error"), 1L).otherwise(0L))
+        .as("failures")).collect()(0)
     val m = spark.read.parquet(CheckpointedWriter.metricsDir(out))
-    val latest = m.withColumn("r", row_number()
-        .over(org.apache.spark.sql.expressions.Window
-          .partitionBy("url_hash_bucket").orderBy(col("attempt").desc)))
-      .filter(col("r") === 1)
-    val mDocs = latest.agg(sum("docs")).collect()(0).getLong(0)
-    val ok = agg.getLong(0) == n && agg.getLong(1) == n && mDocs == n
+      .agg(sum("docs"), sum("bytes"), sum("failures")).collect()(0)
+    val mDocs = m.getLong(0)
+    val ok = agg.getLong(0) == n && agg.getLong(1) == n && mDocs == n &&
+      m.getLong(1) == agg.getLong(3) && m.getLong(2) == agg.getLong(4)
     println(
-      f"""{"job":"run_pipeline","docs":${agg.getLong(0)},"distinct_urls":${agg.getLong(1)},"metrics_docs":$mDocs,"buckets_written":$wrote,"checksum":${agg.getLong(2)},"wall_s":$wallS%.1f,"docs_per_sec":${n / wallS}%.0f,"verified":$ok,"out":"$out"}""")
+      f"""{"job":"run_pipeline","docs":${agg.getLong(0)},"distinct_urls":${agg.getLong(1)},"metrics_docs":$mDocs,"bytes":${agg.getLong(3)},"metrics_bytes":${m.getLong(1)},"failures":${agg.getLong(4)},"metrics_failures":${m.getLong(2)},"buckets_written":$wrote,"checksum":${agg.getLong(2)},"wall_s":$wallS%.1f,"docs_per_sec":${n / wallS}%.0f,"verified":$ok,"out":"$out"}""")
     if (!ok) sys.exit(1)
     spark.stop()
   }

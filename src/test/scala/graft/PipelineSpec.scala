@@ -51,12 +51,9 @@ class PipelineSpec extends AnyFunSuite {
     * trait so an IcebergTableIO runs the identical assertions. */
   private def tableIOContract(io: graft.spark.TableIO, root: String): Unit = {
     import spark.implicits._
-    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
     val buckets = 4
     def bucketOf(url: String): Int =
-      Seq(url).toDF("url")
-        .select(pmod(xxhash64(col("url")), lit(buckets)).cast("int"))
-        .head.getInt(0)
+      Seq(url).toDF("url").select(Jobs.bucketCol(buckets)).head.getInt(0)
     // urls spanning ≥2 buckets, discovered against the same hash the
     // writer uses (never assume the hash→bucket map)
     val urls = (0 until 32).map(i => s"https://h$i.example.com/p$i")
@@ -303,9 +300,10 @@ class PipelineSpec extends AnyFunSuite {
         .filter(_.endsWith(".parquet")))
     assert(parts.nonEmpty && parts.forall(_.endsWith(".zstd.parquet")),
       s"non-ZSTD part files: ${parts.filterNot(_.endsWith(".zstd.parquet")).toSeq}")
-    // one write task per bucket (the salted exact routing): a bucket dir
-    // with 2+ part files means buckets collided in one shuffle partition
-    // (balls-in-bins regression), 0 files means an empty task wrote nothing
+    // one write task per bucket (repartition on url: partition k holds
+    // exactly bucket k): a bucket dir with 2+ part files means buckets
+    // collided in one shuffle partition, 0 files means an empty task
+    // wrote nothing
     bucketDirs.foreach { d =>
       val n = new java.io.File(root, d).listFiles()
         .count(_.getName.endsWith(".parquet"))
@@ -675,6 +673,34 @@ class PipelineSpec extends AnyFunSuite {
     assert(table == ckpt, "bucket membership differs between the writers")
   }
 
+  test("bucket = partition: extract's partition k is bucket k, one file each") {
+    val pages = Jobs.syntheticPages(spark, 120)
+    Seq(4, 7).foreach { b =>
+      val extracted = Jobs.extract(pages, b)
+      val ids = extracted.toDF()
+        .select(spark_partition_id(), Jobs.bucketCol(b)).collect()
+      assert(ids.length == 120)
+      assert(ids.forall(r => r.getInt(0) == r.getInt(1)),
+        s"B=$b: partition id differs from bucket")
+      val out = java.nio.file.Files.createTempDirectory("graft_part").toString
+      CheckpointedWriter.run(extracted, out, b)
+      val dirs = new java.io.File(CheckpointedWriter.dataDir(out))
+        .listFiles().filter(_.isDirectory)
+      assert(dirs.nonEmpty)
+      dirs.foreach { d =>
+        val parts = d.listFiles().map(_.getName).filter(_.endsWith(".parquet"))
+        assert(parts.length == 1 && parts(0).endsWith(".zstd.parquet"),
+          s"B=$b ${d.getName}: ${parts.toSeq}")
+      }
+      // the read-back's `bucket` is the dir name each url sits in
+      val back = CheckpointedWriter.readBack(spark, out)
+        .select(col("bucket"), Jobs.bucketCol(b)).collect()
+      assert(back.length == 120)
+      assert(back.forall(r => r.getInt(0) == r.getInt(1)),
+        s"B=$b: a url sits outside its bucketCol dir")
+    }
+  }
+
   test("subset filter: open-ended `end` selects the same rows as resolved") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
@@ -693,10 +719,9 @@ class PipelineSpec extends AnyFunSuite {
   test("skew: salted key spreads the hot host across partitions") {
     import spark.implicits._
     val pages = Jobs.syntheticPages(spark, 400)
-    // ~70% of rows share one host; with the salted url-hash key the max
-    // partition holds far less than the hot-host share
-    val parts = pages.toDF()
-      .repartition(8, pmod(xxhash64(col("url")), lit(8)))
+    // ~70% of rows share one host; Jobs.extract's url-hash partitions
+    // each hold far less than the hot-host share
+    val parts = Jobs.extract(pages, 8)
       .mapPartitions(it => Iterator(it.size)).collect()
     assert(parts.sum == 400)
     assert(parts.max < 400 * 7 / 10, s"skewed partition sizes: ${parts.toSeq}")
