@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for the training-data pipeline. All of these
@@ -384,26 +384,59 @@ object Dedup {
       .distinct()
   }
 
+  /** The largest edge table [[resolveClusters]] resolves on the driver.
+    * At most `LocalEdges + 1` rows of two longs are pulled whatever the
+    * input size: 2^16 edges ≈ 1 MiB of ids (a few MiB as JVM rows). A
+    * fixed constant, not a setting — above it the distributed walk
+    * runs. */
+  private[graft] val LocalEdges: Int = 1 << 16
+
   /** Near-dup cluster resolution: connected components over candidate
     * pairs → (doc_id, cluster_keep_id) with keep = the component's
     * minimum id — the fuzzy-path analog of `exact`'s keep_id. Without
     * this, LSH/simhash emit pairs but nothing actually deduplicates.
     *
-    * Algorithm: iterative min-label propagation on the COMPACT id graph
-    * (edges are (long, long) pairs — document text never enters), with a
-    * POINTER-JUMPING round after each propagation (label(v) ←
-    * label(label(v))): labels chase their own current root, so a chain of
-    * length d converges in O(log d) rounds instead of O(d) — chained
-    * near-dups at corpus scale can't blow the round budget. The fixpoint
-    * is the per-component minimum, independent of execution order
-    * (deterministic). Each round is a constant number of shuffles of
-    * 16-byte rows — the iterative-small-key-join shape, no driver-side
-    * graph. Non-convergence within `maxIters` throws (deterministic
-    * failure beats silently-partial clusters). */
+    * The algorithm is chosen from the size of the [[edgeTable]], which
+    * is built and persisted once:
+    *  - at most [[LocalEdges]] rows: [[unionFindClusters]] on the
+    *    driver. The result is a local relation, so every caller's
+    *    join-back broadcasts it.
+    *  - more rows: [[minLabelClusters]], the distributed walk over the
+    *    persisted edges; no driver-side graph.
+    * The bounded pull that decides runs when this DataFrame is BUILT:
+    * a documented driver-side step of a few Spark jobs (three on a
+    * small input under AQE: the distinct's exchange, the cache, the
+    * take) before any action on the result; the distributed walk's
+    * rounds run then too.
+    * Both paths yield the per-component minimum, so the rows are
+    * identical whichever path runs. A NULL endpoint links nothing: it
+    * yields one (null, null) row. Non-convergence of the distributed
+    * walk within `maxIters` throws (deterministic failure beats
+    * silently-partial clusters). */
   def resolveClusters(pairs: DataFrame,
       aCol: String = "doc_a", bCol: String = "doc_b",
       maxIters: Int = 50): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val edges = edgeTable(pairs, aCol, bCol)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val pulled = edges.limit(LocalEdges + 1).collect()
+      if (pulled.length <= LocalEdges)
+        unionFindClusters(edges.sparkSession, pulled,
+          edges.schema("src").nullable)
+      else minLabelClusters(edges, maxIters)
+    } finally {
+      // both results are materialized (a local relation, or the walk's
+      // localCheckpoint), so the edge cache can drop on EVERY exit path
+      // — including the non-convergence throw (a caught failure must
+      // not pin the cache for the session's lifetime)
+      edges.unpersist(); ()
+    }
+  }
+
+  /** [[resolveClusters]]' edge table: (src, dst) ids cast to long, in
+    * both directions, distinct. */
+  private[graft] def edgeTable(pairs: DataFrame, aCol: String,
+      bCol: String): DataFrame = {
     // numeric ids only, checked at the SCHEMA level: under LEGACY
     // (non-ANSI) mode cast("long") turns an opaque string id into NULL
     // silently, every edge collapses to (null, null), and the result is
@@ -417,14 +450,62 @@ object Dedup {
     }
     val dir = pairs.select(col(aCol).cast("long").as("src"),
       col(bCol).cast("long").as("dst"))
-    val edges = dir.union(dir.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().persist(lvl)
+    dir.union(dir.select(col("dst").as("src"), col("src").as("dst")))
+      .distinct()
+  }
+
+  /** [[resolveClusters]]' driver path over pulled (src, dst) edge rows:
+    * a union-find with path compression that links the larger root
+    * under the smaller, so every root is its component's minimum id.
+    * An edge with a NULL endpoint links nothing; NULL itself becomes
+    * one (null, null) row, as in the distributed walk. */
+  private[graft] def unionFindClusters(spark: SparkSession,
+      edges: Array[Row], nullable: Boolean): DataFrame = {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var root = x
+      while (parent(root) != root) root = parent(root)
+      var y = x
+      while (y != root) { val up = parent(y); parent(y) = root; y = up }
+      root
+    }
+    var hasNull = false
+    edges.foreach { e =>
+      val ends = Seq(0, 1).filterNot(e.isNullAt).map(e.getLong)
+      ends.foreach(x => parent.getOrElseUpdate(x, x))
+      if (ends.length < 2) hasNull = true
+      else {
+        val (ra, rb) = (find(ends(0)), find(ends(1)))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+    }
+    val rows = parent.keys.toSeq.map(x => Row(x, find(x))) ++
+      (if (hasNull) Seq(Row(null, null)) else Nil)
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("doc_id", LongType, nullable),
+      StructField("cluster_keep_id", LongType, nullable))))
+  }
+
+  /** [[resolveClusters]]' distributed path over an [[edgeTable]] the
+    * caller has persisted: iterative min-label propagation on the
+    * COMPACT id graph (edges are (long, long) pairs — document text
+    * never enters), with a POINTER-JUMPING round after each propagation
+    * (label(v) ← label(label(v))): labels chase their own current root,
+    * so a chain of length d converges in O(log d) rounds instead of
+    * O(d) — chained near-dups at corpus scale can't blow the round
+    * budget. The fixpoint is the per-component minimum, independent of
+    * execution order (deterministic). Each round is a constant number
+    * of shuffles of 16-byte rows — the iterative-small-key-join shape.
+    * Non-convergence within `maxIters` throws. */
+  private[graft] def minLabelClusters(edges: DataFrame,
+      maxIters: Int): DataFrame = {
     var labels = edges.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("label"))
     var changed = 1L
     var iter = 0
-    try {
-      while (changed > 0 && iter < maxIters) {
+    while (changed > 0 && iter < maxIters) {
       // propagate: take the minimum over neighbour labels
       val nbrMin = edges.join(labels, edges("dst") === labels("id"))
         .select(edges("src").as("nid"), col("label"))
@@ -451,16 +532,9 @@ object Dedup {
       changed = next.filter(col("label") =!= col("old_label")).count()
       labels = next.select("id", "label")
       iter += 1
-      }
-      require(changed == 0,
-        s"resolveClusters did not converge within $maxIters rounds")
-    } finally {
-      // the labels result is localCheckpoint-materialized, so the edge
-      // cache can drop on EVERY exit path — including the
-      // non-convergence throw (a caught failure must not pin the cache
-      // for the session's lifetime)
-      edges.unpersist(); ()
     }
+    require(changed == 0,
+      s"resolveClusters did not converge within $maxIters rounds")
     labels.select(col("id").as("doc_id"), col("label").as("cluster_keep_id"))
   }
 

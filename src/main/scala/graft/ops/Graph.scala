@@ -216,16 +216,19 @@ $steps"""
     * (key, keep_key, n_members) with keep_key the component's
     * lexicographic minimum — the mirror/site-cluster resolution step
     * over the host graph (the same keeper contract as Dedup.exact,
-    * at host grain). Delegates the iterative min-label/pointer-jump
-    * walk to [[Dedup.resolveClusters]] over 60-bit md5-derived ids
-    * (both engines share the conv(md5) algebra), then re-keys: the
+    * at host grain). Delegates the components to
+    * [[Dedup.resolveClusters]] over 60-bit md5-derived ids (both engines
+    * share the conv(md5) algebra) — a driver union-find when the id
+    * edge table fits its bounded pull, the iterative min-label/pointer-
+    * jump walk when it does not — then re-keys: the
     * keeper is min(key) WITHIN the component — label-independent, so
     * the oracle may resolve components any way it likes. A duplicate
     * 60-bit id would silently merge two components, so the mapping
     * carries an assert_true guard (birthday bound ~2^30 keys — beyond
     * that, swap in AssignIds.stableIds for the id step).
     *
-    * 100 TB shape: the walk shuffles (id, id) pairs only; key strings
+    * 100 TB shape: the walk shuffles (id, id) pairs only (below the
+    * pull bound the labels are a broadcast local relation); key strings
     * appear in exactly two broadcast-scale joins (id assignment and
     * keeper re-key) plus one groupBy on the component label. */
   def componentsByKey(edges: DataFrame, aCol: String, bCol: String): DataFrame = {

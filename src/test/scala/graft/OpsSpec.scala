@@ -900,12 +900,14 @@ class OpsSpec extends AnyFunSuite {
     } finally spark.conf.unset(key)
   }
 
-  test("Par.spread: building over a groupBy result runs no Spark job") {
+  /** `body`'s result and the number of Spark jobs it started, with AQE
+    * on (so each exchange runs as its own job). A sentinel job run
+    * afterwards flushes the ordered listener bus, so every earlier
+    * start has arrived before the count is read. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val aqeKey = "spark.sql.adaptive.enabled"
     val aqeWas = spark.conf.getOption(aqeKey)
-    // every job start is counted; the sentinel job run after the build
-    // flushes the (ordered) listener bus, so earlier starts have arrived
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val flushed = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
@@ -917,19 +919,24 @@ class OpsSpec extends AnyFunSuite {
     spark.conf.set(aqeKey, "true")
     spark.sparkContext.addSparkListener(listener)
     try {
-      val grouped = spark.range(0, 1000, 1, 4)
-        .groupBy((col("id") % 10).as("k")).count()
-      val spread = Par.spread(grouped, "k")
+      val out = body
       spark.sparkContext.setJobDescription("sentinel")
       spark.sparkContext.parallelize(Seq(1), 1).count()
       spark.sparkContext.setJobDescription(null)
       assert(flushed.await(30, java.util.concurrent.TimeUnit.SECONDS))
-      assert(jobs.get == 0, s"${jobs.get} job(s) ran while building")
-      assert(spread.count() == 10)
+      (out, jobs.get)
     } finally {
       spark.sparkContext.removeSparkListener(listener)
       aqeWas.fold(spark.conf.unset(aqeKey))(spark.conf.set(aqeKey, _))
     }
+  }
+
+  test("Par.spread: building over a groupBy result runs no Spark job") {
+    val grouped = spark.range(0, 1000, 1, 4)
+      .groupBy((col("id") % 10).as("k")).count()
+    val (spread, jobs) = jobsDuring(Par.spread(grouped, "k"))
+    assert(jobs == 0, s"$jobs job(s) ran while building")
+    assert(spread.count() == 10)
   }
 
   test("simhash64 native expression is bit-identical to the builtin spec") {
@@ -1263,15 +1270,69 @@ class OpsSpec extends AnyFunSuite {
     // a 5-chain (tests multi-round propagation), a pair, and a triangle
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L),
       (10L, 11L), (20L, 21L), (21L, 22L), (22L, 20L)).toDF("doc_a", "doc_b")
-    val out = Dedup.resolveClusters(pairs).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
+    // a graph this small resolves in the bounded pull's jobs; the
+    // result is a local relation, so collecting it runs none
+    val (rows, jobs) = jobsDuring(Dedup.resolveClusters(pairs).collect())
+    assert(jobs <= 3, s"$jobs jobs to resolve 8 edges")
+    val out = rows.map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
       10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L))
     // pointer-jumping: a 120-long chain converges within the round budget
-    // (O(log d) rounds; plain propagation would need 120)
+    // (O(log d) rounds; plain propagation would need 120). A graph this
+    // small resolves on the driver, so the walk is called directly
     val chain = (0L until 120L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val resolved = Dedup.resolveClusters(chain, maxIters = 12).collect()
+    val resolved = Dedup.minLabelClusters(
+      Dedup.edgeTable(chain, "doc_a", "doc_b"), maxIters = 12).collect()
     assert(resolved.length == 121 && resolved.forall(_.getLong(1) == 0L))
+  }
+
+  test("dedup clusters: the driver union-find and the distributed walk agree") {
+    import spark.implicits._
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+      .map(r => (Option(r.get(0)), Option(r.get(1)))).sortBy(_.toString)
+    def agree(pairs: org.apache.spark.sql.DataFrame): Unit = {
+      val e = Dedup.edgeTable(pairs, "doc_a", "doc_b")
+      val local = rows(Dedup.unionFindClusters(spark, e.collect(), true))
+      assert(local == rows(Dedup.minLabelClusters(e, 50)))
+    }
+    // seeded random graphs: sparse enough for many components, and
+    // random pairs bring self-loops, duplicates and reversed pairs;
+    // odd seeds use int-typed ids
+    (1 to 4).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      val g = Seq.fill(30)((rnd.nextInt(40), rnd.nextInt(40)))
+      agree(if (seed % 2 == 1) g.toDF("doc_a", "doc_b")
+        else g.map { case (a, b) => (a.toLong, b.toLong) }.toDF("doc_a", "doc_b"))
+    }
+    // the edge cases spelled out: a self-loop on an isolated node, a
+    // duplicate and a reversed pair, and NULL endpoints — NULL links
+    // nothing and yields one (null, null) row; 5 stays its own cluster
+    val edge = Seq[(Option[Long], Option[Long])]((Some(7L), Some(7L)),
+      (Some(1L), Some(2L)), (Some(1L), Some(2L)), (Some(2L), Some(1L)),
+      (None, Some(5L)), (None, None)).toDF("doc_a", "doc_b")
+    agree(edge)
+    assert(rows(Dedup.resolveClusters(edge)) == Seq((Some(1L), Some(1L)),
+      (Some(2L), Some(1L)), (Some(5L), Some(5L)), (Some(7L), Some(7L)),
+      (None, None)).sortBy(_.toString))
+    agree(Seq.empty[(Long, Long)].toDF("doc_a", "doc_b"))
+  }
+
+  test("dedup clusters: an edge table above LocalEdges takes the distributed walk") {
+    import spark.implicits._
+    // a star of LocalEdges + 1 leaves around 0, plus a 1,000-long chain
+    val leaves = Dedup.LocalEdges + 1L
+    val chain0 = 10L * leaves
+    val pairs = ((1L to leaves).map(i => (0L, i)) ++
+      (chain0 until chain0 + 1000L).map(i => (i, i + 1))).toDF("doc_a", "doc_b")
+    val (out, jobs) = jobsDuring(
+      Dedup.resolveClusters(pairs, maxIters = 16).collect())
+    // the pull alone takes at most 3 jobs; every walk round takes more
+    assert(jobs > 10, s"$jobs jobs: the driver path ran")
+    assert(out.length == leaves + 1 + 1001)
+    out.foreach { r =>
+      val want = if (r.getLong(0) < chain0) 0L else chain0
+      assert(r.getLong(1) == want, r)
+    }
   }
 
   test("events asof: latest preceding right event, ties inclusive, null when none") {

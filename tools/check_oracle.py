@@ -10,7 +10,13 @@ import duckdb
 
 outdir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/verify_out"
 oracles = json.load(open(f"{outdir}/oracle_sql.json"))
-con = duckdb.connect()
+# Explicit caps instead of DuckDB's defaults (80% of physical RAM, one
+# thread per core), so the buffer pool does not grow with the box; no
+# comparison changes. 12 GB is the floor: crawl_depth's unrolled BFS CTEs
+# fail DuckDB's own accounting below ~11 GB at sf0.01, though their
+# resident size stays near 1 GB. The dedup_substrings* oracles pass 6 GB
+# resident whatever the limit, so run this after the Verify JVM exits.
+con = duckdb.connect(config={"memory_limit": "12GB", "threads": 4})
 
 ok = fail = 0
 for name, sql in sorted(oracles.items()):
