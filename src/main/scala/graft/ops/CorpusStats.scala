@@ -574,12 +574,10 @@ object CorpusStats {
   }
 
   /** The quality-decision algebra as an ADD-columns transform (keeps the
-    * caller's columns — the streaming twin needs the text alongside the
-    * verdict). ONE owner of the rules: [[qualityFilter]] (whose DuckDB
-    * oracle pins the algebra) and `streaming.StreamJobs.streamingRecipe`
-    * both call here — a private copy drifting in either would silently
-    * un-sync batch vs streaming verdicts. Appends n_words /
-    * dup_word_milli / stopword_milli / reject_reason / kept. */
+    * caller's columns, so a caller can carry the text alongside the
+    * verdict). [[qualityFilter]], whose DuckDB oracle pins the algebra,
+    * projects its verdict columns. Appends n_words / dup_word_milli /
+    * stopword_milli / reject_reason / kept. */
   def withQualityDecision(docs: DataFrame, textCol: String,
       minWords: Int = 10, maxDupMilli: Int = 300,
       minStopMilli: Int = 5, maxStopMilli: Int = 600): DataFrame = {

@@ -6,8 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** Event-stream relational operators (windowed aggregation, ordered
   * window functions, gap-based sessionization) over the events table —
-  * the batch counterparts of the streaming metrics, and the classic
-  * training-data-pipeline session features.
+  * the classic training-data-pipeline session features.
   *
   * Numeric discipline for cross-engine oracles: aggregates over doubles
   * use order-independent forms (count/min/max or pre-quantized integer
@@ -126,11 +125,10 @@ object Events {
       .select(col("user_id"), col("event_id"), col("session_idx"))
       .orderBy("user_id", "event_id")
 
-  /** The session-gap rule [[sessionize]] and [[rangeJoinSessions]] share
-    * (and `StreamJobs.streamingSessionize` must match): per user in
-    * (ts, event_id) order, an event opens a new session when it is the
-    * user's first or follows the previous one by more than `gapSec`;
-    * `session_idx` is the running count of session starts. */
+  /** The session-gap rule [[sessionize]] and [[rangeJoinSessions]] share:
+    * per user in (ts, event_id) order, an event opens a new session when
+    * it is the user's first or follows the previous one by more than
+    * `gapSec`; `session_idx` is the running count of session starts. */
   private def withSessionIdx(events: DataFrame, gapSec: Long): DataFrame = {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts").asc, col("event_id").asc)

@@ -41,8 +41,7 @@ object Lm {
   /** The (doc_id, gram, tf) grain every LM consumer stands on — ONE
     * tokenize+explode pass, persisted because every consumer feeds it
     * to the model aggregation AND a join-back (the signature-table
-    * rule). [[exportTierModel]] shares ONE grain between its model
-    * collect and its threshold lineage instead of re-scanning. */
+    * rule). */
   private def gramGrain(docs: DataFrame, idCol: String, textCol: String,
       barrier: Boolean = true): DataFrame = {
     // spread BEFORE the gram explode (md5 per bigram is the CPU floor
@@ -127,22 +126,6 @@ object Lm {
           .as("mean_freq_milli"))
   }
 
-  /** (scored, thr): the persisted per-doc score table and the 1-row
-    * (t_tail, t_mid) threshold table — shared by [[qualityTiers]] and
-    * the [[exportTierModel]] export (which passes its own grain so the
-    * model collect and the threshold lineage scan the corpus once). */
-  private def scoredAndThresholds(docs: DataFrame, idCol: String,
-      grain: DataFrame): (DataFrame, DataFrame) = {
-    val scored = bigramScoreFromGrain(docs, idCol, grain)
-      .select(col("doc_id"), col("mean_freq_milli").as("score"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val (cum, n) = ValueHist.cumAndTotal(scored, "score")
-    val thr = cum.crossJoin(broadcast(n))
-      .agg(min(when(col("cum") * 3 >= col("n"), col("score"))).as("t_tail"),
-        min(when(col("cum") * 3 >= col("n") * 2, col("score"))).as("t_mid"))
-    (scored, thr)
-  }
-
   /** CCNet-style quality TIERING (Wenzek et al. 2020 §4.3 bucket the
     * corpus into head/middle/tail thirds by LM score): each document is
     * assigned the tercile of its [[bigramScore]] `mean_freq_milli`.
@@ -163,8 +146,14 @@ object Lm {
     * (the signature-table rule — Catalyst would re-run the whole LM
     * lineage twice). */
   def qualityTiers(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val (scored, thr) =
-      scoredAndThresholds(docs, idCol, gramGrain(docs, idCol, textCol))
+    val scored = bigramScoreFromGrain(docs, idCol,
+        gramGrain(docs, idCol, textCol))
+      .select(col("doc_id"), col("mean_freq_milli").as("score"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val (cum, n) = ValueHist.cumAndTotal(scored, "score")
+    val thr = cum.crossJoin(broadcast(n))
+      .agg(min(when(col("cum") * 3 >= col("n"), col("score"))).as("t_tail"),
+        min(when(col("cum") * 3 >= col("n") * 2, col("score"))).as("t_mid"))
     scored.crossJoin(broadcast(thr))
       .select(col("doc_id"), col("score"),
         when(col("score") <= col("t_tail"), lit("tail"))
@@ -205,32 +194,6 @@ object Lm {
         when(col("score") <= col("t_tail"), lit("tail"))
           .when(col("score") <= col("t_mid"), lit("middle"))
           .otherwise(lit("head")).as("tier"))
-  }
-
-  /** The OFFLINE half of the offline-model → online-apply deployment
-    * (CCNet trains the LM and picks thresholds on a reference corpus,
-    * then workers score new text against the FROZEN artifact): the
-    * corpus bigram model pruned to counts ≥ `minCount` (the compactness
-    * lever — rare grams contribute ~nothing to sum_cnt and dominate the
-    * model's size; minCount=1 keeps the full model and makes the
-    * streaming apply EXACTLY batch-equivalent), plus the tier value
-    * thresholds. Driver-side collect by design — this is the model
-    * EXPORT step; the model ships to executors as a broadcast (see
-    * `streaming.StreamJobs.streamingTierApply`). */
-  def exportTierModel(docs: DataFrame, idCol: String, textCol: String,
-      minCount: Long = 1L): (Map[String, Long], Long, Long) = {
-    // ONE persisted grain feeds the model collect AND the threshold
-    // lineage — the corpus is scanned and gram-aggregated once
-    val grain = gramGrain(docs, idCol, textCol)
-    val model = grain.groupBy("gram").agg(sum("tf").as("cnt"))
-      .filter(col("cnt") >= minCount)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val (_, thr) = scoredAndThresholds(docs, idCol, grain)
-    val t = thr.collect().head
-    require(!t.isNullAt(0) && !t.isNullAt(1),
-      "exportTierModel: empty corpus — no documents to derive tier " +
-        "thresholds from")
-    (model, t.getLong(0), t.getLong(1))
   }
 
   /** Tier-proportional downsampling — the move CCNet makes AFTER

@@ -11,7 +11,9 @@ import org.apache.spark.sql.functions._
 /** Spark lifecycle of the extraction pipeline (SURVEY.md §3.1 "Spark shape
   * of the same lifecycle"): read → triage/validate → one fused
   * mapPartitions kernel stage → url-hash repartition (partition = output
-  * bucket) → metrics + idempotent commit.
+  * bucket) → metrics + idempotent commit. That is one batch lifecycle:
+  * [[Jobs.extract]] → [[CheckpointedWriter.run]] →
+  * [[CheckpointedWriter.readBack]].
   *
   * Design notes for 100 TB scale:
   *  - The kernel is a NARROW map: no shuffle is required for extraction
@@ -60,9 +62,9 @@ object Jobs {
     }
   }
 
-  /** The url-hash bucket key — THE single definition: metrics, the
-    * bucketed writer, and the table layout must agree on bucket
-    * membership, so they all call this. It is exactly the partition id
+  /** The url-hash bucket key — THE single definition: [[CheckpointedWriter]]
+    * stamps it as the `bucket` column that names the bucket dirs and
+    * keys the metrics rows. It is exactly the partition id
     * `HashPartitioning(url, buckets)` computes (murmur3 seed 42, pmod
     * n), so after `repartition(buckets, col("url"))` partition k holds
     * exactly bucket k. Changing it moves every url's bucket on disk. */
@@ -165,50 +167,6 @@ object Jobs {
       .mapPartitions(it => it.map(i => SyntheticCorpus.row(i, seed)))
   }
 
-  /** Per-bucket metrics table — the FIXTURES.md `metrics` schema (incl.
-    * wall_ms, so this table unions cleanly with CheckpointedWriter's)
-    * plus the observe-side extension columns skips/truncations
-    * (documented there): the observability half of the reference's
-    * post-run verification (reference: src/ocrmypdf/_validation.py:
-    * 282-337 `report_output_file_size`; quality.py:12-44 hit-ratio
-    * metric). */
-  def metrics(extracted: Dataset[ExtractResult], buckets: Int,
-      attempt: Int, wallMs: Long = 0L): DataFrame =
-    bucketMetrics(extracted.toDF(), bucketCol(buckets), attempt, wallMs,
-      sum(when(col("outcome").startsWith("skipped"), 1L).otherwise(0L))
-        .as("skips"),
-      sum(when(col("truncated"), 1L).otherwise(0L)).as("truncations"))
-
-  /** The core of the FIXTURES.md `metrics` schema, shared by [[metrics]]
-    * and CheckpointedWriter: per `bucket`, docs, bytes and failures
-    * (outcomes starting with "error"), then any `extra` aggregates, then
-    * the lineage columns. */
-  private[spark] def bucketMetrics(rows: DataFrame, bucket: Column,
-      attempt: Int, wallMs: Long, extra: Column*): DataFrame =
-    rows.groupBy(bucket.as("url_hash_bucket"))
-      .agg(count(lit(1)).as("docs"),
-        Seq(sum(length(col("text"))).as("bytes"),
-          sum(when(col("outcome").startsWith("error"), 1L).otherwise(0L))
-            .as("failures")) ++ extra: _*)
-      .withColumn("partition_id", col("url_hash_bucket"))
-      .withColumn("wall_ms", lit(wallMs))
-      .withColumn("attempt", lit(attempt))
-      .withColumn("committed_ts", current_timestamp())
-
-  /** The one bucketed-table write: `bucket=K` dirs, ZSTD (the text-heavy
-    * output's storage contract, whatever the session codec), the
-    * caller's save mode. Dynamic partition overwrite scopes an Overwrite
-    * to the buckets present in `df` (static mode would truncate the
-    * whole table — the parquet spelling of Iceberg's
-    * overwritePartitions()); an Append ignores it. */
-  private[spark] def writeBuckets(df: DataFrame, path: String,
-      mode: SaveMode): Unit =
-    df.write.partitionBy("bucket")
-      .option("compression", "zstd")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode(mode)
-      .parquet(path)
-
   /** The path's OWN filesystem — FileSystem.get(conf) resolves the
     * default FS and throws "Wrong FS" for any other scheme (s3a/hdfs
     * output with a file:// default — the warehouse swap-in scenario). */
@@ -220,7 +178,7 @@ object Jobs {
 
 /** Idempotent, resumable bucket-committed writer — the sandbox stand-in
   * for an Iceberg snapshot commit (SURVEY.md §7.1: no Iceberg jars ship
-  * with this image; `TableIO` is the swap-in point).
+  * with this image) and the pipeline's one output path.
   *
   * Modeled on the reference's checkpoint/resume surface (reference:
   * src/ocrmypdf/_pipelines/pdf_to_hocr.py:87-110 persists per-page JSON
@@ -228,8 +186,11 @@ object Jobs {
   * completed pages). Here the unit is a url-hash bucket:
   *
   *   out/data/bucket=K/ (parquet)  — bucket payload (overwritten whole)
+  *   out/metrics/url_hash_bucket=K — the bucket's FIXTURES.md `metrics`
+  *                                   row (docs, bytes, failures)
   *   out/_commits/K                — commit marker, written AFTER the
-  *                                   bucket payload is durably on disk
+  *                                   bucket payload and metrics are
+  *                                   durably on disk
   *
   * A rerun processes only unmarked buckets, deleting any partial dir
   * first — so a crash between payload and marker re-does exactly that
@@ -316,7 +277,13 @@ object CheckpointedWriter {
         if (fs.exists(d)) fs.delete(d, true)
       }
       val t0 = System.nanoTime()
-      Jobs.writeBuckets(pending, dataDir(out), SaveMode.Append)
+      // `bucket=K` dirs, ZSTD (the text-heavy output's storage contract,
+      // whatever the session codec); Append adds the freshly cleared
+      // pending dirs next to the committed ones
+      pending.write.partitionBy("bucket")
+        .option("compression", "zstd")
+        .mode(SaveMode.Append)
+        .parquet(dataDir(out))
       val wallMs = (System.nanoTime() - t0) / 1000000L
       // per-bucket lineage metrics (FIXTURES.md `metrics` schema), written
       // BEFORE the commit markers so a marker implies metrics exist; attempt
@@ -329,11 +296,20 @@ object CheckpointedWriter {
       // carries the writer's schema explicitly: a zero-row pending set on
       // a fresh output dir leaves dataDir with only _SUCCESS, and
       // schema INFERENCE over that throws — the explicit schema makes the
-      // empty extraction a (correct) empty metrics write instead.
-      Jobs.bucketMetrics(
-          spark.read.schema(withBucket.schema).parquet(dataDir(out))
-            .filter(col("bucket").isin(todo: _*)),
-          col("bucket"), attempt, wallMs)
+      // empty extraction a (correct) empty metrics write instead. Per
+      // bucket: docs, bytes and failures (outcomes starting with "error"),
+      // then the lineage columns.
+      spark.read.schema(withBucket.schema).parquet(dataDir(out))
+        .filter(col("bucket").isin(todo: _*))
+        .groupBy(col("bucket").as("url_hash_bucket"))
+        .agg(count(lit(1)).as("docs"),
+          sum(length(col("text"))).as("bytes"),
+          sum(when(col("outcome").startsWith("error"), 1L).otherwise(0L))
+            .as("failures"))
+        .withColumn("partition_id", col("url_hash_bucket"))
+        .withColumn("wall_ms", lit(wallMs))
+        .withColumn("attempt", lit(attempt))
+        .withColumn("committed_ts", current_timestamp())
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("url_hash_bucket")

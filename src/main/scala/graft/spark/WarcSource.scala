@@ -1,7 +1,7 @@
 package graft.spark
 
 import graft.model.PageRow
-import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** WARC ingestion source — the container format Common Crawl actually
   * ships (WARC/1.0, ISO 28500): a file is a sequence of records, each a
@@ -10,8 +10,7 @@ import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
   * Content-Length framing means payloads are OPAQUE — html containing
   * "WARC/1.0" never desyncs the reader.
   *
-  * Only records of the wanted `WARC-Type` (default `response`; WET
-  * readers pass `conversion`) with a `WARC-Target-URI` become pages;
+  * Only `response` records with a `WARC-Target-URI` become pages;
   * other record types (warcinfo, request, metadata) are skipped,
   * and a structurally corrupt header ends the walk deterministically
   * (same failure-containment discipline as the extraction kernel — bad
@@ -28,15 +27,10 @@ object WarcSource {
 
   private val CRLF = "\r\n"
 
-  /** Serialize pages as WARC response records (the fixture/writer side —
-    * also how an upstream fetcher would hand us bytes). Prior text rides
-    * in a base64 extension header (it may contain any character); the
-    * lang hint in a plain one. */
   /** Header values ride on CRLF-framed lines: a CR/LF inside a value
     * (un-normalized crawl input) would inject a forged header and desync
-    * every following record, so line breaks are flattened to spaces.
-    * ONE owner, shared with [[WetSink]]. */
-  private[spark] def headerSafe(v: String): String =
+    * every following record, so line breaks are flattened to spaces. */
+  private def headerSafe(v: String): String =
     if (v.indexOf('\r') < 0 && v.indexOf('\n') < 0) v
     else v.replace('\r', ' ').replace('\n', ' ')
 
@@ -44,21 +38,18 @@ object WarcSource {
     * parquet/Spark timestamps carry MICROS — round-tripping through
     * ofEpochMilli would silently change warc_ts on re-ingest and break
     * (url, warc_ts)-keyed byte parity. getNanos carries the complete
-    * fractional second. null → the epoch sentinel. ONE owner, shared
-    * with [[WetSink]]. */
-  private[spark] def instantOf(ts: java.sql.Timestamp): java.time.Instant =
+    * fractional second. null → the epoch sentinel. */
+  private def instantOf(ts: java.sql.Timestamp): java.time.Instant =
     if (ts == null) java.time.Instant.EPOCH
     else java.time.Instant.ofEpochSecond(
       Math.floorDiv(ts.getTime, 1000L), ts.getNanos.toLong)
 
-  /** One framed WARC record: version line, headers, Content-Length,
-    * blank line, exactly-Content-Length payload, CRLF CRLF separator.
-    * ONE owner of the framing rules for every writer in this package. */
-  private[spark] def writeRecord(version: String,
-      headers: Seq[(String, String)], payload: Array[Byte],
-      out: java.io.OutputStream): Unit = {
+  /** One framed WARC/1.0 record: version line, headers, Content-Length,
+    * blank line, exactly-Content-Length payload, CRLF CRLF separator. */
+  private def writeRecord(headers: Seq[(String, String)],
+      payload: Array[Byte], out: java.io.OutputStream): Unit = {
     val sb = new StringBuilder
-    sb.append(version).append(CRLF)
+    sb.append("WARC/1.0").append(CRLF)
     headers.foreach { case (k, v) =>
       sb.append(k).append(": ").append(headerSafe(v)).append(CRLF)
     }
@@ -69,6 +60,10 @@ object WarcSource {
     out.write(s"$CRLF$CRLF".getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
+  /** Serialize pages as WARC response records (the fixture/writer side —
+    * also how an upstream fetcher would hand us bytes). Prior text rides
+    * in a base64 extension header (it may contain any character); the
+    * lang hint in a plain one. */
   def writeRecords(rows: Seq[PageRow]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     rows.foreach { r =>
@@ -82,7 +77,7 @@ object WarcSource {
             r.text.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
          else Nil)
       val payload = if (r.html == null) Array.empty[Byte] else r.html
-      writeRecord("WARC/1.0", headers, payload, out)
+      writeRecord(headers, payload, out)
     }
     out.toByteArray
   }
@@ -92,12 +87,11 @@ object WarcSource {
     * inconsistency. Total on arbitrary bytes. LAZY: advances one record
     * per pull, so the downstream flatMap streams records out of a large
     * archive instead of materializing every payload copy up front. */
-  def parseRecords(bytes: Array[Byte],
-      recordType: String = "response"): Iterator[PageRow] =
+  def parseRecords(bytes: Array[Byte]): Iterator[PageRow] =
     if (bytes == null) Iterator.empty
-    else new RecordIterator(bytes, recordType)
+    else new RecordIterator(bytes)
 
-  private final class RecordIterator(bytes: Array[Byte], recordType: String)
+  private final class RecordIterator(bytes: Array[Byte])
       extends Iterator[PageRow] {
     private var i = 0
     private var ok = true
@@ -175,7 +169,7 @@ object WarcSource {
               // payloads we skip — copying megabytes per skipped record
               // just to discard them is pure allocation pressure in the
               // per-file hot loop
-              val wanted = warcType == recordType && url != null &&
+              val wanted = warcType == "response" && url != null &&
                 date != null
               val start = i
               i += contentLength.toInt
@@ -249,24 +243,15 @@ object WarcSource {
     * (magic-sniffed, so mixed directories work). */
   def readWarcFiles(spark: SparkSession, dir: String): Dataset[PageRow] = {
     import spark.implicits._
-    readFiles(spark, dir, "*.warc*", "response")(identity)
-  }
-
-  /** THE WARC-family file reader, shared by [[readWarcFiles]] and the
-    * WET/WAT read-backs: one task per `glob`-matched file, gunzipped
-    * when its magic bytes say so, `recordType` records mapped by `f`. */
-  private[spark] def readFiles[T: Encoder](spark: SparkSession, dir: String,
-      glob: String, recordType: String)(f: PageRow => T): Dataset[T] = {
-    import spark.implicits._
     spark.read.format("binaryFile")
-      .option("pathGlobFilter", glob)
+      .option("pathGlobFilter", "*.warc*")
       .load(dir)
       .select("content")
       .as[Array[Byte]]
       .flatMap { b =>
         val raw = if (b.length >= 2 && (b(0) & 0xff) == 0x1f &&
           (b(1) & 0xff) == 0x8b) gunzipAll(b) else b
-        parseRecords(raw, recordType).map(f)
+        parseRecords(raw)
       }
   }
 }

@@ -43,76 +43,6 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
-  /** TableIO conformance suite — pins the trait semantics any
-    * implementation (incl. the eventual Iceberg swap-in) must satisfy:
-    * append accumulates, read-back preserves written values plus the
-    * bucket partition column, dynamic overwrite replaces ONLY the
-    * buckets present in the new frame, metrics append. Generic over the
-    * trait so an IcebergTableIO runs the identical assertions. */
-  private def tableIOContract(io: graft.spark.TableIO, root: String): Unit = {
-    import spark.implicits._
-    val buckets = 4
-    def bucketOf(url: String): Int =
-      Seq(url).toDF("url").select(Jobs.bucketCol(buckets)).head.getInt(0)
-    // urls spanning ≥2 buckets, discovered against the same hash the
-    // writer uses (never assume the hash→bucket map)
-    val urls = (0 until 32).map(i => s"https://h$i.example.com/p$i")
-    val byBucket = urls.groupBy(bucketOf)
-    assert(byBucket.size >= 2, s"fixture degenerate: $byBucket")
-    val (bA, bB) = { val ks = byBucket.keys.toSeq.sorted; (ks(0), ks(1)) }
-    val gen1 = (byBucket(bA).take(2) ++ byBucket(bB).take(2))
-      .map(u => (u, s"text-of-$u")).toDF("url", "text")
-
-    // 1. write + read-back: values round-trip; schema = written columns
-    //    plus the bucket partition column
-    io.writeExtracted(gen1, "t_contract", buckets)
-    val r1 = io.readPages(spark, "t_contract")
-    assert(r1.columns.toSet == Set("url", "text", "bucket"))
-    assert(r1.select("url", "text").collect().map(r =>
-        (r.getString(0), r.getString(1))).toSet ==
-      gen1.collect().map(r => (r.getString(0), r.getString(1))).toSet)
-    // bucket column agrees with the writer's hash
-    r1.select("url", "bucket").collect().foreach { r =>
-      assert(r.getInt(1) == bucketOf(r.getString(0)), r.toString)
-    }
-
-    // 2. append accumulates (no clobber)
-    val gen2 = byBucket(bA).slice(2, 3).map(u => (u, s"text-of-$u"))
-      .toDF("url", "text")
-    io.writeExtracted(gen2, "t_contract", buckets)
-    assert(io.readPages(spark, "t_contract").count() == 5)
-
-    // 3. dynamic overwrite: bucket bA fully replaced by the new frame;
-    //    bucket bB untouched
-    val gen3 = byBucket(bA).take(1).map(u => (u, "REWRITTEN"))
-      .toDF("url", "text")
-    io.overwriteExtracted(gen3, "t_contract", buckets)
-    val r3 = io.readPages(spark, "t_contract")
-      .select("url", "text", "bucket").collect()
-      .map(r => (r.getString(0), r.getString(1), r.getInt(2)))
-    val inA = r3.filter(_._3 == bA)
-    assert(inA.length == 1 && inA(0)._2 == "REWRITTEN", inA.mkString(","))
-    assert(r3.count(_._3 == bB) == 2, r3.mkString(","))
-
-    // 4. metrics sink: append semantics, schema preserved
-    io.writeMetrics(Seq((1L, "ok")).toDF("n", "k"), "t_metrics")
-    io.writeMetrics(Seq((2L, "ok")).toDF("n", "k"), "t_metrics")
-    val m = spark.read.parquet(s"$root/t_metrics")
-    assert(m.columns.toSet == Set("n", "k") && m.count() == 2)
-  }
-
-  test("TableIO contract: parquet impl satisfies the seam semantics") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_tableio").toString
-    try tableIOContract(new graft.spark.ParquetTableIO(root), root)
-    finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(root))
-        .iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
-  }
-
   test("output validator: real output conforms; seeded corruptions fire") {
     import spark.implicits._
     import graft.spark.OutputValidator
@@ -285,11 +215,9 @@ class PipelineSpec extends AnyFunSuite {
 
   test("output layout: bucket dirs + ZSTD codec as written") {
     val out = java.nio.file.Files.createTempDirectory("graft_layout").toString
-    val extracted = Jobs.extract(Jobs.syntheticPages(spark, 60), 4).toDF()
-      .withColumn("spans", to_json(col("spans")))
-    new graft.spark.ParquetTableIO(out).writeExtracted(
-      extracted, "extracted", buckets = 4)
-    val root = new java.io.File(s"$out/extracted")
+    CheckpointedWriter.run(Jobs.extract(Jobs.syntheticPages(spark, 60), 4),
+      out, 4)
+    val root = new java.io.File(CheckpointedWriter.dataDir(out))
     val bucketDirs = root.listFiles().filter(_.isDirectory).map(_.getName)
     assert(bucketDirs.toSet == (0 until 4).map(b => s"bucket=$b").toSet,
       s"bucket layout drift: ${bucketDirs.toSeq}")
@@ -310,88 +238,30 @@ class PipelineSpec extends AnyFunSuite {
       assert(n == 1, s"$d has $n part files — bucket routing drifted")
     }
     // read-back round-trips every row
-    assert(spark.read.parquet(s"$out/extracted").count() == 60)
-  }
-
-  test("compact: bin-packs small part files, never regresses, recovers") {
-    import graft.spark.Compact
-    val out = java.nio.file.Files.createTempDirectory("graft_compact").toString
-    val dir = s"$out/extracted"
-    val df = Jobs.extract(Jobs.syntheticPages(spark, 120), 8).toDF()
-      .withColumn("spans", to_json(col("spans")))
-      .withColumn("bucket",
-        pmod(xxhash64(col("url")), lit(2)).cast("int"))
-      .repartition(10) // fragment: ~10 part files per bucket
-    df.write.partitionBy("bucket").option("compression", "zstd").parquet(dir)
-    val fingerprint = spark.read.parquet(dir)
-      .agg(expr("bit_xor(xxhash64(url, text, outcome))")).collect()(0).getLong(0)
-    def files(b: Int) = new java.io.File(s"$dir/bucket=$b").listFiles()
-      .map(_.getName).filter(_.endsWith(".parquet"))
-    assert(files(0).length > 1 && files(1).length > 1)
-    val stats = Compact.compactTable(spark, dir, targetBytes = 512L << 20)
-    assert(stats.map(_.action).toSet == Set("compacted"))
-    stats.foreach(s => assert(s.filesAfter < s.filesBefore))
-    // packed to the single target-size file, still ZSTD, rows unchanged
-    (0 to 1).foreach { b =>
-      val f = files(b)
-      assert(f.length == 1 && f.forall(_.endsWith(".zstd.parquet")))
-    }
-    // count + fingerprint: bit_xor alone is blind to EVEN duplication
-    // (paired hashes cancel), so the row count is load-bearing here
-    assert(spark.read.parquet(dir).count() == 120)
-    assert(spark.read.parquet(dir)
-      .agg(expr("bit_xor(xxhash64(url, text, outcome))")).collect()(0)
-      .getLong(0) == fingerprint, "compaction changed the data")
-    // idempotent: a second pass has nothing to reclaim
-    assert(Compact.compactTable(spark, dir, targetBytes = 512L << 20)
-      .map(_.action).toSet == Set("skipped"))
-    // crash between the two swap renames: live dir gone, .trash present —
-    // the next compact run must RESTORE it (not skip the unparseable
-    // `bucket=0.trash` name), and partition discovery must again see a
-    // proper int bucket (reading through the .trash name would keep the
-    // fingerprint green while the bucket stays stranded)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val b0 = new org.apache.hadoop.fs.Path(s"$dir/bucket=0")
-    val b0t = new org.apache.hadoop.fs.Path(s"$dir/bucket=0.trash")
-    assert(fs.rename(b0, b0t))
-    Compact.compactTable(spark, dir, targetBytes = 512L << 20)
-    assert(fs.exists(b0) && !fs.exists(b0t),
-      "interrupted swap not restored: bucket=0 stranded under .trash")
-    assert(spark.read.parquet(dir)
-      .agg(expr("bit_xor(xxhash64(url, text, outcome))")).collect()(0)
-      .getLong(0) == fingerprint, "crash recovery lost rows")
-    // crash AFTER publish: live (new) and .trash (old copy) both present
-    // — readers would double-count bucket rows via partition discovery
-    // until the sweep deletes the stale trash
-    val b1 = new org.apache.hadoop.fs.Path(s"$dir/bucket=1")
-    val b1t = new org.apache.hadoop.fs.Path(s"$dir/bucket=1.trash")
-    org.apache.hadoop.fs.FileUtil.copy(fs, b1, fs, b1t, false,
-      spark.sparkContext.hadoopConfiguration)
-    assert(spark.read.parquet(dir).count() > 120) // duplicates visible
-    Compact.compactTable(spark, dir, targetBytes = 512L << 20)
-    assert(!fs.exists(b1t), "stale post-publish trash not cleaned")
-    assert(spark.read.parquet(dir).count() == 120)
-    assert(spark.read.parquet(dir)
-      .agg(expr("bit_xor(xxhash64(url, text, outcome))")).collect()(0)
-      .getLong(0) == fingerprint, "post-publish cleanup changed data")
+    assert(CheckpointedWriter.readBack(spark, out).count() == 60)
   }
 
   test("metrics: per-bucket counts reconcile with the extracted table") {
     val extracted = Jobs.extract(Jobs.syntheticPages(spark, 100), 8)
-    val m = Jobs.metrics(extracted, buckets = 4, attempt = 1)
-    val agg = m.agg(sum("docs"), sum("failures")).collect()(0)
-    assert(agg.getLong(0) == 100)
-    val failDirect = extracted.filter(col("outcome").startsWith("error")).count()
-    assert(agg.getLong(1) == failDirect)
-    // both producers share one core schema: without its extension
-    // columns, Jobs.metrics matches the writer's metrics table read back
     val out = java.nio.file.Files.createTempDirectory("graft_metrics").toString
     CheckpointedWriter.run(extracted, out, buckets = 4)
-    def cols(df: org.apache.spark.sql.DataFrame) =
-      df.schema.fields.map(f => f.name -> f.dataType).toSet
-    val written = spark.read.parquet(CheckpointedWriter.metricsDir(out))
-    assert(cols(m.drop("skips", "truncations")) == cols(written))
+    val m = spark.read.parquet(CheckpointedWriter.metricsDir(out))
+    assert(m.select("url_hash_bucket").collect().map(_.getInt(0)).sorted
+      .toSeq == (0 until 4), "expected one metrics row per bucket")
+    val agg = m.agg(sum("docs"), sum("bytes"), sum("failures")).collect()(0)
+    assert(agg.getLong(0) == 100)
+    val direct = extracted.agg(sum(length(col("text"))),
+      sum(when(col("outcome").startsWith("error"), 1L).otherwise(0L)))
+      .collect()(0)
+    assert(agg.getLong(1) == direct.getLong(0))
+    assert(agg.getLong(2) == direct.getLong(1))
+    // the written table carries the FIXTURES.md `metrics` schema
+    import org.apache.spark.sql.types._
+    assert(m.schema.fields.map(f => f.name -> f.dataType).toSet == Set(
+      "partition_id" -> IntegerType, "url_hash_bucket" -> IntegerType,
+      "docs" -> LongType, "bytes" -> LongType, "failures" -> LongType,
+      "wall_ms" -> LongType, "attempt" -> IntegerType,
+      "committed_ts" -> TimestampType))
   }
 
   test("warc source: file round-trip, non-response skip, adversarial bytes") {
@@ -461,218 +331,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(restored.take(5).map(_.url) == rows.take(5).map(_.url))
   }
 
-  test("wet sink: round-trip, rerun byte-identity, opaque payloads") {
-    import graft.spark.WetSink
-    import spark.implicits._
-    val ts = java.sql.Timestamp.from(
-      java.time.Instant.parse("2026-02-03T04:05:06.123456Z"))
-    val rows = Seq(
-      ("https://w.test/a", ts, "plain text"),
-      // payload framing must keep CRLFs and an embedded version line
-      ("https://w.test/b", ts, "line1\r\nWARC/1.0\r\nline3"),
-      ("https://w.test/c", ts, "ünïcodé — 数据"),
-      ("https://w.test/d", ts, ""),
-      ("https://w.test/e", null.asInstanceOf[java.sql.Timestamp], "no ts"))
-    val df = rows.toDF("url", "warc_ts", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_wet").toString
-    WetSink.writeWet(df, s"$dir/one", files = 3)
-    val back = WetSink.readWet(spark, s"$dir/one").collect()
-      .map(r => (r.getString(0), r.getTimestamp(1), r.getString(2)))
-      .sortBy(_._1)
-    // null ts serializes as the epoch sentinel; everything else exact
-    assert(back.map(_._1).toSeq == rows.map(_._1).sorted)
-    assert(back.map(_._3).toSeq ==
-      rows.sortBy(_._1).map(_._3))
-    assert(back.take(4).forall(_._2 == ts))
-    assert(back.last._2 == java.sql.Timestamp.from(java.time.Instant.EPOCH))
-    // rerun byte-identity: same table → same files, byte for byte
-    WetSink.writeWet(df, s"$dir/two", files = 3)
-    (0 until 3).foreach { i =>
-      val f = f"part-$i%05d.warc.wet"
-      val a = java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$dir/one", f))
-      val b = java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$dir/two", f))
-      assert(java.util.Arrays.equals(a, b), s"wet file $f not rerun-stable")
-      assert(a.nonEmpty)
-    }
-    // a WET file is invisible to the response-record reader (warcinfo +
-    // conversion records only), and vice versa the WET reader sees all
-    val rawWet = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$dir/one", "part-00000.warc.wet"))
-    assert(graft.spark.WarcSource.parseRecords(rawWet).isEmpty)
-    // ISO 28500 mandatory fields present; WARC/1.1 declared (fractional
-    // WARC-Date seconds are a 1.1 feature)
-    val head = new String(rawWet.take(400), "UTF-8")
-    assert(head.startsWith("WARC/1.1\r\n"))
-    assert(head.contains("WARC-Record-ID: <urn:uuid:")
-      && head.contains("WARC-Date: "))
-    // the real pipeline composition: extract → WET → read-back parity
-    val ex = Jobs.extract(Jobs.syntheticPages(spark, 200), 8).toDF()
-      .select(col("url"), col("warc_ts"), col("text"))
-    WetSink.writeWet(ex, s"$dir/full", files = 4)
-    val round = WetSink.readWet(spark, s"$dir/full")
-      .collect().map(r => (r.getString(0), r.getString(2))).toMap
-    val want = ex.collect().map(r => (r.getString(0), r.getString(2))).toMap
-    assert(round == want, "extract → WET → read-back text parity broken")
-    // gzip layout (the real CC shipping form): per-RECORD gzip members,
-    // same read-back, rerun byte-identity survives compression
-    WetSink.writeWet(df, s"$dir/gza", files = 2, gzip = true)
-    WetSink.writeWet(df, s"$dir/gzb", files = 2, gzip = true)
-    val gz0 = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$dir/gza", "part-00000.warc.wet.gz"))
-    assert(java.util.Arrays.equals(gz0, java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$dir/gzb", "part-00000.warc.wet.gz"))),
-      "gzip wet output not rerun-stable")
-    val gzBack = WetSink.readWet(spark, s"$dir/gza").collect()
-      .map(r => (r.getString(0), r.getString(2))).sortBy(_._1)
-    assert(gzBack.map(_._1).toSeq == rows.map(_._1).sorted
-      && gzBack.map(_._2).toSeq == rows.sortBy(_._1).map(_._3))
-    // one gzip member per record (+1 warcinfo): WALK the members
-    // exactly — inflate each body to find its end, skip the 8-byte
-    // trailer, require the next offset to start a member. (Scanning
-    // for 0x1f8b pairs would also match the pair INSIDE deflate
-    // payload bytes.)
-    def members(b: Array[Byte]): Int = {
-      val inf = new java.util.zip.Inflater(true)
-      val sink = new Array[Byte](8192)
-      var off = 0; var n = 0
-      try {
-        while (off < b.length) {
-          assert((b(off) & 0xff) == 0x1f && (b(off + 1) & 0xff) == 0x8b
-            && b(off + 2) == 8 && b(off + 3) == 0,
-            s"not a member header at offset $off")
-          inf.reset()
-          inf.setInput(b, off + 10, b.length - off - 10)
-          while (!inf.finished()) inf.inflate(sink)
-          off += 10 + (b.length - off - 10 - inf.getRemaining) + 8
-          n += 1
-        }
-      } finally inf.end()
-      n
-    }
-    val allGz = (0 until 2).map(i => java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$dir/gza", f"part-$i%05d.warc.wet.gz")))
-    assert(allGz.map(members).sum == rows.length + 2,
-      "expected one gzip member per record plus one warcinfo per file")
-  }
-
-  test("wat sink: envelope metadata, round-trip, rerun byte-identity") {
-    import graft.spark.WatSink
-    val dir = java.nio.file.Files.createTempDirectory("graft_wat").toString
-    val ex = Jobs.extract(Jobs.syntheticPages(spark, 200), 8).toDF()
-    WatSink.writeWat(ex, s"$dir/one", files = 3)
-    WatSink.writeWat(ex, s"$dir/two", files = 3)
-    (0 until 3).foreach { i =>
-      val f = f"part-$i%05d.warc.wat"
-      val a = java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$dir/one", f))
-      val b = java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$dir/two", f))
-      assert(java.util.Arrays.equals(a, b), s"wat file $f not rerun-stable")
-      assert(a.nonEmpty)
-    }
-    // metadata records are invisible to the response-record reader
-    val raw = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$dir/one", "part-00000.warc.wat"))
-    assert(graft.spark.WarcSource.parseRecords(raw).isEmpty)
-    val head = new String(raw.take(500), "UTF-8")
-    assert(head.startsWith("WARC/1.1\r\n"))
-    assert(head.contains("WARC-Type: warcinfo"))
-    // every page round-trips, and the envelope carries the page's own
-    // outcome, link list, and head metadata (parsed back out of the
-    // JSON, not substring-matched)
-    val back = WatSink.readWat(spark, s"$dir/one")
-    assert(back.count() == 200)
-    val ddl = "Envelope STRUCT<`Payload-Metadata`: STRUCT<" +
-      "`HTML-Metadata`: STRUCT<Links: ARRAY<STRUCT<url: STRING>>, " +
-      "Head: STRUCT<`Meta-Refresh`: STRING>>, " +
-      "`Extraction-Metadata`: STRUCT<outcome: STRING>>>"
-    val parsed = back
-      .select(col("url"), from_json(col("payload"),
-        org.apache.spark.sql.types.StructType.fromDDL(ddl)).as("j"))
-      .select(col("url"),
-        col("j.Envelope.Payload-Metadata.Extraction-Metadata.outcome")
-          .as("outcome"),
-        coalesce(size(
-          col("j.Envelope.Payload-Metadata.HTML-Metadata.Links")), lit(0))
-          .as("n_links"),
-        col("j.Envelope.Payload-Metadata.HTML-Metadata.Head.Meta-Refresh")
-          .as("refresh"))
-      .collect().map(r => r.getString(0) ->
-        ((r.getString(1), r.getInt(2), r.getString(3)))).toMap
-    val want = ex.select(col("url"), col("outcome"),
-        size(col("links")).as("n"), col("redirect"))
-      .collect().map(r => r.getString(0) ->
-        ((r.getString(1), r.getInt(2),
-          if (r.getString(3) == "") null else r.getString(3)))).toMap
-    assert(parsed == want,
-      "WAT envelope metadata does not match the extraction output")
-    assert(want.values.exists(_._2 > 0), "fixture has no linked pages")
-    assert(want.values.exists(_._3 != null), "fixture has no redirects")
-  }
-
-  test("warc-family sinks: one fixed row keeps its pinned bytes") {
-    import graft.model.{ExtractResult, Link, MetaTag}
-    import graft.spark.{WatSink, WetSink}
-    import spark.implicits._
-    // every WET/WAT header, payload and framing byte of one hand-built
-    // row, plain and gzip-membered; the other sink tests only compare two
-    // runs of the same code, so they cannot see the format itself drift.
-    // The .gz pins also fix the platform zlib's deflate output.
-    val ts = java.sql.Timestamp.from(
-      java.time.Instant.parse("2026-02-03T04:05:06.123456Z"))
-    val ex = Seq(ExtractResult("https://pin.test/p?q=1", ts,
-      "pinned body \u2014 \u00fcn\u00efcod\u00e9\r\nWARC/1.0 inside", Nil,
-      "ok", "graft-html/0.2", "html", "utf-8", 12, 3, truncated = false,
-      lang = "eng",
-      links = Seq(Link(0, "/next", "https://pin.test/next", chrome = true,
-        "next \"page\"")),
-      canonical = "https://pin.test/p", ldjson = Seq("{\"@type\":\"Thing\"}"),
-      metas = Seq(MetaTag("og:title", "Pin")),
-      feeds = Seq("https://pin.test/feed"), title = "Pin")).toDS().toDF()
-    val dir = java.nio.file.Files.createTempDirectory("graft_pin").toString
-    def sha256(sub: String, file: String): String =
-      java.security.MessageDigest.getInstance("SHA-256")
-        .digest(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(dir, sub, file)))
-        .map(b => f"${b & 0xff}%02x").mkString
-    val got = Seq(false, true).flatMap { gz =>
-      val sfx = if (gz) ".gz" else ""
-      WetSink.writeWet(ex, s"$dir/wet$gz", files = 1, gzip = gz)
-      WatSink.writeWat(ex, s"$dir/wat$gz", files = 1, gzip = gz)
-      Seq(s"wet$sfx" -> sha256(s"wet$gz", s"part-00000.warc.wet$sfx"),
-        s"wat$sfx" -> sha256(s"wat$gz", s"part-00000.warc.wat$sfx"))
-    }.toMap
-    assert(got == Map(
-      "wet" -> "f4487f44e222b015f312231a1746ac0247e200157ca7ce554162b96ca0cd340c",
-      "wet.gz" -> "4b7a19d3e4a5ed84217ec6cca3fe13773b5a9f8b168707b6345e16a405bbe50b",
-      "wat" -> "f9e5cd2862f4c22c9c3fe6f079354e9e85d746b21da376370e59a371d28b92f3",
-      "wat.gz" -> "ff7d2cf879db439d7efbf7d7be777ba42484037abd81f66cdc576c36621a3c84"),
-      s"WARC-family bytes drifted: $got")
-  }
-
-  test("bucket layout: writer and table IO place every url in one bucket") {
-    // the checkpointed writer and the table IO must agree on bucket
-    // membership (Jobs.bucketCol) — a url in bucket=K of one output
-    // and bucket=J of the other would split the table's layout
-    val extracted = Jobs.extract(Jobs.syntheticPages(spark, 60), 4)
-    val out = java.nio.file.Files.createTempDirectory("graft_buckets").toString
-    CheckpointedWriter.run(extracted, s"$out/ckpt", buckets = 4)
-    new graft.spark.ParquetTableIO(out).writeExtracted(
-      extracted.toDF().withColumn("spans", to_json(col("spans"))),
-      "table", buckets = 4)
-    def layout(path: String): Map[String, String] =
-      spark.read.parquet(path)
-        .select(col("url"), input_file_name().as("f")).collect()
-        .map(r => r.getString(0) ->
-          "bucket=\\d+".r.findFirstIn(r.getString(1)).get).toMap
-    val ckpt = layout(CheckpointedWriter.dataDir(s"$out/ckpt"))
-    val table = layout(s"$out/table")
-    assert(ckpt.size == 60 && ckpt.values.toSet.size == 4)
-    assert(table == ckpt, "bucket membership differs between the writers")
-  }
-
   test("bucket = partition: extract's partition k is bucket k, one file each") {
     val pages = Jobs.syntheticPages(spark, 120)
     Seq(4, 7).foreach { b =>
@@ -725,19 +383,5 @@ class PipelineSpec extends AnyFunSuite {
       .mapPartitions(it => Iterator(it.size)).collect()
     assert(parts.sum == 400)
     assert(parts.max < 400 * 7 / 10, s"skewed partition sizes: ${parts.toSeq}")
-  }
-
-  test("observe: in-flight metrics reconcile with the output") {
-    graft.spark.MetricsSink.install(spark)
-    val ds = graft.spark.MetricsSink.observed(
-      Jobs.extract(Jobs.syntheticPages(spark, 120), 8))
-    // version captured BEFORE the action: awaitLast then provably
-    // returns THIS query's row, not a stale or missing one
-    val v0 = graft.spark.MetricsSink.version()
-    val total = ds.count()
-    val m = graft.spark.MetricsSink.awaitLast(sinceVersion = v0).get
-    assert(m.docs == total)
-    assert(m.failures + m.skips + m.rejects <= m.docs)
-    assert(m.chars > 0)
   }
 }
