@@ -260,7 +260,7 @@ object HtmlEngine {
   def extractDecoded(row: PageRow, s: Sniffer.Sniffed,
       cfg: ExtractConfig): ExtractResult = {
     if (s.bytes.length > maxHtmlBytes)
-      return OutcomeRow(row, "rejected:too_large", tag, s.format, "binary")
+      return OutcomeRow(row, Outcome.RejectedTooLarge, tag, s.format, "binary")
     val (charset, decoded) = Sniffer.decodeHtml(s.bytes)
     val tokens = Tokenizer.tokenize(decoded)
     val dom = TreeBuilder.build(tokens)
@@ -295,7 +295,7 @@ object HtmlEngine {
     val pageFeeds = effBase.map(graft.extract.Links.feedsOf(dom, _))
       .getOrElse(Vector.empty)
     if (hasRefresh && isRedirect && cfg.mode != ProcessingMode.Force)
-      return OutcomeRow(row, "skipped:redirect", tag, s.format, charset,
+      return OutcomeRow(row, Outcome.SkippedRedirect, tag, s.format, charset,
         dom.nodes.length, blocks.length, dom.truncated).copy(
         redirect = redirectTarget, canonical = canonicalUrl,
         metas = pageMetas, feeds = pageFeeds, title = asm.title)
@@ -347,7 +347,7 @@ object PdfEngine {
     def reject(outcome: String): ExtractResult =
       OutcomeRow(row, outcome, tag, s.format, "binary", doc.objects.size)
     val hasXfa = acroForm.exists(_.get("XFA").isDefined)
-    if (hasXfa) return reject("rejected:xfa_form")
+    if (hasXfa) return reject(Outcome.RejectedXfaForm)
     // Doc-level policy matrix, same order as the reference's
     // validate_pdfinfo_options (src/ocrmypdf/_pipeline.py:241-279):
     //  - digital signature → reject in every mode (re-writing the text
@@ -364,10 +364,10 @@ object PdfEngine {
       case n: CosNum => (n.i & 1) != 0
       case _ => false
     }
-    if (hasSignature) return reject("rejected:digital_signature")
+    if (hasSignature) return reject(Outcome.RejectedDigitalSignature)
     val hasAcroform = acroForm.exists(_.get("Fields").isDefined)
     if (hasAcroform && cfg.mode == ProcessingMode.Redo)
-      return reject("rejected:acroform_redo")
+      return reject(Outcome.RejectedAcroformRedo)
     val isTagged = doc.catalog.exists { c =>
       c.get("StructTreeRoot").isDefined ||
       (c.get("MarkInfo").map(resolve) match {
@@ -377,7 +377,7 @@ object PdfEngine {
       })
     }
     if (isTagged && cfg.mode == ProcessingMode.Default)
-      return reject("rejected:tagged_pdf")
+      return reject(Outcome.RejectedTaggedPdf)
     var truncated = false
 
     // Per-document memo on resource-dict IDENTITY: pages usually share one

@@ -25,8 +25,6 @@ object Ranges {
     out.result()
   }
 
-  def describe(pages: Seq[Int]): String = compress(pages).mkString(",")
-
   /** Parse a page-range spec like "1-3,5,7-end" into a 1-based page set —
     * the reference's `--pages` grammar (reference: src/ocrmypdf/_options.py:
     * 72-139, with the `end` alias deferred until the page count is known,

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -26,7 +26,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * On equal-length, non-null, nonzero inputs the arithmetic sequence is
   * identical to both the HOF tree and CosineSim (sequential
   * left-to-right double accumulation), so results are bit-identical
-  * there.
+  * there. Eval and generated code both call [[CosineHof.compute]], so
+  * the two execution modes cannot drift apart.
   */
 case class CosineHof(left: Expression, right: Expression, ansi: Boolean)
     extends BinaryExpression {
@@ -46,9 +47,34 @@ case class CosineHof(left: Expression, right: Expression, ansi: Boolean)
     }
   }
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    CosineHof.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
+      ansi)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => {
+      val r = ctx.freshName("r")
+      s"""
+        java.lang.Double $r =
+          graft.functions.CosineHof.compute($a, $b, $ansi);
+        if ($r == null) ${ev.isNull} = true; else ${ev.value} = $r.doubleValue();
+      """
+    })
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): CosineHof =
+    copy(left = newLeft, right = newRight)
+
+  override def prettyName: String = "cosine_hof"
+
+}
+
+object CosineHof {
+
+  /** Static entry point shared by eval and generated code, with the HOF
+    * tree's edge rules; NULL is a null box. Under ANSI the zero
+    * denominator throws Divide's own DIVIDE_BY_ZERO error. */
+  def compute(x: ArrayData, y: ArrayData, ansi: Boolean): java.lang.Double = {
     val n = x.numElements()
     if (n != y.numElements()) return null // zip_with null padding
     var dot = 0.0; var na = 0.0; var nb = 0.0
@@ -62,66 +88,10 @@ case class CosineHof(left: Expression, right: Expression, ansi: Boolean)
     }
     val denom = math.sqrt(na) * math.sqrt(nb)
     if (denom == 0.0) {
-      if (ansi) throw CosineHofErrors.divideByZero()
+      if (ansi)
+        throw org.apache.spark.sql.graft.GraftSqlAccess.divideByZeroError()
       return null // legacy Divide: zero divisor → NULL, even for doubles
     }
     dot / denom
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val bail = ctx.freshName("bail")
-      val xi = ctx.freshName("xi")
-      val yi = ctx.freshName("yi")
-      val denom = ctx.freshName("denom")
-      val zeroDenom = if (ansi)
-        s"throw graft.functions.CosineHofErrors.divideByZero();"
-      else s"${ev.isNull} = true; // legacy Divide: zero divisor → NULL"
-      s"""
-        int $n = $a.numElements();
-        boolean $bail = ($n != $b.numElements());
-        double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-        for (int $i = 0; !$bail && $i < $n; $i++) {
-          if ($a.isNullAt($i) || $b.isNullAt($i)) { $bail = true; break; }
-          double $xi = (double) $a.getFloat($i);
-          double $yi = (double) $b.getFloat($i);
-          $dot += $xi * $yi; $na += $xi * $xi; $nb += $yi * $yi;
-        }
-        if ($bail) {
-          ${ev.isNull} = true;
-        } else {
-          double $denom = java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb);
-          if ($denom == 0.0) {
-            $zeroDenom
-          } else {
-            ${ev.value} = $dot / $denom;
-          }
-        }
-      """
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CosineHof =
-    copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "cosine_hof"
-
-}
-
-/** Error construction for CosineHof's ANSI path (top-level object so the
-  * generated Java can call the static forwarder). Delegates to the
-  * package-qualified shim that can reach the `private[sql]`
-  * QueryExecutionErrors — the thrown object is the SAME error class with
-  * the same parameters as Divide's DIVIDE_BY_ZERO. */
-object CosineHofErrors {
-  /** Typed `ArithmeticException` (unchecked) — the generated Java is a
-    * bare `throw divideByZero();`, which Janino only accepts for
-    * unchecked exception types. */
-  def divideByZero(): ArithmeticException =
-    org.apache.spark.sql.graft.GraftSqlAccess.divideByZeroError()
 }

@@ -14,9 +14,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * accumulation: dot/(sqrt(na)*sqrt(nb))) so results are bit-identical to
   * the DuckDB oracle — but evaluated in one fused loop with no per-element
   * lambda dispatch, keeping the ANN scoring stage inside
-  * WholeStageCodegen. Preference order per the build rules: compose
-  * builtins first (done), custom `Expression` with doGenCode where the
-  * builtin formulation leaves throughput on the table (this).
+  * WholeStageCodegen. Eval and generated code both call
+  * [[CosineSim.compute]], so the two execution modes cannot drift apart.
   */
 case class CosineSim(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -36,9 +35,26 @@ case class CosineSim(left: Expression, right: Expression)
     }
   }
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    CosineSim.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.CosineSim.compute($a, $b)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): CosineSim =
+    copy(left = newLeft, right = newRight)
+
+  override def prettyName: String = "cosine_sim"
+
+}
+
+object CosineSim {
+
+  /** Static entry point shared by eval and generated code: ragged inputs
+    * use the shorter length, a zero denominator gives 0.0, and a NULL
+    * element reads as 0.0f (no per-element NULL check). */
+  def compute(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
@@ -51,36 +67,6 @@ case class CosineSim(left: Expression, right: Expression)
     val denom = math.sqrt(na) * math.sqrt(nb)
     if (denom == 0.0) 0.0 else dot / denom
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val xi = ctx.freshName("xi")
-      val yi = ctx.freshName("yi")
-      val denom = ctx.freshName("denom")
-      s"""
-        int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-        double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-        for (int $i = 0; $i < $n; $i++) {
-          double $xi = (double) $a.getFloat($i);
-          double $yi = (double) $b.getFloat($i);
-          $dot += $xi * $yi; $na += $xi * $xi; $nb += $yi * $yi;
-        }
-        double $denom = java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb);
-        ${ev.value} = ($denom == 0.0) ? 0.0 : $dot / $denom;
-      """
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CosineSim =
-    copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "cosine_sim"
-
 }
 
 object GraftFunctions {
@@ -107,9 +93,7 @@ object GraftFunctions {
     NativeFunction("kll_quantiles", classOf[KllQuantiles], // mergeable quantiles
       a => KllQuantiles(a(0), litInt(a(1)), a.drop(2).map(litDouble))
         .toAggregateExpression()),
-    NativeFunction("rolling_hash", classOf[RollingHash], // O(n) Karp-Rabin windows
-      a => RollingHash(a(0), litInt(a(1)), litInt(a(2)).toLong)),
-    NativeFunction("rolling_hash2", classOf[RollingHash2], // fused dual-base windows
+    NativeFunction("rolling_hash2", classOf[RollingHash2], // O(n) dual-base windows
       a => RollingHash2(a(0), litInt(a(1)), litInt(a(2)).toLong,
         litInt(a(3)).toLong)),
     NativeFunction("md5_grams", classOf[Md5Grams], // fused md5-per-window grams

@@ -1,74 +1,35 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** `rolling_hash(text, L, B)`: the polynomial hash (base B, modulus the
-  * Mersenne prime 2^61-1) of EVERY L-codepoint window of the text, in one
-  * O(n) pass [public technique: Karp & Rabin 1987 "Efficient randomized
-  * pattern-matching algorithms"] — the scale path for exact
-  * substring-level dedup, replacing the O(n·L) md5-per-position
-  * formulation (40× less hash work at L=40). Two calls with independent
-  * bases give a 122-bit key, collision-free in practice at corpus scale.
+/** `rolling_hash2(text, L, B1, B2)`: the polynomial hashes (bases B1 and
+  * B2, modulus the Mersenne prime 2^61-1) of EVERY L-codepoint window of
+  * the text, in one O(n) pass [public technique: Karp & Rabin 1987
+  * "Efficient randomized pattern-matching algorithms"] — the scale path
+  * for exact substring-level dedup, replacing the O(n·L) md5-per-position
+  * formulation. Each element is the two 61-bit hashes packed big-endian
+  * into a 16-byte binary: a 122-bit key, collision-free in practice at
+  * corpus scale, and the same width and type as the md5 formulation's
+  * `unhex(md5(...))` gram key, so the downstream count/join machinery is
+  * shared unchanged.
   *
-  * Exactness: h(window) = Σ c_j·B^(L-1-j) mod (2^61-1) over Unicode
+  * Exactness: each half is Σ c_j·B^(L-1-j) mod (2^61-1) over Unicode
   * CODEPOINTS — a pure mathematical function a SQL oracle can recompute
   * per-position with HUGEINT arithmetic, and which the md5-gram
   * formulation must agree with on which positions collide (equal windows
   * ⇔ equal hashes, up to negligible collision mass).
-  */
-case class RollingHash(child: Expression, len: Int, base: Long)
-    extends UnaryExpression {
-
-  require(len >= 1, "rolling_hash needs len >= 1")
-  require(base >= 2 && base < RollingHashImpl.P, "bad rolling_hash base")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"rolling_hash needs a string arg, got ${other.simpleString}")
-    }
-
-  override protected def nullSafeEval(input: Any): Any =
-    RollingHashImpl.compute(input.asInstanceOf[UTF8String], len, base)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.RollingHashImpl.compute($c, $len, ${base}L)")
-
-  override protected def withNewChildInternal(newChild: Expression): RollingHash =
-    copy(child = newChild)
-
-  override def prettyName: String = "rolling_hash"
-  // (UnaryExpression's default eval already does the null-gated
-  // nullSafeEval dispatch — no override needed)
-}
-
-/** `rolling_hash2(text, L, B1, B2)`: BOTH independent-base polynomial
-  * hash streams of every L-codepoint window, fused into ONE pass and ONE
-  * output column — each element is the two 61-bit hashes packed
-  * big-endian into a 16-byte binary (the same width and type as the md5
-  * formulation's `unhex(md5(...))` gram key, so the downstream
-  * count/join machinery is shared unchanged).
   *
-  * Why fused: the two-call form (`rolling_hash(t,L,B1)` +
-  * `rolling_hash(t,L,B2)` + `arrays_zip` + struct explode) materializes
-  * THREE O(n) arrays per document and decodes the codepoints twice;
-  * under the authoritative bench that allocation overhead made the
-  * "O(n) scale path" slower than the md5 form it replaces. This form
-  * decodes once, runs both recurrences in the same loop, and feeds a
-  * single `posexplode` — one array, one generator, one binary key. */
+  * Why fused: the earlier two-call form (one single-base hash array per
+  * base + `arrays_zip` + struct explode) materialized THREE O(n) arrays
+  * per document and decoded the codepoints twice; under the
+  * authoritative bench that allocation overhead made the "O(n) scale
+  * path" slower than the md5 form it replaces. This form decodes once,
+  * runs both recurrences in the same loop, and feeds a single
+  * `posexplode` — one array, one generator, one binary key. */
 case class RollingHash2(child: Expression, len: Int, base1: Long, base2: Long)
     extends UnaryExpression {
 
@@ -127,48 +88,9 @@ object RollingHashImpl {
     if (r >= P) r - P else r
   }
 
-  def compute(s: UTF8String,
-      l: Int, base: Long): org.apache.spark.sql.catalyst.util.ArrayData = {
-    val str = s.toString
-    val n = str.codePointCount(0, str.length)
-    if (n < l)
-      return org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-        .fromPrimitiveArray(Array.emptyLongArray)
-    val cps = new Array[Long](n)
-    var ci = 0; var off = 0
-    while (off < str.length) {
-      val cp = str.codePointAt(off)
-      cps(ci) = cp.toLong; ci += 1
-      off += Character.charCount(cp)
-    }
-    // B^(l-1) mod P for the outgoing-codepoint removal
-    var bl = 1L
-    var j = 0
-    while (j < l - 1) { bl = mulmod(bl, base); j += 1 }
-    // primitive long array → UnsafeArrayData: no per-window Long boxing
-    // (the dedup scale path computes one window hash per character)
-    val out = new Array[Long](n - l + 1)
-    var h = 0L
-    j = 0
-    while (j < l) { h = addmod(mulmod(h, base), cps(j) % P); j += 1 }
-    out(0) = h
-    var i = 1
-    while (i <= n - l) {
-      // h ← (h - c_out·B^(l-1))·B + c_in  (mod P)
-      val drop = mulmod(cps(i - 1) % P, bl)
-      h = addmod(h, P - drop) // subtraction as addition of the complement
-      h = addmod(mulmod(h, base), cps(i + l - 1) % P)
-      out(i) = h
-      i += 1
-    }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(out)
-  }
-
-  /** Fused twin of `compute`: one codepoint decode, both recurrences in
-    * one loop, each window's (h1, h2) packed big-endian into 16 bytes —
-    * value-identical to running `compute` twice and concatenating the
-    * big-endian encodings per position. */
+  /** One codepoint decode, both recurrences in one loop, each window's
+    * (h1, h2) packed big-endian into 16 bytes; fewer than `l` codepoints
+    * give an empty array. */
   def compute2(s: UTF8String, l: Int, base1: Long,
       base2: Long): org.apache.spark.sql.catalyst.util.ArrayData = {
     val str = s.toString

@@ -121,16 +121,37 @@ final case class ExtractResult(
     cells: Seq[TableCell] = Nil
 )
 
+/** The closed outcome vocabulary: every value the engine emits, plus the
+  * `error:<class>` family. */
 object Outcome {
   val Ok = "ok"
   val SkippedEmpty = "skipped:empty"
   val SkippedEncrypted = "skipped:encrypted"
   val SkippedNoText = "skipped:no_text"
   val SkippedPriorText = "skipped:prior_text"
-  val RejectedPriorText = "rejected:prior_text"
-  val StrippedPriorText = "stripped:prior_text"
   val SkippedNothingToStrip = "skipped:nothing_to_strip"
-  def error(cls: String): String = s"error:$cls"
+  val SkippedRedirect = "skipped:redirect"
+  val RejectedPriorText = "rejected:prior_text"
+  val RejectedTooLarge = "rejected:too_large"
+  val RejectedXfaForm = "rejected:xfa_form"
+  val RejectedDigitalSignature = "rejected:digital_signature"
+  val RejectedAcroformRedo = "rejected:acroform_redo"
+  val RejectedTaggedPdf = "rejected:tagged_pdf"
+  val StrippedPriorText = "stripped:prior_text"
+
+  /** Every fixed outcome; failures are the `error:<class>` family. */
+  val all: Seq[String] = Seq(Ok, SkippedEmpty, SkippedEncrypted,
+    SkippedNoText, SkippedPriorText, SkippedNothingToStrip, SkippedRedirect,
+    RejectedPriorText, RejectedTooLarge, RejectedXfaForm,
+    RejectedDigitalSignature, RejectedAcroformRedo, RejectedTaggedPdf,
+    StrippedPriorText)
+
+  private val ErrorPrefix = "error:"
+  def error(cls: String): String = ErrorPrefix + cls
+
+  /** The failure predicate over an outcome column. */
+  def isFailure(outcome: org.apache.spark.sql.Column)
+      : org.apache.spark.sql.Column = outcome.startsWith(ErrorPrefix)
 }
 
 /** Prior-text processing mode — the reference's ProcessingMode enum

@@ -85,24 +85,27 @@ object Dedup {
       .select(col("doc_id"), col("nkey"), col("keep_id"), col("group_n"))
   }
 
+  /** Minhashes per signature ([[minhashLsh]], [[minhashIncremental]]):
+    * the width the native `minhash_sigs` computes. */
+  private val MinhashK = 8
+
+  /** LSH bands per signature, each of MinhashK / MinhashBands minhashes. */
+  private val MinhashBands = 4
+
   /** The (id, sig) signature projection shared by [[minhashLsh]] and
     * [[minhashIncremental]] — ONE owner so batch and incremental dedup
-    * can never hash differently. The default k takes the native fused
-    * expression (graft.functions.MinhashSigs — same md5 minima, no
-    * per-shingle allocation; equality with the builtin spec is
-    * test-pinned); other k values fall back to the builtin form. */
-  private def sigsOf(docs: DataFrame, idCol: String, textCol: String,
-      k: Int): DataFrame = {
+    * can never hash differently. The native fused expression
+    * (graft.functions.MinhashSigs) computes the same md5 minima as the
+    * builtin [[shinglesExpr]] + [[minhashExpr]] spec with no per-shingle
+    * allocation; their equality is test-pinned. */
+  private def sigsOf(docs: DataFrame, idCol: String,
+      textCol: String): DataFrame = {
     // spread BEFORE the signature projection: the k×shingles md5 work is
     // the operator's CPU floor and must not serialize on one scan split
     val base = Par.spread(
       docs.select(col(idCol).as("id"), col(textCol).as("mh_text")), "id")
-    if (k == 8) {
-      graft.functions.GraftFunctions.register(docs.sparkSession)
-      base.select(col("id"), expr("minhash_sigs(mh_text)").as("sig"))
-    } else base
-      .select(col("id"), shinglesExpr("mh_text").as("sh"))
-      .select(col("id"), minhashExpr("sh", k).as("sig"))
+    graft.functions.GraftFunctions.register(docs.sparkSession)
+    base.select(col("id"), expr("minhash_sigs(mh_text)").as("sig"))
   }
 
   /** One row per (doc, band): `bandSql` yields each doc's array of band
@@ -122,13 +125,14 @@ object Dedup {
     * inlines the k×shingles md5 tree into BOTH join sides and into
     * est_jaccard, recomputing it ~6× per row. At warehouse scale this
     * persist is a real signature table (write once, join many). */
-  private def bandedCapped(sig: DataFrame, k: Int, bands: Int,
-      maxBucket: Int): DataFrame =
+  private def bandedCapped(sig: DataFrame, maxBucket: Int): DataFrame = {
+    val rows = MinhashK / MinhashBands
     // window shape (r06): two-phase cap + distinct-early pairs benched
     // 1.89 s vs 1.25 s for this one (interleaved medians)
     Cap.window(banded(sig,
-      s"transform(sequence(0, ${bands - 1}), b -> md5(array_join(slice(sig, b*${k / bands}+1, ${k / bands}), '|')))"),
+      s"transform(sequence(0, ${MinhashBands - 1}), b -> md5(array_join(slice(sig, b*$rows+1, $rows), '|')))"),
       Seq("band_idx", "band"), maxBucket)
+  }
 
   /** est_jaccard per distinct pair of banded matches carrying
     * `sig_a`/`sig_b`, keyed by the pair columns `a`, `b`. The duplicate-
@@ -138,36 +142,28 @@ object Dedup {
     * zip/filter/size HOF runs once per DISTINCT pair instead of once per
     * band copy (benched −0.1 s vs est-then-distinct; the same collapse
     * via a distinct-pairs + sig re-attach join benched −0.6 s WORSE). */
-  private def estJaccard(matches: DataFrame, a: String, b: String,
-      k: Int): DataFrame =
+  private def estJaccard(matches: DataFrame, a: String,
+      b: String): DataFrame =
     matches.groupBy(a, b)
       .agg(first(col("sig_a")).as("sig_a"), first(col("sig_b")).as("sig_b"))
       .select(col(a), col(b),
-        expr(s"size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v)) / cast($k as double)")
+        expr(s"size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v)) / cast($MinhashK as double)")
           .as("est_jaccard"))
 
-  /** MinHash + LSH near-dup candidates. k minhashes, `bands` bands of
-    * k/bands rows each. Returns (doc_a, doc_b, est_jaccard) for pairs
+  /** MinHash + LSH near-dup candidates. 8 minhashes, 4 bands of 2 rows
+    * each. Returns (doc_a, doc_b, est_jaccard) for pairs
     * sharing ≥1 band, est_jaccard = fraction of equal minhashes.
     *
-    * Shuffle profile: explode to (band_idx, band, id) — k/bands
+    * Shuffle profile: explode to (band_idx, band, id) — 4 band
     * strings per doc — then a self-join on the band key. At 10^12 docs
     * the band table is ~4×10^12 short rows, hash-partitioned by band
     * key; the join never touches document text. `maxBucket` caps
     * pathological buckets (e.g. boilerplate-identical docs) to bound the
     * quadratic blowup — the skew guard. */
   def minhashLsh(docs: DataFrame, idCol: String, textCol: String,
-      k: Int = 8, bands: Int = 4, maxBucket: Int = 50): DataFrame = {
-    // k < bands would band zero-length slices (every doc hashes md5('')
-    // into every bucket → the skew cap silently drops EVERYTHING);
-    // k % bands != 0 would silently exclude the tail minhashes
-    require(bands >= 1 && k >= bands && k % bands == 0,
-      s"minhashLsh needs k divisible by bands, got k=$k bands=$bands")
-    val sized = bandedCapped(sigsOf(docs, idCol, textCol, k),
-      k, bands, maxBucket)
-    estJaccard(Cap.pairs(sized, Seq("band_idx", "band"), "sig"),
-      "doc_a", "doc_b", k)
-  }
+      maxBucket: Int = 50): DataFrame =
+    estJaccard(Cap.pairs(bandedCapped(sigsOf(docs, idCol, textCol),
+      maxBucket), Seq("band_idx", "band"), "sig"), "doc_a", "doc_b")
 
   /** Distinct-shingle intersection table: one row per co-shingled pair
     * (doc_a < doc_b) with `inter` shared-shingle count and both docs'
@@ -646,21 +642,18 @@ object Dedup {
     * hot regardless of which crawl it arrived in), the banded join
     * shuffles compact (band, hash, id) rows, and text never moves. */
   def minhashIncremental(existing: DataFrame, incoming: DataFrame,
-      idCol: String, textCol: String, k: Int = 8, bands: Int = 4,
-      maxBucket: Int = 50): DataFrame = {
-    require(bands >= 1 && k >= bands && k % bands == 0,
-      s"minhashIncremental needs k divisible by bands, got k=$k bands=$bands")
-    val sig = sigsOf(existing, idCol, textCol, k)
+      idCol: String, textCol: String, maxBucket: Int = 50): DataFrame = {
+    val sig = sigsOf(existing, idCol, textCol)
       .withColumn("is_new", lit(false))
-      .unionAll(sigsOf(incoming, idCol, textCol, k)
+      .unionAll(sigsOf(incoming, idCol, textCol)
         .withColumn("is_new", lit(true)))
-    val sized = bandedCapped(sig, k, bands, maxBucket)
+    val sized = bandedCapped(sig, maxBucket)
     // asymmetric, not Cap.pairs: only incoming × existing pairs count
     val a = sized.filter(col("is_new")).select(col("band_idx"),
       col("band"), col("id").as("doc_id"), col("sig").as("sig_a"))
     val b = sized.filter(!col("is_new")).select(col("band_idx"),
       col("band"), col("id").as("dup_of"), col("sig").as("sig_b"))
-    estJaccard(a.join(b, Seq("band_idx", "band")), "doc_id", "dup_of", k)
+    estJaccard(a.join(b, Seq("band_idx", "band")), "doc_id", "dup_of")
   }
 
   /** [[minhashApply]]'s embedding-space twin: sign-LSH cosine pairs →

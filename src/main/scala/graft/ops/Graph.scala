@@ -155,9 +155,10 @@ $steps"""
     * 100 TB shape: the HOST graph is orders smaller than the page
     * table (edges come pre-aggregated); every iteration shuffles only
     * (host, long) pairs, max-norms ride broadcast one-row aggregates
-    * (never a driver collect), and `iters` is fixed so the lineage is
-    * a bounded join tree with per-step persist barriers (each step's
-    * scores feed the next half-step AND the final join). */
+    * (never a driver collect). Each half-step takes a `localCheckpoint`
+    * lineage CUT, as [[bfsDepth]] does: `norm` reads its input twice
+    * (the max aggregate and the join) and each input holds the previous
+    * half-step, so a lazy plan would grow ~4× per iteration. */
   def hits(edges: DataFrame, iters: Int = 3): DataFrame = {
     val e = edges.select(col("src"), col("dst"), col("w"))
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -181,11 +182,11 @@ $steps"""
       auth = norm(
         e.join(hub, e("src") === hub("host"))
           .groupBy(e("dst").as("host")).agg(sum(expr("w * h")).as("s")), "a")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(true)
       hub = norm(
         e.join(auth, e("dst") === auth("host"))
           .groupBy(e("src").as("host")).agg(sum(expr("w * a")).as("s")), "h")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(true)
     }
     auth.join(hub, Seq("host"))
       .select(col("host"), col("a").as("auth_micro"), col("h").as("hub_micro"))

@@ -1,6 +1,6 @@
 package graft.spark
 
-import graft.model.{ExtractConfig, ExtractResult, PageRow}
+import graft.model.{ExtractConfig, ExtractResult, Outcome, PageRow}
 import graft.engine.Extractor
 import graft.extract.Ranges
 import graft.gen.SyntheticCorpus
@@ -109,29 +109,17 @@ object Jobs {
     * intervals become an OR-of-BETWEENs predicate on a 1-BASED position
     * column, which Catalyst pushes into the parquet scan (shows up as
     * `PushedFilters: [Or(And(GreaterThanOrEqual...` — row groups outside
-    * every interval are skipped without decoding). */
-  def subsetFilter(posCol: Column, spec: String, total: Int,
-      firstPosValue: Long = 1L): Column =
-    Ranges.intervals(spec, total)
-      .map { case (lo, hi) =>
-        // spec position p (1-based) lives at column value p - 1 + first
-        val l = lo - 1L + firstPosValue
-        val h = hi - 1L + firstPosValue
-        if (l == h) posCol === lit(l)
-        else posCol >= lit(l) && posCol <= lit(h)
-      }
-      .reduceOption(_ || _)
-      .getOrElse(lit(false))
-
-  /** As `subsetFilter`, but the `end` alias stays OPEN-ENDED
-    * (posCol >= lo) instead of being resolved against a row count — at
-    * warehouse scale the total is table metadata you should not have to
-    * fetch (let alone count()), and `GreaterThanOrEqual` pushes into the
-    * parquet scan identically. */
+    * every interval are skipped without decoding).
+    *
+    * The `end` alias stays OPEN-ENDED (posCol >= lo) instead of being
+    * resolved against a row count — at warehouse scale the total is
+    * table metadata you should not have to fetch (let alone count()),
+    * and `GreaterThanOrEqual` pushes into the parquet scan identically. */
   def subsetFilterOpenEnd(posCol: Column, spec: String,
       firstPosValue: Long = 1L): Column =
     Ranges.intervals(spec, Int.MaxValue)
       .map { case (lo, hi) =>
+        // spec position p (1-based) lives at column value p - 1 + first
         val l = lo - 1L + firstPosValue
         if (hi == Int.MaxValue) posCol >= lit(l)
         else {
@@ -297,14 +285,14 @@ object CheckpointedWriter {
       // a fresh output dir leaves dataDir with only _SUCCESS, and
       // schema INFERENCE over that throws — the explicit schema makes the
       // empty extraction a (correct) empty metrics write instead. Per
-      // bucket: docs, bytes and failures (outcomes starting with "error"),
+      // bucket: docs, bytes and failures (`Outcome.isFailure`),
       // then the lineage columns.
       spark.read.schema(withBucket.schema).parquet(dataDir(out))
         .filter(col("bucket").isin(todo: _*))
         .groupBy(col("bucket").as("url_hash_bucket"))
         .agg(count(lit(1)).as("docs"),
           sum(length(col("text"))).as("bytes"),
-          sum(when(col("outcome").startsWith("error"), 1L).otherwise(0L))
+          sum(when(Outcome.isFailure(col("outcome")), 1L).otherwise(0L))
             .as("failures"))
         .withColumn("partition_id", col("url_hash_bucket"))
         .withColumn("wall_ms", lit(wallMs))

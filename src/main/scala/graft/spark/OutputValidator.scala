@@ -1,5 +1,6 @@
 package graft.spark
 
+import graft.model.Outcome
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -13,8 +14,7 @@ import org.apache.spark.sql.functions._
   *
   * Checked invariants (each emits one violation row per offending doc):
   *  - `outcome_vocab`: outcome is in the closed vocabulary
-  *    ok | skipped:{empty,encrypted,no_text,prior_text,nothing_to_strip}
-  *    | rejected:prior_text | stripped:prior_text | error:<class>.
+  *    `graft.model.Outcome.all` | error:<class>.
   *  - `dir_enum`: dir ∈ {ltr, rtl}.
   *  - `lang_enum`: lang is a 2-3-letter lowercase code (incl. "und").
   *  - `span_bounds`: every span has 0 ≤ start ≤ end ≤ len(text) in
@@ -34,16 +34,10 @@ import org.apache.spark.sql.functions._
   * the pass shuffles only the (rare) violation rows for display. */
 object OutputValidator {
 
-  /** Closed outcome vocabulary: model/Types.scala `Outcome` plus the
-    * engine's triage/policy rejects (Engine.scala validation gates). */
+  /** Closed outcome vocabulary: `Outcome.all` plus `error:<class>` (the
+    * fixed values hold no regex metacharacters, so each matches itself). */
   val outcomePattern: String =
-    "^(ok" +
-      "|skipped:(empty|encrypted|no_text|prior_text|nothing_to_strip" +
-      "|redirect)" +
-      "|rejected:(prior_text|acroform_redo|digital_signature|tagged_pdf" +
-      "|too_large|xfa_form)" +
-      "|stripped:prior_text" +
-      "|error:[A-Za-z0-9_.$]+)$"
+    (Outcome.all :+ Outcome.error("[A-Za-z0-9_.$]+")).mkString("^(", "|", ")$")
 
   private val nfkcDrifts = udf { (s: String) =>
     s != null && !java.text.Normalizer.isNormalized(

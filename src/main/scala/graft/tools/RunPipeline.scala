@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.model.Outcome
 import graft.spark.{CheckpointedWriter, Jobs}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -49,7 +50,7 @@ object RunPipeline {
       countDistinct(col("url")).as("urls"),
       expr("bit_xor(xxhash64(url, text, outcome))").as("checksum"),
       sum(length(col("text"))).as("bytes"),
-      sum(when(col("outcome").startsWith("error"), 1L).otherwise(0L))
+      sum(when(Outcome.isFailure(col("outcome")), 1L).otherwise(0L))
         .as("failures")).collect()(0)
     val m = spark.read.parquet(CheckpointedWriter.metricsDir(out))
       .agg(sum("docs"), sum("bytes"), sum("failures")).collect()(0)

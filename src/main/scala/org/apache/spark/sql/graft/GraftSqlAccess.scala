@@ -11,11 +11,9 @@ import org.apache.spark.sql.errors.QueryExecutionErrors
 object GraftSqlAccess {
 
   /** Divide's ANSI DIVIDE_BY_ZERO, without positional query context (the
-    * rewrite site does not retain the SQL text origin). Typed
-    * `ArithmeticException` (the concrete type Spark returns) — codegen
-    * emits a bare `throw <forwarder>();`, and Janino rejects throwing a
-    * checked `Throwable` from generated code, so the unchecked static
-    * type is load-bearing for whole-stage codegen. */
+    * rewrite site does not retain the SQL text origin). Thrown from
+    * `CosineHof.compute`, the one method both eval and generated code
+    * call, so generated Java never spells the throw itself. */
   def divideByZeroError(): ArithmeticException =
     QueryExecutionErrors.divideByZeroError(null)
 }

@@ -497,24 +497,39 @@ class OpsSpec extends AnyFunSuite {
           (acc * b + c) mod P).toLong
       }
     }
+    // the two big-endian 61-bit halves of each packed window key
+    def halves(s: String, l: Int, b1: Long, b2: Long): Seq[(Long, Long)] = {
+      val a = RollingHashImpl.compute2(UTF8String.fromString(s), l, b1, b2)
+      (0 until a.numElements()).map { i =>
+        val bb = java.nio.ByteBuffer.wrap(a.getBinary(i))
+        (bb.getLong(), bb.getLong())
+      }
+    }
     val samples = Seq(
       "hello world this is a rolling hash test string",
       "数据处理管道提取文档内容分析系统网络页面文本", // multibyte CJK
       "emoji 😀 astral codepoints 🚀 mix", // surrogate pairs
       "aaaaaaaaaaaaaaaaaaaa") // degenerate repetition
-    for (s <- samples; l <- Seq(3, 8); b <- Seq(131L, 137L)) {
-      val got = RollingHashImpl.compute(UTF8String.fromString(s), l, b)
-        .toLongArray().toSeq
-      assert(got == reference(s, l, b), s"drift on '$s' l=$l b=$b")
+    for (s <- samples; l <- Seq(3, 8); (b1, b2) <- Seq((131L, 137L), (137L, 131L))) {
+      val got = halves(s, l, b1, b2)
+      assert(got.map(_._1) == reference(s, l, b1), s"drift on '$s' l=$l b=$b1")
+      assert(got.map(_._2) == reference(s, l, b2), s"drift on '$s' l=$l b=$b2")
     }
     // shorter than window → empty
-    assert(RollingHashImpl.compute(UTF8String.fromString("ab"), 3, 131L)
-      .numElements() == 0)
+    assert(halves("ab", 3, 131L, 137L).isEmpty)
   }
 
   test("rolling hash2: fused dual-base pass is the packed twin of compute") {
     import graft.functions.RollingHashImpl
+    import RollingHashImpl.{addmod, mulmod}
     import org.apache.spark.unsafe.types.UTF8String
+    // single-base `compute`: each window hashed on its own by Horner's
+    // rule in the kernel's modular arithmetic, no rolling update
+    def compute(s: String, l: Int, b: Long): Seq[Long] = {
+      val cps = s.codePoints().toArray
+      (0 to cps.length - l).map(i =>
+        cps.slice(i, i + l).foldLeft(0L)((h, c) => addmod(mulmod(h, b), c)))
+    }
     def bePack(h1: Long, h2: Long): Seq[Byte] =
       (java.nio.ByteBuffer.allocate(16).putLong(h1).putLong(h2).array()).toSeq
     val samples = Seq(
@@ -524,8 +539,8 @@ class OpsSpec extends AnyFunSuite {
       "aaaaaaaaaaaaaaaaaaaa")
     for (s <- samples; l <- Seq(3, 8)) {
       val u = UTF8String.fromString(s)
-      val h1 = RollingHashImpl.compute(u, l, 131L).toLongArray()
-      val h2 = RollingHashImpl.compute(u, l, 137L).toLongArray()
+      val h1 = compute(s, l, 131L)
+      val h2 = compute(s, l, 137L)
       val fused = RollingHashImpl.compute2(u, l, 131L, 137L)
       assert(fused.numElements() == h1.length)
       for (i <- h1.indices)
@@ -803,7 +818,6 @@ class OpsSpec extends AnyFunSuite {
       "minhash_sigs" -> "minhash_sigs(CAST(NULL AS STRING))",
       "kmv_minima" -> "kmv_minima(CAST(NULL AS STRING), 4)",
       "kll_quantiles" -> "kll_quantiles(CAST(NULL AS DOUBLE), 8, 0.5)",
-      "rolling_hash" -> "rolling_hash(CAST(NULL AS STRING), 4, 131)",
       "rolling_hash2" -> "rolling_hash2(CAST(NULL AS STRING), 4, 131, 137)",
       "md5_grams" -> "md5_grams(CAST(NULL AS STRING), 4)")
     assert(GraftFunctions.table.map(_.name).sorted == nullCalls.keys.toSeq.sorted)
@@ -1663,16 +1677,15 @@ class OpsSpec extends AnyFunSuite {
     def row(x: Array[Float], y: Array[Float]) = new GenericInternalRow(
       Array[Any](ArrayData.toArrayData(x), ArrayData.toArrayData(y)))
     // GenerateUnsafeProjection has NO interpreted fallback: a Janino
-    // rejection of the generated code (e.g. a `throw` whose static type
-    // is a checked Throwable) surfaces HERE as an exception, where a
-    // whole-stage-codegen plan would silently downgrade the entire
-    // stage to interpreted execution. This is the regression net for
-    // the ANSI divide-by-zero throw path.
+    // rejection of the generated code surfaces HERE as an exception,
+    // where a whole-stage-codegen plan would silently downgrade the
+    // entire stage to interpreted execution. This is the regression net
+    // for the ANSI divide-by-zero throw path and the NULL unboxing.
     val ansi = GenerateUnsafeProjection.generate(
       Seq(graft.functions.CosineHof(a, b, ansi = true)))
     assert(ansi(row(Array(3f, 0f), Array(3f, 0f))).getDouble(0) == 1.0)
-    // the generated throw must be the SAME unchecked ANSI error Divide
-    // raises — intercept[ArithmeticException] pins the static type
+    // the throw must be the SAME unchecked ANSI error Divide raises —
+    // intercept[ArithmeticException] pins the type
     val e = intercept[ArithmeticException] {
       ansi(row(Array(0f, 0f), Array(1f, 1f)))
     }
@@ -1681,6 +1694,98 @@ class OpsSpec extends AnyFunSuite {
       Seq(graft.functions.CosineHof(a, b, ansi = false)))
     assert(legacy(row(Array(0f, 0f), Array(1f, 1f))).isNullAt(0))
     assert(legacy(row(Array(1f, 2f), Array(1f))).isNullAt(0))
+  }
+
+  test("cosine_sim: edge contract pinned in eval and codegen") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+    import org.apache.spark.sql.types.{ArrayType, FloatType}
+    val cos = graft.functions.CosineSim(
+      BoundReference(0, ArrayType(FloatType), nullable = true),
+      BoundReference(1, ArrayType(FloatType), nullable = true))
+    val gen = GenerateUnsafeProjection.generate(Seq(cos))
+    // one result per mode: interpreted eval, then the generated code
+    def both(x: ArrayData, y: ArrayData): Seq[Option[Double]] = {
+      val r: InternalRow = new GenericInternalRow(Array[Any](x, y))
+      val g = gen(r)
+      Seq(Option(cos.eval(r)).map(_.asInstanceOf[Double]),
+        if (g.isNullAt(0)) None else Some(g.getDouble(0)))
+    }
+    def arr(v: Float*): ArrayData = ArrayData.toArrayData(v.toArray)
+    // ragged inputs: the shorter length, the longer tail ignored
+    assert(both(arr(3f, 4f, 100f), arr(3f, 4f)) == Seq(Some(1.0), Some(1.0)))
+    assert(both(arr(1f, 0f), arr(1f, 1f, 9f)) ==
+      Seq.fill(2)(Some(1.0 / math.sqrt(2.0))))
+    // zero vector (and empty input): 0.0, not NaN and not NULL
+    assert(both(arr(0f, 0f), arr(1f, 2f)) == Seq(Some(0.0), Some(0.0)))
+    assert(both(arr(), arr()) == Seq(Some(0.0), Some(0.0)))
+    // NULL array: NULL
+    assert(both(null, arr(1f)) == Seq(None, None))
+    assert(both(arr(1f), null) == Seq(None, None))
+    // NULL element: read as 0.0f, no NULL check (recorded, not designed)
+    val withNull = new GenericArrayData(Array[Any](1f, null))
+    assert(both(withNull, arr(1f, 5f)) ==
+      Seq.fill(2)(Some(1.0 / (1.0 * math.sqrt(26.0)))))
+  }
+
+  test("native kernels: interpreted eval and generated code agree") {
+    import scala.util.Try
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, GenericInternalRow, Literal}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.expressions.InterpretedUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+    import org.apache.spark.sql.types.{ArrayType, FloatType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.functions.{CosineHof, GraftFunctions}
+    val str = BoundReference(0, StringType, nullable = true)
+    val a = BoundReference(0, ArrayType(FloatType), nullable = true)
+    val b = BoundReference(1, ArrayType(FloatType), nullable = true)
+    // L = 8 for the windowed kernels: "abc" is shorter than L
+    val texts: Seq[InternalRow] = Seq(
+      "naïve café — 数据处理管道 emoji 😀 astral 🚀 mix of scripts",
+      "the quick brown fox jumps over the lazy dog", "", "abc", null)
+      .map(t => new GenericInternalRow(Array[Any](UTF8String.fromString(t))))
+    def arr(v: Float*): ArrayData = ArrayData.toArrayData(v.toArray)
+    val vectors: Seq[InternalRow] = Seq(
+      (arr(0.25f, -1.5f, 3f), arr(2f, 0.5f, -1f)), // equal length
+      (arr(3f, 4f, 100f), arr(3f, 4f)), // ragged
+      (arr(), arr()), // empty
+      (arr(0f, 0f), arr(1f, 2f)), // zero vector
+      (new GenericArrayData(Array[Any](1f, null)), arr(1f, 5f)),
+      (null, arr(1f)))
+      .map { case (x, y) => new GenericInternalRow(Array[Any](x, y)) }
+    // the arguments per scalar table row; a row added to the table
+    // without a case here fails the key check below
+    val calls: Map[String, (Seq[Expression], Seq[InternalRow])] = Map(
+      "cosine_sim" -> (Seq(a, b), vectors),
+      "simhash64" -> (Seq(str), texts),
+      "minhash_sigs" -> (Seq(str), texts),
+      "rolling_hash2" -> (Seq(str, Literal(8), Literal(131), Literal(137)),
+        texts),
+      "md5_grams" -> (Seq(str, Literal(8)), texts))
+    val scalar = GraftFunctions.table
+      .filterNot(f => classOf[AggregateFunction].isAssignableFrom(f.cls))
+    assert(scalar.map(_.name).sorted == calls.keys.toSeq.sorted)
+    val cases: Seq[(String, Expression, Seq[InternalRow])] =
+      scalar.map(f => (f.name, f.build(calls(f.name)._1), calls(f.name)._2)) ++
+        Seq(true, false).map(ansi =>
+          (s"cosine_hof(ansi=$ansi)", CosineHof(a, b, ansi), vectors))
+    for ((name, e, rows) <- cases) {
+      val interpreted = InterpretedUnsafeProjection.createProjection(Seq(e))
+      val generated = GenerateUnsafeProjection.generate(Seq(e))
+      for ((r, i) <- rows.zipWithIndex) {
+        // the UnsafeRow bytes, or the thrown error's class and message
+        def run(p: InternalRow => InternalRow) =
+          Try(p(r).copy()).toEither.left.map(t =>
+            (t.getClass.getName, t.getMessage))
+        val want = run(interpreted)
+        assert(run(generated) == want, s"$name: modes disagree on input $i")
+      }
+    }
   }
 
   test("similarity: native cosine_sim expression is bit-identical to HOF") {
@@ -2022,6 +2127,17 @@ class OpsSpec extends AnyFunSuite {
     // (500000 → 250000 → 125000); hubs a=b=1e6, hub(c) follows auth(d)
     assert(out.toSeq == Seq(("c", 1000000L, 125000L),
       ("d", 125000L, 0L), ("a", 0L, 1000000L), ("b", 0L, 1000000L)))
+  }
+
+  test("hits: lineage cut per half-step, plan size flat in iters") {
+    import graft.ops.Graph
+    import spark.implicits._
+    val edges = Seq(("a", "c", 1L), ("b", "c", 2L), ("c", "d", 1L),
+      ("d", "a", 3L)).toDF("src", "dst", "w")
+    def planNodes(iters: Int): Int =
+      Graph.hits(edges, iters).queryExecution.analyzed.collect { case p => p }
+        .size
+    assert(planNodes(4) <= planNodes(1))
   }
 
   test("bfsDepth: chain, merging roots, cycle island, depth cap") {

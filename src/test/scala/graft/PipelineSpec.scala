@@ -99,6 +99,20 @@ class PipelineSpec extends AnyFunSuite {
       hGot.toString)
   }
 
+  test("outcome vocabulary: the pattern accepts Outcome.all and error:X only") {
+    import graft.model.Outcome
+    import graft.spark.OutputValidator.outcomePattern
+    val accepts = (s: String) => s.matches(outcomePattern)
+    assert(Outcome.all.distinct.size == Outcome.all.size)
+    assert(Outcome.all.forall(accepts), Outcome.all.filterNot(accepts))
+    assert(Seq(Outcome.error("IOException"), Outcome.error("pdf_no_pages"),
+      Outcome.error("Foo$Bar.Baz")).forall(accepts))
+    val nearMisses = Seq("skipped:redirects", "skipped:", "rejected:",
+      "rejected:prior", "ok ", "OK", "ok|error", "error", "error:",
+      "error:two words", "stripped:prior_textX", "xok", "")
+    assert(nearMisses.filter(accepts).isEmpty, nearMisses.filter(accepts))
+  }
+
   test("determinism: different partition counts produce identical tables") {
     val a = Jobs.extract(Jobs.syntheticPages(spark, 120, parallelism = 2), 3)
       .collect().sortBy(_.url).map(r => (r.url, r.text, r.outcome)).toSeq
@@ -364,9 +378,8 @@ class PipelineSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val df = (0L until 300L).toDF("doc_id")
     val spec = "1-50,111,200-end"
-    val resolved = df.filter(graft.spark.Jobs.subsetFilter(
-        col("doc_id"), spec, 300, firstPosValue = 0L))
-      .collect().map(_.getLong(0)).toSet
+    // the reference grammar, `end` resolved to 300, shifted to 0-based
+    val resolved = graft.extract.Ranges.parse(spec, 300).map(_ - 1L)
     val open = df.filter(graft.spark.Jobs.subsetFilterOpenEnd(
         col("doc_id"), spec, firstPosValue = 0L))
       .collect().map(_.getLong(0)).toSet

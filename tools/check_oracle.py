@@ -1,14 +1,26 @@
 #!/usr/bin/env python3
 """Local stand-in for the driver's DuckDB oracle compare.
 
-Reads each query parquet under the verify out dir, runs the oracle SQL in
+Exits 1 at once if Verify left an INVARIANT_VIOLATIONS file. Otherwise
+reads each query parquet under the verify out dir, runs the oracle SQL in
 DuckDB, sorts columns by name, and compares row counts, schemas (loosely)
 and values (exact for ints/strings; doubles to 1e-12 rel).
 """
-import json, sys, math
+import json, os, sys, math
 import duckdb
 
 outdir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/verify_out"
+# graft.Verify writes this sentinel (and still exits 0) when the output
+# invariant audit fails or crashes; the query outputs stay in place, so
+# without this check a failed audit would read as all-ok.
+sentinel = os.path.join(outdir, "INVARIANT_VIOLATIONS")
+if os.path.exists(sentinel):
+    with open(sentinel) as f:
+        head = f.read().splitlines()[:10]
+    print(f"[FAIL] output invariant audit: {sentinel}")
+    for line in head:
+        print(f"  {line}")
+    sys.exit(1)
 oracles = json.load(open(f"{outdir}/oracle_sql.json"))
 # Explicit caps instead of DuckDB's defaults (80% of physical RAM, one
 # thread per core), so the buffer pool does not grow with the box; no
