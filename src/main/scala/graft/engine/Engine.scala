@@ -270,14 +270,13 @@ object HtmlEngine {
     // Disposition probe — the cheap-probe-then-decide pattern (reference:
     // rasterize_preview + get_orientation_correction,
     // src/ocrmypdf/_pipeline.py:418-495): a meta-refresh page with almost
-    // no body text is a redirect shell, not content. `force` mode
-    // overrides the probe (the rasterize-everything analog).
-    val isRedirect = TextAssembler.splitWords(asm.text)
-      .length < 10 // title included; spans may be lazily disabled
-    val hasRefresh = dom.nodes.exists { n =>
-      n.tag == "meta" && n.attr("http-equiv")
-        .exists(_.equalsIgnoreCase("refresh"))
-    }
+    // no body text (title included; spans may be lazily disabled) is a
+    // redirect shell, not content. `force` mode overrides the probe (the
+    // rasterize-everything analog); the word count runs only when the
+    // page has a refresh pragma and the mode lets it decide.
+    val isRedirectShell = cfg.mode != ProcessingMode.Force &&
+      dom.nodes.exists(graft.extract.Links.isRefresh) &&
+      TextAssembler.splitWords(asm.text).length < 10
     // redirect target and rel=canonical are recorded for EVERY decoded
     // page (a frontier/dedup consumer wants the redirect edge precisely
     // from the skipped shell) — the disposition logic itself is
@@ -294,7 +293,7 @@ object HtmlEngine {
     val pageMetas = graft.extract.Links.metasOf(dom)
     val pageFeeds = effBase.map(graft.extract.Links.feedsOf(dom, _))
       .getOrElse(Vector.empty)
-    if (hasRefresh && isRedirect && cfg.mode != ProcessingMode.Force)
+    if (isRedirectShell)
       return OutcomeRow(row, Outcome.SkippedRedirect, tag, s.format, charset,
         dom.nodes.length, blocks.length, dom.truncated).copy(
         redirect = redirectTarget, canonical = canonicalUrl,
@@ -318,7 +317,7 @@ object HtmlEngine {
       // pass (guarded — a no-table page pays one tag scan, no allocs)
       // with the PRE-classification blocks' text (tabular data is
       // wanted even when density rules drop the table from the text)
-      headings = graft.extract.Tables.headingsOf(kept),
+      headings = graft.extract.Tables.headingsOf(dom, kept),
       cells = graft.extract.Tables.cellsOf(dom, blocks))
   }
 }

@@ -26,7 +26,8 @@ final case class Block(
     maxWordLen: Int,
     letters: Int, // Character.isLetter chars across words
     cjk: Int, // CJK codepoints across words
-    inChrome: Boolean // nav/header/footer/aside ancestry
+    inChrome: Boolean, // nav/header/footer/aside ancestry (DomNode.chrome)
+    anchor: Int // nearest block-level element id; -1 for body-level text
 )
 
 object Blocks {
@@ -37,8 +38,6 @@ object Blocks {
     "h4", "h5", "h6", "header", "hr", "html", "li", "main", "menu", "nav",
     "ol", "p", "pre", "section", "summary", "table", "tbody", "td", "tfoot",
     "th", "thead", "tr", "ul")
-
-  val chromeTags: Set[String] = Set("nav", "header", "footer", "aside")
 
   def kindOf(tag: String): String = tag match {
     case "h1" | "h2" | "h3" | "h4" | "h5" | "h6" => "heading"
@@ -65,20 +64,9 @@ object Blocks {
     s
   }
 
-  /** Segment the DOM into candidate blocks in document order.
-    *
-    * Each visible text node is assigned to its nearest block-level element
-    * ancestor; consecutive text nodes sharing that ancestor form one block.
-    * Pure array walk — no recursion, O(n) with memoized ancestor lookups.
-    */
-  /** Memoized element-path builder ("/html/body/div[1]/p[2]") — THE
-    * owner of the path algebra. Block paths and the table view's
-    * cell-path join key ([[Tables.cellsOf]]) are matched by STRING
-    * EQUALITY, so a second hand-spelled copy drifting in either walk
-    * would silently empty every cell's text with both engines still
-    * agreeing (invisible to the oracle). */
-  def pathBuilder(nodes: scala.collection.mutable.ArrayBuffer[graft.html.DomNode])
-      : Int => String = {
+  /** Memoized element-path builder ("/html/body/div[1]/p[2]") for the
+    * block paths that spans carry. */
+  private def pathBuilder(nodes: ArrayBuffer[DomNode]): Int => String = {
     val paths = new scala.collection.mutable.HashMap[Int, String]
     def pathOf(id: Int): String = {
       if (id < 0) return ""
@@ -91,6 +79,12 @@ object Blocks {
     pathOf
   }
 
+  /** Segment the DOM into candidate blocks in document order.
+    *
+    * Each visible text node is assigned to its nearest block-level element
+    * ancestor; consecutive text nodes sharing that ancestor form one block.
+    * Pure array walk — no recursion, O(n) with memoized ancestor lookups.
+    */
   def segment(dom: Dom): Vector[Block] = {
     val nodes = dom.nodes
     val n = nodes.length
@@ -98,7 +92,6 @@ object Blocks {
     // always precede children in the flattened ordering)
     val blockAnc = new Array[Int](n) // nearest block ancestor (element id)
     val linkAnc = new Array[Boolean](n) // inside <a> below the block anc
-    val chromeAnc = new Array[Boolean](n) // nav/header/footer/aside ancestry
     val pathOf = pathBuilder(nodes)
 
     var i = 0
@@ -113,7 +106,6 @@ object Blocks {
         // and resetting at block elements let those navigation teasers
         // evade the link-density gate with linkChars = 0
         linkAnc(i) = (p >= 0 && linkAnc(p)) || nd.tag == "a"
-        chromeAnc(i) = (p >= 0 && chromeAnc(p)) || chromeTags.contains(nd.tag)
       }
       i += 1
     }
@@ -177,7 +169,7 @@ object Blocks {
       flushWord()
       if (nWords > 0)
         out += Block(curKind, curPath, btext.toString, nWords, linkChars,
-          chars, maxWordLen, letters, cjkCount, curChrome)
+          chars, maxWordLen, letters, cjkCount, curChrome, curAnc)
       btext.setLength(0); nWords = 0
       linkChars = 0; chars = 0; maxWordLen = 0; letters = 0; cjkCount = 0
     }
@@ -191,7 +183,7 @@ object Blocks {
         if (anc != curAnc) {
           flushBlock()
           curAnc = anc
-          curChrome = p >= 0 && chromeAnc(p)
+          curChrome = nd.chrome
           val ancTag = if (anc >= 0) nodes(anc).tag else "body"
           curKind = kindOf(ancTag)
           curPath = if (anc >= 0) pathOf(anc) else "/"

@@ -1,6 +1,6 @@
 package graft.extract
 
-import graft.html.Dom
+import graft.html.{Dom, DomNode}
 import graft.model.Link
 
 /** Outlink extraction + RFC 3986 §5 reference resolution.
@@ -138,10 +138,6 @@ object Links {
     }
   }
 
-  /** Walk the flattened DOM once (parents precede children) collecting
-    * every visible anchor's resolved outlink in document order, with the
-    * same chrome-ancestry predicate [[Blocks.segment]] computes for
-    * block classification. */
   /** Effective resolution base: the document's first `<base href>`
     * (WHATWG: only the first base element with an href is honored),
     * itself resolved against the page URL; a non-http(s)/unparseable
@@ -161,36 +157,15 @@ object Links {
     * canonicals precisely because user-posted markup could otherwise
     * hijack canonical-keyed dedup); head-less documents honor a
     * top-level link since this builder synthesizes no head/body.
-    * '' when absent or unresolvable. */
-  def canonicalOf(dom: Dom, pageUrl: String): String =
-    parseAbs(pageUrl) match {
-      case None => ""
-      case Some(pageBase) => canonicalOf(dom, effectiveBase(dom, pageBase))
-    }
-
-  /** [[canonicalOf]] against a precomputed effective base — the form
-    * the extraction kernel calls so the base is derived ONCE per page
-    * across links/canonical/refresh. */
+    * '' when absent or unresolvable. `eff` is the page's
+    * [[effectiveBase]]. The body test reads [[DomNode.inBody]], the
+    * guard [[metasOf]] and [[feedsOf]] share. */
   def canonicalOf(dom: Dom, eff: Base): String =
     dom.nodes.find { n =>
       n.tag == "link" && n.attr("href").isDefined &&
         n.attr("rel").exists(_.split("\\s+").exists(
-          _.equalsIgnoreCase("canonical"))) && !inBody(dom, n.id)
+          _.equalsIgnoreCase("canonical"))) && !n.inBody
     }.flatMap(n => resolve(eff, n.attr("href").get)).getOrElse("")
-
-  /** Explicit-`<body>` ancestry — the shared rejection guard for page
-    * metadata ([[canonicalOf]], [[metasOf]]): user-posted markup inside
-    * the body must not hijack metadata-keyed consumers. Head-less
-    * documents keep top-level elements (this builder synthesizes no
-    * head/body). */
-  private def inBody(dom: Dom, id: Int): Boolean = {
-    var p = id
-    while (p >= 0) {
-      if (dom.nodes(p).tag == "body") return true
-      p = dom.nodes(p).parent
-    }
-    false
-  }
 
   /** Head `<meta>` pairs in document order (the CC-WAT `Head → Metas`
     * analog; reference twin: the docinfo/XMP metadata scan feeding
@@ -207,7 +182,7 @@ object Links {
     * and are naturally excluded. Output size is bounded by the DOM
     * node cap — no separate limit, nothing silently dropped. */
   def metasOf(dom: Dom): Vector[graft.model.MetaTag] =
-    dom.nodes.iterator.filter(n => n.tag == "meta" && !inBody(dom, n.id))
+    dom.nodes.iterator.filter(n => n.tag == "meta" && !n.inBody)
       .flatMap { n =>
         // the fallback applies per FOLDED key: an empty/whitespace
         // `name` must not mask a usable `property` (og tags next to a
@@ -229,12 +204,12 @@ object Links {
     * feed. rel is the same case-insensitive token list as
     * [[canonicalOf]]; the type attribute is trimmed + case-folded
     * (MIME matching, like the ld+json capture); body links are
-    * rejected under the shared [[inBody]] guard; a rel=alternate
+    * rejected under the shared [[DomNode.inBody]] guard; a rel=alternate
     * without a feed MIME (e.g. a mobile text/html alternate) is not a
     * feed. Unresolvable hrefs are dropped. */
   def feedsOf(dom: Dom, eff: Base): Vector[String] =
     dom.nodes.iterator.filter { n =>
-      n.tag == "link" && !inBody(dom, n.id) &&
+      n.tag == "link" && !n.inBody &&
         n.attr("rel").exists(_.split("\\s+").exists(
           _.equalsIgnoreCase("alternate"))) &&
         n.attr("type").exists { t =>
@@ -251,20 +226,17 @@ object Links {
     * NEXT matching quote if present, else runs to the end; a remainder
     * that is not a `url=` clause IS the target. '' when absent,
     * clause-less (refresh to self is not an edge), or unresolvable. */
-  def refreshTarget(dom: Dom, pageUrl: String): String =
-    parseAbs(pageUrl) match {
-      case None => ""
-      case Some(pageBase) => refreshTarget(dom, effectiveBase(dom, pageBase))
-    }
-
-  /** [[refreshTarget]] against a precomputed effective base. */
   def refreshTarget(dom: Dom, eff: Base): String =
-    dom.nodes.find { n =>
-      n.tag == "meta" &&
-        n.attr("http-equiv").exists(_.equalsIgnoreCase("refresh")) &&
-        n.attr("content").isDefined
-    }.flatMap(n => parseRefreshUrl(n.attr("content").get))
+    dom.nodes.find(n => isRefresh(n) && n.attr("content").isDefined)
+      .flatMap(n => parseRefreshUrl(n.attr("content").get))
       .flatMap(v => resolve(eff, v)).getOrElse("")
+
+  /** `<meta http-equiv="refresh">` (value case-insensitive): the one
+    * test for a refresh pragma, shared by [[refreshTarget]] and the
+    * kernel's redirect-shell probe. */
+  def isRefresh(n: DomNode): Boolean =
+    n.tag == "meta" &&
+      n.attr("http-equiv").exists(_.equalsIgnoreCase("refresh"))
 
   /** The WHATWG shared-declarative-refresh content parse (url part
     * only). None when the content carries no navigable target. */
@@ -308,51 +280,44 @@ object Links {
     if (v.isEmpty) None else Some(v)
   }
 
-  def fromDom(dom: Dom, pageUrl: String): Vector[Link] =
-    parseAbs(pageUrl) match {
-      case None => Vector.empty
-      case Some(pageBase) => fromDom(dom, effectiveBase(dom, pageBase))
-    }
-
-  /** [[fromDom]] against a precomputed effective base (one base
-    * derivation per page across links/canonical/refresh). */
+  /** Walk the flattened DOM once (parents precede children) collecting
+    * every visible anchor's resolved outlink against the page's
+    * [[effectiveBase]], in document order. `Link.chrome` is the
+    * anchor's [[DomNode.chrome]], the flag `Block.inChrome` reads. */
   def fromDom(dom: Dom, effBase: Base): Vector[Link] = {
-        val nodes = dom.nodes
-        val n = nodes.length
-        val chromeAnc = new Array[Boolean](n)
-        // nearest enclosing EMITTED anchor's ordinal per node (-1 none):
-        // visible text under an anchor accumulates into that anchor's
-        // buffer in document order, the same single pass
-        val linkOrd = new Array[Int](n)
-        val acc =
-          scala.collection.mutable.ArrayBuffer[(String, String, Boolean)]()
-        val texts =
-          scala.collection.mutable.ArrayBuffer[java.lang.StringBuilder]()
-        var i = 0
-        while (i < n) {
-          val nd = nodes(i)
-          val p = nd.parent
-          if (nd.tag != "#text") {
-            chromeAnc(i) = (p >= 0 && chromeAnc(p)) ||
-              Blocks.chromeTags.contains(nd.tag)
-            linkOrd(i) = if (p >= 0) linkOrd(p) else -1
-            if (nd.tag == "a" && nd.visible) nd.attr("href").foreach { raw =>
-              resolve(effBase, raw).foreach { res =>
-                acc += ((raw, res, chromeAnc(i)))
-                texts += new java.lang.StringBuilder
-                linkOrd(i) = acc.length - 1
-              }
-            }
-          } else if (nd.visible) {
-            val ord = if (p >= 0) linkOrd(p) else -1
-            if (ord >= 0) { texts(ord).append(Blocks.nfkc(nd.text)); () }
+    val nodes = dom.nodes
+    val n = nodes.length
+    // nearest enclosing EMITTED anchor's ordinal per node (-1 none):
+    // visible text under an anchor accumulates into that anchor's
+    // buffer in document order, the same single pass
+    val linkOrd = new Array[Int](n)
+    val acc =
+      scala.collection.mutable.ArrayBuffer[(String, String, Boolean)]()
+    val texts =
+      scala.collection.mutable.ArrayBuffer[java.lang.StringBuilder]()
+    var i = 0
+    while (i < n) {
+      val nd = nodes(i)
+      val p = nd.parent
+      if (nd.tag != "#text") {
+        linkOrd(i) = if (p >= 0) linkOrd(p) else -1
+        if (nd.tag == "a" && nd.visible) nd.attr("href").foreach { raw =>
+          resolve(effBase, raw).foreach { res =>
+            acc += ((raw, res, nd.chrome))
+            texts += new java.lang.StringBuilder
+            linkOrd(i) = acc.length - 1
           }
-          i += 1
         }
-        acc.iterator.zipWithIndex.map { case ((raw, res, chrome), k) =>
-          Link(k, raw, res, chrome, collapseAnchor(texts(k).toString))
-        }.toVector
+      } else if (nd.visible) {
+        val ord = if (p >= 0) linkOrd(p) else -1
+        if (ord >= 0) { texts(ord).append(Blocks.nfkc(nd.text)); () }
+      }
+      i += 1
     }
+    acc.iterator.zipWithIndex.map { case ((raw, res, chrome), k) =>
+      Link(k, raw, res, chrome, collapseAnchor(texts(k).toString))
+    }.toVector
+  }
 
   /** Anchor-text normalization: whitespace runs collapse to single
     * spaces (Character.isWhitespace — the kernel's segmentation

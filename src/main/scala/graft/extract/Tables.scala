@@ -13,20 +13,13 @@ import scala.collection.mutable
   */
 object Tables {
 
-  /** Last path segment's tag: "/html/body/tr[2]/td[3]" → "td". */
-  private def lastTag(path: String): String = {
-    val seg = path.substring(path.lastIndexOf('/') + 1)
-    val b = seg.indexOf('[')
-    if (b >= 0) seg.substring(0, b) else seg
-  }
-
   /** The content OUTLINE: kept heading blocks as (level, text) in
     * document order. Call with the CLASSIFIED (kept) blocks — the
     * outline of the extracted main text, not of the chrome. */
-  def headingsOf(kept: Vector[Block]): Vector[Heading] =
+  def headingsOf(dom: Dom, kept: Vector[Block]): Vector[Heading] =
     kept.iterator.filter(_.kind == "heading").map { b =>
-      // kindOf maps exactly h1..h6 to "heading", so the tag is hN
-      Heading(lastTag(b.path).charAt(1) - '0', b.text)
+      // kindOf maps exactly h1..h6 to "heading", so the anchor is hN
+      Heading(dom.nodes(b.anchor).tag.charAt(1) - '0', b.text)
     }.toVector
 
   /** HTML span attribute per the spec's clamp rules (colspan 1..1000,
@@ -58,11 +51,12 @@ object Tables {
     * Rows are the nearest `tr` ancestor; a cell with no `tr` (markup
     * soup directly under table/tbody) forms a row keyed by its direct
     * parent. Cell text is joined in from the segmenter's blocks by
-    * path — NFKC'd, word-joined; a cell split by nested structure
-    * re-joins its runs with the segmenter's CJK-aware rule, and nested
-    * block content (<p>/<ul>/hN inside a td) joins its cell. Cells
-    * with no table ancestor are not rows of any table and are omitted
-    * (their text still flows in the text/blocks channel).
+    * their anchor element's nearest td/th — NFKC'd, word-joined; a cell
+    * split by nested structure re-joins its runs with the segmenter's
+    * CJK-aware rule, and nested block content (<p>/<ul>/hN inside a
+    * td) joins its cell. Cells with no table ancestor are not rows of
+    * any table and are omitted (their text still flows in the
+    * text/blocks channel).
     *
     * Pass the PRE-classification blocks: tabular data is wanted even
     * when link/text density drops the table from the main text. The
@@ -80,9 +74,11 @@ object Tables {
       g += 1
     }
     if (!hasCell) return Vector.empty
-    // nearest table / tr ancestor per element (parents precede children)
+    // nearest table / tr / td-or-th ancestor-or-self per element
+    // (parents precede children)
     val tblAnc = new Array[Int](n)
     val trAnc = new Array[Int](n)
+    val cellAnc = new Array[Int](n)
     val tableOrd = mutable.HashMap.empty[Int, Int] // table id -> ordinal
     val rowOrd = mutable.HashMap.empty[Long, Int] // (tbl,rowKey) -> ordinal
     val rowsInTable = mutable.HashMap.empty[Int, Int]
@@ -91,8 +87,7 @@ object Tables {
     // (absolute, so no per-transition decrement bookkeeping)
     val carryByTable = mutable.HashMap.empty[Int, mutable.HashMap[Int, Int]]
     val out = mutable.ArrayBuffer.empty[TableCell]
-    val cellIdxByPath = mutable.HashMap.empty[String, Int]
-    val pathOf = Blocks.pathBuilder(nodes) // the ONE path-algebra owner
+    val cellIdx = mutable.HashMap.empty[Int, Int] // cell element id -> out
     var i = 0
     while (i < n) {
       val nd = nodes(i)
@@ -100,8 +95,9 @@ object Tables {
         val p = nd.parent
         tblAnc(i) = if (nd.tag == "table") i else if (p >= 0) tblAnc(p) else -1
         trAnc(i) = if (nd.tag == "tr") i else if (p >= 0) trAnc(p) else -1
-        if ((nd.tag == "td" || nd.tag == "th") && nd.visible && p >= 0 &&
-            tblAnc(p) >= 0) {
+        val isCell = nd.tag == "td" || nd.tag == "th"
+        cellAnc(i) = if (isCell) i else if (p >= 0) cellAnc(p) else -1
+        if (isCell && nd.visible && p >= 0 && tblAnc(p) >= 0) {
           val tblId = tblAnc(p)
           // the cell's row: nearest tr BELOW its table (a tr outside
           // the cell's own table must not group cells of the inner
@@ -127,20 +123,19 @@ object Tables {
             while (cc < cur + colspan) { carry(cc) = row + rowspan - 1; cc += 1 }
           }
           cursorInRow(rowKey) = cur + colspan
-          cellIdxByPath(pathOf(i)) = out.length
+          cellIdx(i) = out.length
           out += TableCell(tbl, row, cur, header = nd.tag == "th", text = "")
         }
       }
       i += 1
     }
-    // join the segmenter's text in by the block path's nearest CELL
-    // segment — not only kind=cell blocks: a <p>/<ul>/<h3> nested
+    // join the segmenter's text in by the nearest td/th of the block's
+    // anchor — not only kind=cell blocks: a <p>/<ul>/<h3> nested
     // inside a td is that cell's text too (its nearest BLOCK ancestor
     // is the inner element, so its kind is para/list_item/heading).
     // Runs split by nested structure re-join with the CJK-aware rule.
     blocks.foreach { b =>
-      val cp = cellPathOf(b.path)
-      if (cp != null) cellIdxByPath.get(cp).foreach { idx =>
+      if (b.anchor >= 0) cellIdx.get(cellAnc(b.anchor)).foreach { idx =>
         val prev = out(idx)
         val sep = if (prev.text.nonEmpty && b.text.nonEmpty &&
           Blocks.isCjk(Blocks.lastCp(prev.text)) &&
@@ -150,33 +145,5 @@ object Tables {
       }
     }
     out.toVector
-  }
-
-  /** The path prefix ending at its LAST (innermost) td/th segment, or
-    * null when the path has none. Segment-exact: the char after "/td"
-    * or "/th" must be '/', '[' or end — "/thead"/"/table" never match. */
-  private def cellPathOf(path: String): String = {
-    var best = -1
-    var from = 0
-    while (from >= 0) {
-      val td = path.indexOf("/td", from)
-      val th = path.indexOf("/th", from)
-      val hit = if (td < 0) th else if (th < 0) td else math.min(td, th)
-      if (hit < 0) from = -1
-      else {
-        val after = hit + 3
-        if (after >= path.length || path.charAt(after) == '/' ||
-            path.charAt(after) == '[') best = hit
-        from = hit + 1
-      }
-    }
-    if (best < 0) return null
-    val after = best + 3
-    if (after >= path.length) path
-    else if (path.charAt(after) == '/') path.substring(0, after)
-    else { // '[n]' sibling index — keep it, cut at the following '/'
-      val slash = path.indexOf('/', after)
-      if (slash < 0) path else path.substring(0, slash)
-    }
   }
 }

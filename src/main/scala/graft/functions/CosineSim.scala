@@ -9,13 +9,23 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native codegen'd cosine similarity over two float-array columns.
   *
-  * Semantics are EXACTLY the higher-order-function formulation used in
-  * `graft.ops.Similarity` (sequential left-to-right double-precision
-  * accumulation: dot/(sqrt(na)*sqrt(nb))) so results are bit-identical to
-  * the DuckDB oracle — but evaluated in one fused loop with no per-element
-  * lambda dispatch, keeping the ANN scoring stage inside
-  * WholeStageCodegen. Eval and generated code both call
-  * [[CosineSim.compute]], so the two execution modes cannot drift apart.
+  * On equal-length, NULL-free vectors with a non-zero norm it is
+  * bit-identical to the higher-order-function formulation in
+  * `graft.ops.Similarity` and to the DuckDB oracle: sequential
+  * left-to-right double-precision accumulation, dot/(sqrt(na)*sqrt(nb)).
+  * Outside that domain the contract is its own, not the HOF form's:
+  *  - ragged inputs use the shorter length and ignore the longer tail;
+  *  - a NULL element reads as 0.0f (the HOF form gives NULL);
+  *  - a zero denominator (zero vector, empty input) gives 0.0;
+  *  - a NULL array gives NULL.
+  * OpsSpec "cosine_sim: edge contract pinned in eval and codegen" pins
+  * each case. The operators feed it only the shared domain (zero
+  * vectors are filtered out first).
+  *
+  * It runs as one fused loop with no per-element lambda dispatch,
+  * keeping the ANN scoring stage inside WholeStageCodegen. Eval and
+  * generated code both call [[CosineSim.compute]], so the two execution
+  * modes cannot drift apart.
   */
 case class CosineSim(left: Expression, right: Expression)
     extends BinaryExpression {

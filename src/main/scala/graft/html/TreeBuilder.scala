@@ -15,7 +15,11 @@ final class DomNode(
     val tag: String, // "#text" for text nodes
     val attrs: List[(String, String)],
     var text: String, // only for #text nodes
-    val visible: Boolean, // inherited-visibility at build time
+    // inherited ancestor-or-self facts, stamped at build time from the
+    // parent (parents precede children, and `parent` never changes)
+    val visible: Boolean, // no invisible subtree above or here
+    val chrome: Boolean, // nav/header/footer/aside ancestry
+    val inBody: Boolean, // explicit <body> ancestry
     val sibIndex: Int // 1-based index among same-tag element siblings
 ) {
   def attr(k: String): Option[String] =
@@ -69,6 +73,11 @@ object TreeBuilder {
     "datalist", "textarea") // textarea: form-WIDGET content (wiki edit
     // pages carry whole article sources there), not document text
 
+  /** Page-chrome subtrees: the structural "margin" that both the
+    * boilerplate classifier (`Block.inChrome`) and the outlink split
+    * (`Link.chrome`) read from [[DomNode.chrome]]. */
+  val chromeTags: Set[String] = Set("nav", "header", "footer", "aside")
+
   def build(tokens: ArrayBuffer[HtmlToken]): Dom = {
     val nodes = new ArrayBuffer[DomNode](tokens.length)
     var truncated = false
@@ -80,10 +89,12 @@ object TreeBuilder {
     val sibCount = new scala.collection.mutable.HashMap[(Int, String), Int]
     var inTitle = false
 
-    def curParent: Int = stack.headOption.getOrElse(-1)
+    def curParent: Int = if (stack.isEmpty) -1 else stack.head
     def curDepth: Int = stack.length
     def curVisible: Boolean =
       nodes.isEmpty || curParent == -1 || nodes(curParent).visible
+    def curChrome: Boolean = curParent >= 0 && nodes(curParent).chrome
+    def curInBody: Boolean = curParent >= 0 && nodes(curParent).inBody
 
     def selfInvisible(name: String, attrs: List[(String, String)]): Boolean = {
       if (invisibleTags.contains(name)) return true
@@ -123,7 +134,9 @@ object TreeBuilder {
       sibCount(key) = idx
       val vis = curVisible && !selfInvisible(name, attrs)
       val id = nodes.length
-      nodes += new DomNode(id, parent, curDepth, name, attrs, null, vis, idx)
+      nodes += new DomNode(id, parent, curDepth, name, attrs, null, vis,
+        curChrome || chromeTags.contains(name), curInBody || name == "body",
+        idx)
       if (push) {
         if (curDepth >= maxDepth) {
           truncated = true // flatten: do not push, children attach here
@@ -269,7 +282,8 @@ object TreeBuilder {
           val parent = curParent
           val vis = curVisible
           val id = nodes.length
-          nodes += new DomNode(id, parent, curDepth, "#text", Nil, t, vis, 0)
+          nodes += new DomNode(id, parent, curDepth, "#text", Nil, t, vis,
+            curChrome, curInBody, 0)
         } else truncated = true
       case _: CommentTok => preNL = false
       case _: DoctypeTok => preNL = false

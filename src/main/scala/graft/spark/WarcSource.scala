@@ -1,7 +1,6 @@
 package graft.spark
 
 import graft.model.PageRow
-import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** WARC ingestion source — the container format Common Crawl actually
   * ships (WARC/1.0, ISO 28500): a file is a sequence of records, each a
@@ -16,12 +15,12 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * (same failure-containment discipline as the extraction kernel — bad
   * bytes degrade, never throw).
   *
-  * 100 TB shape: `readWarcFiles` maps each WARC file to one task via the
-  * binaryFile source and explodes records with a flatMap — a narrow
-  * stage, so record parsing runs where the bytes land and only PageRows
-  * enter the pipeline. Real CC archives are per-file gzip members;
-  * Sniffer already handles gzip payloads per record, and a per-file
-  * gunzip would slot in front of parseRecords unchanged.
+  * 100 TB shape: `parseRecords` is a lazy per-archive iterator, so a
+  * reader explodes records with a narrow flatMap over archive bytes
+  * (the `extract_warc` query does) — record parsing runs where the
+  * bytes land and only PageRows enter the pipeline. Real CC archives
+  * are per-record gzip members; a per-file gunzip slots in front of
+  * parseRecords unchanged.
   */
 object WarcSource {
 
@@ -204,54 +203,5 @@ object WarcSource {
       pending = null
       r
     }
-  }
-
-  /** Bounded whole-archive gunzip. Common Crawl ships `.warc.gz` as
-    * CONCATENATED per-record gzip members; Java's GZIPInputStream reads
-    * successive members transparently, so one stream pass restores the
-    * full record sequence. `maxBytes` caps decompression (zip-bomb
-    * guard — same discipline as the kernel's maxGunzipBytes); overflow
-    * returns the prefix, and the record walk then stops at the first
-    * truncated record. Total on arbitrary bytes. */
-  def gunzipAll(bytes: Array[Byte],
-      maxBytes: Int = 1 << 30): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(
-      math.min(bytes.length.toLong * 4L, 1 << 20).toInt)
-    try {
-      val in = new java.util.zip.GZIPInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      val buf = new Array[Byte](65536)
-      var total = 0
-      var k = in.read(buf)
-      while (k >= 0 && total < maxBytes) {
-        out.write(buf, 0, math.min(k, maxBytes - total))
-        total += k
-        k = in.read(buf)
-      }
-    } catch {
-      // a truncated/corrupt trailing member must not lose the good
-      // members already decompressed: return the prefix, the record walk
-      // then stops at the first truncated record (reviewed)
-      case _: java.io.IOException => ()
-    }
-    out.toByteArray
-  }
-
-  /** Distributed WARC read: one task per archive file (binaryFile
-    * source), records exploded by a narrow flatMap — parsing runs where
-    * the bytes land. `.warc.gz` members are gunzipped per file first
-    * (magic-sniffed, so mixed directories work). */
-  def readWarcFiles(spark: SparkSession, dir: String): Dataset[PageRow] = {
-    import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.warc*")
-      .load(dir)
-      .select("content")
-      .as[Array[Byte]]
-      .flatMap { b =>
-        val raw = if (b.length >= 2 && (b(0) & 0xff) == 0x1f &&
-          (b(1) & 0xff) == 0x8b) gunzipAll(b) else b
-        parseRecords(raw)
-      }
   }
 }

@@ -19,6 +19,11 @@ class KernelSpec extends AnyFunSuite {
 
   private def extractText(html: String): String = Extractor.extract(row(html)).text
 
+  /** The page's effective base, derived as the kernel derives it. */
+  private def baseOf(dom: graft.html.Dom, pageUrl: String) =
+    graft.extract.Links.effectiveBase(dom,
+      graft.extract.Links.parseAbs(pageUrl).get)
+
   // -- entities ---------------------------------------------------------
 
   test("entities: named, numeric, hex, legacy no-semi, unknown verbatim") {
@@ -696,70 +701,88 @@ class KernelSpec extends AnyFunSuite {
 <p><a href="c1">content</a> <a>no href</a> <a href="#x">frag</a></p>
 <div style="display:none"><a href="hidden">gone</a></div>
 </body></html>"""))
-    val ls = Links.fromDom(dom, "https://h.test/orig/page")
+    val ls = Links.fromDom(dom, baseOf(dom, "https://h.test/orig/page"))
     assert(ls.map(_.resolved) == Vector(
       "https://h.test/moved/dir/n1", "https://h.test/moved/dir/c1"))
     assert(ls.map(_.idx) == Vector(0, 1)) // dense document order
     assert(ls.map(_.chrome) == Vector(true, false))
     assert(ls.map(_.text) == Vector("nav link", "content"))
-    // non-http page url → no links; relative base falls back correctly
-    assert(Links.fromDom(dom, "ftp://h.test/x").isEmpty)
+    // non-http page url → no base, so the kernel emits no links
+    assert(Extractor.extract(PageRow("ftp://h.test/x", new java.sql.Timestamp(0L),
+      """<p><a href="http://h.test/y">y</a></p>""".getBytes(StandardCharsets.UTF_8),
+      null, "eng")).links.isEmpty)
+  }
+
+  test("chrome: Link.chrome and Block.inChrome agree inside and outside nav") {
+    import graft.extract.Links
+    val base = Links.parseAbs("https://h.test/").get
+    Seq("<nav>" -> true, "<div>" -> false).foreach { case (open, chrome) =>
+      val close = open.replace("<", "</")
+      val dom = TreeBuilder.build(Tokenizer.tokenize(
+        s"""<html><body>$open<p><a href="/x">menu item</a></p>$close</body></html>"""))
+      assert(Links.fromDom(dom, base).map(_.chrome) == Vector(chrome), open)
+      assert(Blocks.segment(dom).map(_.inChrome) == Vector(chrome), open)
+    }
   }
 
   test("links: meta-refresh target and rel=canonical resolution") {
     import graft.extract.Links
     def dom(html: String) = TreeBuilder.build(Tokenizer.tokenize(html))
-    val base = "https://h.test/dir/page"
+    val page = "https://h.test/dir/page"
+    def refresh(html: String) = {
+      val d = dom(html); Links.refreshTarget(d, baseOf(d, page))
+    }
+    def canonical(html: String) = {
+      val d = dom(html); Links.canonicalOf(d, baseOf(d, page))
+    }
     // quoted target, comma separator, case-insensitive URL keyword
-    assert(Links.refreshTarget(dom(
-      """<meta http-equiv="Refresh" content="5, URL='/new'">"""), base)
+    assert(refresh(
+      """<meta http-equiv="Refresh" content="5, URL='/new'">""")
       == "https://h.test/new")
     // relative target resolves against <base href>
-    assert(Links.refreshTarget(dom(
-      """<head><base href="/moved/"><meta http-equiv="refresh" content="0; url=next"></head>"""),
-      base) == "https://h.test/moved/next")
+    assert(refresh(
+      """<head><base href="/moved/"><meta http-equiv="refresh" content="0; url=next"></head>""")
+      == "https://h.test/moved/next")
     // clause-less refresh (reload-self): no edge
-    assert(Links.refreshTarget(dom(
-      """<meta http-equiv="refresh" content="30">"""), base) == "")
+    assert(refresh(
+      """<meta http-equiv="refresh" content="30">""") == "")
     // WHATWG branch coverage: bare target without url= (including one
     // where the separator is whitespace alone), an unterminated quote
     // running to the end, and a remainder that only LOOKS like url=
-    assert(Links.refreshTarget(dom(
-      """<meta http-equiv="refresh" content="0; /next">"""), base)
+    assert(refresh(
+      """<meta http-equiv="refresh" content="0; /next">""")
       == "https://h.test/next")
-    assert(Links.refreshTarget(dom(
-      """<meta http-equiv="refresh" content="1 https://x.test/">"""), base)
+    assert(refresh(
+      """<meta http-equiv="refresh" content="1 https://x.test/">""")
       == "https://x.test/")
-    assert(Links.refreshTarget(dom(
-      """<meta http-equiv="refresh" content="0; url='x">"""), base)
+    assert(refresh(
+      """<meta http-equiv="refresh" content="0; url='x">""")
       == "https://h.test/dir/x")
-    assert(Links.refreshTarget(dom(
-      """<meta http-equiv="refresh" content="0; uri=/x">"""), base)
+    assert(refresh(
+      """<meta http-equiv="refresh" content="0; uri=/x">""")
       == "https://h.test/dir/uri=/x")
     // no time value at all: invalid declaration, no edge
-    assert(Links.refreshTarget(dom(
-      """<meta http-equiv="refresh" content="url=/x">"""), base) == "")
+    assert(refresh(
+      """<meta http-equiv="refresh" content="url=/x">""") == "")
     // rel is a token LIST, case-insensitive; first canonical wins
-    assert(Links.canonicalOf(dom(
-      """<link rel="alternate Canonical" href="p7"><link rel="canonical" href="p9">"""),
-      base) == "https://h.test/dir/p7")
-    assert(Links.canonicalOf(dom("""<link rel="stylesheet" href="s.css">"""),
-      base) == "")
+    assert(canonical(
+      """<link rel="alternate Canonical" href="p7"><link rel="canonical" href="p9">""")
+      == "https://h.test/dir/p7")
+    assert(canonical("""<link rel="stylesheet" href="s.css">""") == "")
     // non-navigable canonical target → ''
-    assert(Links.canonicalOf(dom(
-      """<link rel="canonical" href="mailto:x@y">"""), base) == "")
+    assert(canonical(
+      """<link rel="canonical" href="mailto:x@y">""") == "")
     // rel is split on ASCII whitespace incl. newline (wrapped attribute)
-    assert(Links.canonicalOf(dom(
-      "<link rel=\"alternate\ncanonical\" href=\"p7\">"), base)
+    assert(canonical(
+      "<link rel=\"alternate\ncanonical\" href=\"p7\">")
       == "https://h.test/dir/p7")
     // a canonical inside an explicit <body> is user-content injection —
     // ignored; the head one still wins
-    assert(Links.canonicalOf(dom(
-      """<body><p><link rel="canonical" href="/hijack"></p></body>"""),
-      base) == "")
-    assert(Links.canonicalOf(dom(
-      """<head><link rel="canonical" href="/real"></head><body><link rel="canonical" href="/hijack"></body>"""),
-      base) == "https://h.test/real")
+    assert(canonical(
+      """<body><p><link rel="canonical" href="/hijack"></p></body>""") == "")
+    assert(canonical(
+      """<head><link rel="canonical" href="/real"></head><body><link rel="canonical" href="/hijack"></body>""")
+      == "https://h.test/real")
   }
 
   test("links: head meta capture — key fold, property, body rejection") {
@@ -831,7 +854,7 @@ qux</a></p>
 <p><a href="b"><span style="display:none">secret</span>shown</a></p>
 <p><a href="c"><img src="x.png"></a></p>
 </body></html>"""))
-    val ls = Links.fromDom(dom, "https://h.test/")
+    val ls = Links.fromDom(dom, baseOf(dom, "https://h.test/"))
     // inline children concat WITHOUT injected space; whitespace runs
     // (incl newline) collapse; hidden subtree text excluded; image-only
     // anchor keeps ''
