@@ -735,8 +735,9 @@ object SparkEntry {
     }),
     "corpus_decontaminate_substring" -> ((s, dir) => {
       // exact-substring decontamination (Lee et al.): same held-out
-      // benchmark slice as the n-gram form, 40-char windows — catches
-      // tokenization-robust leaks word n-grams miss
+      // benchmark slice as the n-gram form, 40-char windows keyed like
+      // dedup_substrings' — catches tokenization-robust leaks word
+      // n-grams miss
       val d = docs(s, dir)
       CorpusStats.decontaminateSubstring(d, "doc_id", "text",
           d.filter(pmod(col("doc_id"), lit(13)) === 7), "text")
@@ -804,7 +805,9 @@ object SparkEntry {
     "dedup_substrings" -> ((s, dir) =>
       // exact substring-level dedup (Lee et al. 2021 ExactSubstr): maximal
       // ≥40-char runs occurring more than once in the corpus, at arbitrary
-      // boundaries — the modality passage/doc hashing cannot see
+      // boundaries — the modality passage/doc hashing cannot see. Spark
+      // keys windows with rolling_hash2, the oracle with md5, so equal
+      // runs is also a cross-strategy equality check
       Dedup.substringRuns(docs(s, dir), "doc_id", "text", minLen = 40)
         .orderBy("doc_id", "run_start")),
     "dedup_substrings_clean" -> ((s, dir) =>
@@ -823,16 +826,14 @@ object SparkEntry {
     "dedup_substrings_keep_first" -> ((s, dir) =>
       // keep-one-copy variant (Lee et al. keep-first): the lowest
       // (doc_id, pos) occurrence per duplicated gram family keeps its
-      // copy — only later copies emit removable runs. Spark hashes with
-      // the native rolling_hash2; the oracle replays md5 grams, so
-      // equal runs is also a cross-strategy equality check
+      // copy — only later copies emit removable runs; same window key
+      // and same cross-strategy check as dedup_substrings
       Dedup.substringRunsKeepFirst(docs(s, dir), "doc_id", "text",
           minLen = 40)
         .orderBy("doc_id", "run_start")),
     "dedup_substrings_rolling" -> ((s, dir) =>
-      // scale path: native O(n) Karp-Rabin rolling_hash (two 61-bit
-      // bases) instead of md5 per window; oracled against the SAME
-      // md5-gram SQL — equal runs is a cross-strategy equality check
+      // the earlier scale-path name of dedup_substrings: the same plan,
+      // kept so no query is dropped
       Dedup.substringRunsRolling(docs(s, dir), "doc_id", "text", minLen = 40)
         .orderBy("doc_id", "run_start")),
     "dedup_ngram_jaccard" -> ((s, dir) =>

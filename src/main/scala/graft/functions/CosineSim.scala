@@ -103,11 +103,8 @@ object GraftFunctions {
     NativeFunction("kll_quantiles", classOf[KllQuantiles], // mergeable quantiles
       a => KllQuantiles(a(0), litInt(a(1)), a.drop(2).map(litDouble))
         .toAggregateExpression()),
-    NativeFunction("rolling_hash2", classOf[RollingHash2], // O(n) dual-base windows
-      a => RollingHash2(a(0), litInt(a(1)), litInt(a(2)).toLong,
-        litInt(a(3)).toLong)),
-    NativeFunction("md5_grams", classOf[Md5Grams], // fused md5-per-window grams
-      a => Md5Grams(a(0), litInt(a(1)))))
+    NativeFunction("rolling_hash2", classOf[RollingHash2], // the window key
+      a => RollingHash2(a(0), litInt(a(1)))))
 
   /** Session-scoped once-marker: graft operators call register() on
     * every invocation; only the FIRST call per session actually writes

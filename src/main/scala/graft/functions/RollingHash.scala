@@ -6,37 +6,28 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** `rolling_hash2(text, L, B1, B2)`: the polynomial hashes (bases B1 and
-  * B2, modulus the Mersenne prime 2^61-1) of EVERY L-codepoint window of
-  * the text, in one O(n) pass [public technique: Karp & Rabin 1987
-  * "Efficient randomized pattern-matching algorithms"] — the scale path
-  * for exact substring-level dedup, replacing the O(n·L) md5-per-position
-  * formulation. Each element is the two 61-bit hashes packed big-endian
-  * into a 16-byte binary: a 122-bit key, collision-free in practice at
-  * corpus scale, and the same width and type as the md5 formulation's
-  * `unhex(md5(...))` gram key, so the downstream count/join machinery is
-  * shared unchanged.
+/** `rolling_hash2(text, L)`: THE window key of exact-substring matching
+  * — every substring-dedup and substring-decontamination operator keys
+  * its grams through it (via `graft.ops.TextGrams.charGramsExpr`). For
+  * every L-codepoint window of the text it computes, in one O(n) pass,
+  * two polynomial hashes modulo the Mersenne prime 2^61-1 at the fixed
+  * bases 131 and 137 [public technique: Karp & Rabin 1987 "Efficient
+  * randomized pattern-matching algorithms"], packed big-endian into one
+  * 16-byte binary: a 122-bit key, collision-free in practice at corpus
+  * scale.
   *
   * Exactness: each half is Σ c_j·B^(L-1-j) mod (2^61-1) over Unicode
-  * CODEPOINTS — a pure mathematical function a SQL oracle can recompute
-  * per-position with HUGEINT arithmetic, and which the md5-gram
-  * formulation must agree with on which positions collide (equal windows
-  * ⇔ equal hashes, up to negligible collision mass).
+  * CODEPOINTS, a pure function whose reference is the BigInt Horner form
+  * (test-pinned). The frozen DuckDB oracles hash each window with md5
+  * instead, so equal runs and hit counts are a cross-strategy check on
+  * every oracle run: equal windows ⇔ equal keys, under either hash.
   *
-  * Why fused: the earlier two-call form (one single-base hash array per
-  * base + `arrays_zip` + struct explode) materialized THREE O(n) arrays
-  * per document and decoded the codepoints twice; under the
-  * authoritative bench that allocation overhead made the "O(n) scale
-  * path" slower than the md5 form it replaces. This form decodes once,
-  * runs both recurrences in the same loop, and feeds a single
-  * `posexplode` — one array, one generator, one binary key. */
-case class RollingHash2(child: Expression, len: Int, base1: Long, base2: Long)
-    extends UnaryExpression {
+  * Both hashes come from one codepoint decode and one loop, into one
+  * array feeding one `posexplode`: one array per base, zipped, would
+  * materialize three O(n) arrays per document. */
+case class RollingHash2(child: Expression, len: Int) extends UnaryExpression {
 
   require(len >= 1, "rolling_hash2 needs len >= 1")
-  require(base1 >= 2 && base1 < RollingHashImpl.P, "bad rolling_hash2 base1")
-  require(base2 >= 2 && base2 < RollingHashImpl.P, "bad rolling_hash2 base2")
-  require(base1 != base2, "rolling_hash2 bases must differ")
 
   override def dataType: DataType =
     ArrayType(org.apache.spark.sql.types.BinaryType, containsNull = false)
@@ -53,11 +44,11 @@ case class RollingHash2(child: Expression, len: Int, base1: Long, base2: Long)
     }
 
   override protected def nullSafeEval(input: Any): Any =
-    RollingHashImpl.compute2(input.asInstanceOf[UTF8String], len, base1, base2)
+    RollingHashImpl.compute2(input.asInstanceOf[UTF8String], len)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c =>
-      s"graft.functions.RollingHashImpl.compute2($c, $len, ${base1}L, ${base2}L)")
+      s"graft.functions.RollingHashImpl.compute2($c, $len)")
 
   override protected def withNewChildInternal(newChild: Expression): RollingHash2 =
     copy(child = newChild)
@@ -70,6 +61,8 @@ case class RollingHash2(child: Expression, len: Int, base1: Long, base2: Long)
   * via Math.multiplyHigh, Mersenne folding for the reduction. */
 object RollingHashImpl {
   val P: Long = (1L << 61) - 1
+  private val B1 = 131L
+  private val B2 = 137L
 
   /** (a·b) mod P for 0 ≤ a,b < P — exact via 128-bit product split.
     * x = hi·2^64 + lo ≡ (hi·8 + lo>>>61)·2^61 + (lo & P)
@@ -91,8 +84,8 @@ object RollingHashImpl {
   /** One codepoint decode, both recurrences in one loop, each window's
     * (h1, h2) packed big-endian into 16 bytes; fewer than `l` codepoints
     * give an empty array. */
-  def compute2(s: UTF8String, l: Int, base1: Long,
-      base2: Long): org.apache.spark.sql.catalyst.util.ArrayData = {
+  def compute2(s: UTF8String,
+      l: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
     val str = s.toString
     val n = str.codePointCount(0, str.length)
     if (n < l)
@@ -108,7 +101,7 @@ object RollingHashImpl {
     var bl1 = 1L; var bl2 = 1L
     var j = 0
     while (j < l - 1) {
-      bl1 = mulmod(bl1, base1); bl2 = mulmod(bl2, base2); j += 1
+      bl1 = mulmod(bl1, B1); bl2 = mulmod(bl2, B2); j += 1
     }
     val out = new Array[Any](n - l + 1)
     @inline def pack(h1: Long, h2: Long): Array[Byte] = {
@@ -125,8 +118,8 @@ object RollingHashImpl {
     j = 0
     while (j < l) {
       val c = cps(j) % P
-      h1 = addmod(mulmod(h1, base1), c)
-      h2 = addmod(mulmod(h2, base2), c)
+      h1 = addmod(mulmod(h1, B1), c)
+      h2 = addmod(mulmod(h2, B2), c)
       j += 1
     }
     out(0) = pack(h1, h2)
@@ -136,9 +129,9 @@ object RollingHashImpl {
       val cOut = cps(i - 1) % P
       val cIn = cps(i + l - 1) % P
       h1 = addmod(h1, P - mulmod(cOut, bl1))
-      h1 = addmod(mulmod(h1, base1), cIn)
+      h1 = addmod(mulmod(h1, B1), cIn)
       h2 = addmod(h2, P - mulmod(cOut, bl2))
-      h2 = addmod(mulmod(h2, base2), cIn)
+      h2 = addmod(mulmod(h2, B2), cIn)
       out(i) = pack(h1, h2)
       i += 1
     }

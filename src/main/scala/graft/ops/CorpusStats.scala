@@ -766,17 +766,15 @@ object CorpusStats {
     * char-gram set is benchmark-sized, the corpus side is a map-side
     * semi-probe over per-doc DISTINCT gram hashes (the in-doc distinct
     * compresses repeated windows before the only exchange, the per-doc
-    * hit recount). Hex md5 keys here for oracle parity; at corpus
-    * scale the keys would ride unhexed (16-byte binary, the
-    * substringRuns convention) or as the fused rolling_hash2. */
+    * hit recount). Windows are keyed by [[TextGrams.charGramsExpr]],
+    * the same 16-byte key substring dedup uses. */
   def decontaminateSubstring(docs: DataFrame, idCol: String,
       textCol: String, bench: DataFrame, benchTextCol: String,
       minLen: Int = 40): DataFrame = {
+    graft.functions.GraftFunctions.register(docs.sparkSession)
     def grams(df: DataFrame, tc: String) = df
       .filter(length(col(tc)) >= minLen)
-      .withColumn("gh", explode(expr(
-        s"transform(sequence(1, length($tc) - $minLen + 1)," +
-          s" i -> md5(substring($tc, i, $minLen)))")))
+      .withColumn("gh", explode(TextGrams.charGramsExpr(tc, minLen)))
     val docGrams = grams(
       docs.select(col(idCol).as("doc_id"), col(textCol)), textCol)
       .select(col("doc_id"), col("gh")).distinct()

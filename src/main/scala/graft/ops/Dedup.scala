@@ -691,47 +691,32 @@ object Dedup {
     * paper's suffix array, built with two shuffles (hash count, doc
     * re-group) and no text movement. The gram table feeds both the count
     * and the join-back, so it is persisted once (the signature-table
-    * barrier, same as minhashLsh). */
+    * barrier, same as minhashLsh). Windows are keyed by
+    * [[TextGrams.charGramsExpr]], the native O(n) Karp-Rabin
+    * `rolling_hash2`. */
   def substringRuns(docs: DataFrame, idCol: String, textCol: String,
       minLen: Int = 40): DataFrame =
-    // md5_grams = the fused native form of
-    //   transform(sequence(1, length(text)-L+1),
-    //             i -> unhex(md5(substring(text, i, L))))
-    // — value-identical 16-byte keys (equality with the builtin spec
-    // is test-pinned), without the O(pos) substring walk per window,
-    // the hex/unhex round-trip, or a MessageDigest per call
-    substringRunsFromGrams(gramTable(docs, idCol, textCol, minLen,
-      s"md5_grams(text, $minLen)"), minLen)
+    substringRunsFromGrams(gramTable(docs, idCol, textCol, minLen), minLen)
 
   /** The persisted (doc_id, pos, h) gram table the substring operators
     * share: every `minLen`-gram of every long-enough doc, 1-based pos,
-    * `h` the key `hashSql` (one array per `text`) yields for it. */
+    * `h` its [[TextGrams.charGramsExpr]] key. */
   private def gramTable(docs: DataFrame, idCol: String, textCol: String,
-      minLen: Int, hashSql: String): DataFrame = {
+      minLen: Int): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
     Par.spread(docs
       .select(col(idCol).as("doc_id"), col(textCol).as("text"))
       .filter(length(col("text")) >= minLen), "doc_id")
-      .select(col("doc_id"), posexplode(expr(hashSql)))
+      .select(col("doc_id"),
+        posexplode(TextGrams.charGramsExpr("text", minLen)))
       .select(col("doc_id"), (col("pos") + 1).as("pos"), col("col").as("h"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
-  /** As `substringRuns`, but gram hashing is the native O(n) Karp-Rabin
-    * `rolling_hash2` expression (graft.functions.RollingHash2) — ONE
-    * fused pass over the codepoints instead of an md5 over every L-char
-    * window (40× less hash work at L=40). The two independent 61-bit
-    * bases are packed per window into one 16-byte binary key — the same
-    * key shape as the md5 form's `unhex(md5(...))`, ONE array
-    * materialization and ONE posexplode (the earlier two-call +
-    * `arrays_zip` form paid three O(n) array materializations per doc
-    * and benched slower than the md5 path it exists to beat). Same run
-    * output as the md5 form up to negligible collision mass, so the
-    * md5-based SQL oracle doubles as a cross-strategy check. */
+  /** [[substringRuns]] under its earlier scale-path name, which the
+    * `dedup_substrings_rolling` query and the bench still call. */
   def substringRunsRolling(docs: DataFrame, idCol: String, textCol: String,
-      minLen: Int = 40): DataFrame =
-    substringRunsFromGrams(gramTable(docs, idCol, textCol, minLen,
-      s"rolling_hash2(text, $minLen, 131, 137)"), minLen)
+      minLen: Int = 40): DataFrame = substringRuns(docs, idCol, textCol, minLen)
 
   /** Keep-first variant of exact substring dedup [Lee et al. 2021's
     * keep-one-occurrence option]: per duplicated gram family the OWNER
@@ -745,15 +730,14 @@ object Dedup {
     * exactly the characters covered by some non-owner duplicated gram,
     * the removable-span twin of `substringRuns`' definition.
     *
-    * 100 TB shape: identical to `substringRunsRolling` plus one extra
+    * 100 TB shape: identical to `substringRuns` plus one extra
     * column on the existing gram-count shuffle — the owner is a
     * `min(struct(doc_id, pos))` carried by the same aggregation that
     * counts the family, so no extra shuffle, no global coordination
     * step, and text still never moves. */
   def substringRunsKeepFirst(docs: DataFrame, idCol: String, textCol: String,
       minLen: Int = 40): DataFrame = {
-    val grams = gramTable(docs, idCol, textCol, minLen,
-      s"rolling_hash2(text, $minLen, 131, 137)")
+    val grams = gramTable(docs, idCol, textCol, minLen)
     val fam = grams.groupBy("h")
       .agg(count(lit(1)).as("n"),
         min(struct(col("doc_id"), col("pos"))).as("own"))
@@ -783,7 +767,7 @@ object Dedup {
   def substringRunsClean(docs: DataFrame, idCol: String, textCol: String,
       minLen: Int = 40): DataFrame =
     cleanFromRuns(docs, idCol, textCol,
-      substringRunsRolling(docs, idCol, textCol, minLen))
+      substringRuns(docs, idCol, textCol, minLen))
 
   /** Keep-first APPLY: cut only NON-OWNER duplicated runs — the owner
     * copy (lowest (doc_id, pos) per gram family) survives verbatim, so

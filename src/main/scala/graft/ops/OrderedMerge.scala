@@ -33,7 +33,6 @@ object OrderedMerge {
   def concatOrdered(df: DataFrame, keyCol: String, orderCol: String,
       valueCol: String, sep: String,
       nName: String = "n_docs", mergedName: String = "merged"): DataFrame = {
-    val spark = df.sparkSession
     val sorted = df
       .repartition(col(keyCol))
       .sortWithinPartitions(col(keyCol), col(orderCol))
@@ -44,9 +43,11 @@ object OrderedMerge {
         org.apache.spark.sql.types.LongType, nullable = false),
       org.apache.spark.sql.types.StructField(mergedName,
         org.apache.spark.sql.types.StringType, nullable = true)))
-    // .rdd preserves the per-partition sort; the streaming pass holds ONE
-    // output string at a time (the whole point vs collect_list)
-    val rows = sorted.rdd.mapPartitions { it =>
+    // mapPartitions preserves the per-partition sort; the streaming pass
+    // holds ONE output string at a time (the whole point vs collect_list).
+    // Dataset.mapPartitions, not .rdd: under AQE `.rdd` finalizes the
+    // plan, running every upstream shuffle while the caller only builds
+    sorted.mapPartitions { it =>
       val buf = it.buffered
       new Iterator[org.apache.spark.sql.Row] {
         def hasNext: Boolean = buf.hasNext
@@ -74,7 +75,6 @@ object OrderedMerge {
             if (emitted == 0L) null else sb.toString)
         }
       }
-    }
-    spark.createDataFrame(rows, outSchema)
+    }(org.apache.spark.sql.Encoders.row(outSchema))
   }
 }

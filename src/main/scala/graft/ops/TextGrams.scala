@@ -4,11 +4,12 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Shared text-gram and hash-coin column builders. ONE owner for the
-  * SQL algebra that [[CorpusStats]], [[CountMin]] and [[Bloom]] must
-  * keep bit-identical with their DuckDB oracles: the whitespace word
-  * split, the n-word md5 gram window, and the md5-coin bit/row
-  * position. A private copy drifting in any one operator would silently
-  * un-sync the cross-operator invariants (e.g. Bloom's
+  * SQL algebra that [[CorpusStats]], [[CountMin]], [[Bloom]] and
+  * [[Dedup]] must keep consistent with their DuckDB oracles: the
+  * whitespace word split, the n-word md5 gram window, the L-codepoint
+  * window key, and the md5-coin bit/row position. A private copy
+  * drifting in any one operator would silently un-sync the
+  * cross-operator invariants (e.g. Bloom's
   * bloom_hits ≥ exact n_hits admissibility relies on BOTH decontaminate
   * forms hashing the identical grams). */
 private[ops] object TextGrams {
@@ -25,6 +26,16 @@ private[ops] object TextGrams {
     s"case when size(ws) >= $n then transform(sequence(1, size(ws) - $n + 1)," +
       s" i -> md5(array_join(slice(ws, i, $n), ' '))) " +
       "else array() end")
+
+  /** Character-gram key list of `textCol`: the `rolling_hash2` key of
+    * every `l`-codepoint window (stride 1; element i is the window at
+    * 1-based position i + 1), empty below `l` codepoints. The one window
+    * key of exact-substring matching — substring dedup and substring
+    * decontamination must key windows alike or their runs and hits
+    * silently stop agreeing. Callers register
+    * [[graft.functions.GraftFunctions]] on the session first. */
+  def charGramsExpr(textCol: String, l: Int): Column =
+    expr(s"rolling_hash2($textCol, $l)")
 
   /** (token, doc_id, tf) grain — one row per distinct token per doc, by
     * two-phase hash agg. ONE owner (same rationale as the class doc):

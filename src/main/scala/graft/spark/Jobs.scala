@@ -114,9 +114,16 @@ object Jobs {
     * The `end` alias stays OPEN-ENDED (posCol >= lo) instead of being
     * resolved against a row count — at warehouse scale the total is
     * table metadata you should not have to fetch (let alone count()),
-    * and `GreaterThanOrEqual` pushes into the parquet scan identically. */
+    * and `GreaterThanOrEqual` pushes into the parquet scan identically.
+    * A fragment whose LOWER bound is `end` ("end", "end-end") names the
+    * last position itself, which an open-ended filter cannot know, so it
+    * fails instead of silently selecting nothing. */
   def subsetFilterOpenEnd(posCol: Column, spec: String,
-      firstPosValue: Long = 1L): Column =
+      firstPosValue: Long = 1L): Column = {
+    require(spec == null ||
+      !spec.split(',').exists(_.split('-').headOption.exists(_.trim == "end")),
+      s"page spec '$spec': a fragment starting at `end` needs the row " +
+        "count, which an open-ended filter does not know")
     Ranges.intervals(spec, Int.MaxValue)
       .map { case (lo, hi) =>
         // spec position p (1-based) lives at column value p - 1 + first
@@ -130,6 +137,7 @@ object Jobs {
       }
       .reduceOption(_ || _)
       .getOrElse(lit(false))
+  }
 
   /** Subset selection on the synthetic source: selection happens at
     * GENERATION (the partition-pruning analog — out-of-range rows are

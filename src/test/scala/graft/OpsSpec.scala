@@ -498,8 +498,8 @@ class OpsSpec extends AnyFunSuite {
       }
     }
     // the two big-endian 61-bit halves of each packed window key
-    def halves(s: String, l: Int, b1: Long, b2: Long): Seq[(Long, Long)] = {
-      val a = RollingHashImpl.compute2(UTF8String.fromString(s), l, b1, b2)
+    def halves(s: String, l: Int): Seq[(Long, Long)] = {
+      val a = RollingHashImpl.compute2(UTF8String.fromString(s), l)
       (0 until a.numElements()).map { i =>
         val bb = java.nio.ByteBuffer.wrap(a.getBinary(i))
         (bb.getLong(), bb.getLong())
@@ -510,13 +510,14 @@ class OpsSpec extends AnyFunSuite {
       "数据处理管道提取文档内容分析系统网络页面文本", // multibyte CJK
       "emoji 😀 astral codepoints 🚀 mix", // surrogate pairs
       "aaaaaaaaaaaaaaaaaaaa") // degenerate repetition
-    for (s <- samples; l <- Seq(3, 8); (b1, b2) <- Seq((131L, 137L), (137L, 131L))) {
-      val got = halves(s, l, b1, b2)
-      assert(got.map(_._1) == reference(s, l, b1), s"drift on '$s' l=$l b=$b1")
-      assert(got.map(_._2) == reference(s, l, b2), s"drift on '$s' l=$l b=$b2")
+    // the kernel's fixed bases: 131 for the high half, 137 for the low
+    for (s <- samples; l <- Seq(3, 8)) {
+      val got = halves(s, l)
+      assert(got.map(_._1) == reference(s, l, 131L), s"drift on '$s' l=$l b=131")
+      assert(got.map(_._2) == reference(s, l, 137L), s"drift on '$s' l=$l b=137")
     }
     // shorter than window → empty
-    assert(halves("ab", 3, 131L, 137L).isEmpty)
+    assert(halves("ab", 3).isEmpty)
   }
 
   test("rolling hash2: fused dual-base pass is the packed twin of compute") {
@@ -541,28 +542,62 @@ class OpsSpec extends AnyFunSuite {
       val u = UTF8String.fromString(s)
       val h1 = compute(s, l, 131L)
       val h2 = compute(s, l, 137L)
-      val fused = RollingHashImpl.compute2(u, l, 131L, 137L)
+      val fused = RollingHashImpl.compute2(u, l)
       assert(fused.numElements() == h1.length)
       for (i <- h1.indices)
         assert(fused.getBinary(i).toSeq == bePack(h1(i), h2(i)),
           s"pack drift at $i on '$s' l=$l")
     }
-    assert(RollingHashImpl.compute2(UTF8String.fromString("ab"), 3, 131L, 137L)
+    assert(RollingHashImpl.compute2(UTF8String.fromString("ab"), 3)
       .numElements() == 0)
   }
 
-  test("dedup substrings rolling: same runs as the md5 formulation") {
+  test("dedup substrings: runs and keep-first runs equal a brute-force reference") {
     import spark.implicits._
-    val shared = "0123456789" * 6
-    val d1 = "AAAA unique prefix oneX" + shared + "Yunique suffix alpha zzz"
-    val d2 = "BB other start twoP" + shared + "Qdifferent ending beta qqq"
-    val d3 = "completely disjoint text with no forty-char overlap at all " +
-      "abcdefghijklmnopqrstuvwxyz ABCDEFGHIJKLMNOPQRSTUVWXYZ!"
-    val df = Seq((1L, d1), (2L, d2), (3L, d3)).toDF("doc_id", "text")
-    def rows(r: org.apache.spark.sql.DataFrame) =
-      r.collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSet
-    assert(rows(Dedup.substringRunsRolling(df, "doc_id", "text", 40)) ==
-      rows(Dedup.substringRuns(df, "doc_id", "text", 40)))
+    val l = 12
+    // seeded multibyte corpus: short words from a small mixed-script
+    // vocabulary repeat often enough to duplicate many 12-codepoint
+    // windows, within and across docs, at arbitrary boundaries
+    val vocab = Seq("ab", "数据", "😀x", "café", "q", "ñé", "🚀", "zz", "文本")
+    val rnd = new scala.util.Random(7)
+    // plus two l-codepoint blocks found apart in docs 25 and 26 and
+    // TOUCHING in doc 27 (p2 = p1 + l): one run there, not two
+    val (x, y) = ("ΑΒΓΔΕΖΗΘΙΚΛΜ", "абвгдежзийкл")
+    val corpus = (1L to 24L).map { id =>
+      id -> Seq.fill(4 + rnd.nextInt(16))(vocab(rnd.nextInt(vocab.size)))
+        .mkString(" ")
+    } ++ Seq(25L -> s"($x)", 26L -> s"[$y]", 27L -> s"<$x$y>")
+    // every window as (doc_id, 1-based codepoint pos, window text)
+    val windows = for {
+      (id, t) <- corpus
+      cps = t.codePoints().toArray
+      i <- 0 to cps.length - l
+    } yield (id, i + 1L, new String(cps, i, l))
+    val byWindow = windows.groupBy(_._3)
+    // islands: sorted duplicated positions merge while p2 <= p1 + l
+    def runs(dup: Seq[(Long, Long)]): Set[(Long, Long, Long)] =
+      dup.groupBy(_._1).toSeq.flatMap { case (id, ps) =>
+        ps.map(_._2).sorted.foldLeft(List.empty[(Long, Long)]) {
+          case ((s0, e) :: rest, p) if p <= e + 1 => (s0, p + l - 1) :: rest
+          case (acc, p) => (p, p + l - 1) :: acc
+        }.map { case (s0, e) => (id, s0, e) }
+      }.toSet
+    val dropAll = runs(windows.filter(w => byWindow(w._3).size >= 2)
+      .map(w => (w._1, w._2)))
+    // keep-first: the lowest (doc_id, pos) occurrence owns each window
+    val keepFirst = runs(windows.filter { w =>
+      val occ = byWindow(w._3).map(o => (o._1, o._2))
+      occ.size >= 2 && (w._1, w._2) != occ.min
+    }.map(w => (w._1, w._2)))
+    assert(dropAll.nonEmpty && keepFirst.nonEmpty && keepFirst != dropAll)
+    assert(dropAll.contains((27L, 2L, 1L + 2 * l)) &&
+      keepFirst.contains((27L, 2L, 1L + 2 * l)))
+    val df = corpus.toDF("doc_id", "text")
+    def rows(r: org.apache.spark.sql.DataFrame) = r.collect()
+      .map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSet
+    assert(rows(Dedup.substringRuns(df, "doc_id", "text", l)) == dropAll)
+    assert(rows(Dedup.substringRunsKeepFirst(df, "doc_id", "text", l)) ==
+      keepFirst)
   }
 
   test("dedup substrings keep-first: owner copy kept, later copies run") {
@@ -818,8 +853,7 @@ class OpsSpec extends AnyFunSuite {
       "minhash_sigs" -> "minhash_sigs(CAST(NULL AS STRING))",
       "kmv_minima" -> "kmv_minima(CAST(NULL AS STRING), 4)",
       "kll_quantiles" -> "kll_quantiles(CAST(NULL AS DOUBLE), 8, 0.5)",
-      "rolling_hash2" -> "rolling_hash2(CAST(NULL AS STRING), 4, 131, 137)",
-      "md5_grams" -> "md5_grams(CAST(NULL AS STRING), 4)")
+      "rolling_hash2" -> "rolling_hash2(CAST(NULL AS STRING), 4)")
     assert(GraftFunctions.table.map(_.name).sorted == nullCalls.keys.toSeq.sorted)
     // per row: resolution, the DESCRIBE FUNCTION class, the NULL result
     def probe(s: SparkSession): Map[String, Seq[Any]] =
@@ -863,38 +897,6 @@ class OpsSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     builtin.foreach { case (id, sig) =>
       assert(native(id) == sig, s"doc $id minhash drift")
-    }
-  }
-
-  test("md5_grams native expression equals the builtin spec") {
-    import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
-    // texts >= L chars (the operator domain: substringRuns filters
-    // shorter docs before hashing), multibyte rows pinning the
-    // byte-offset-per-character window math, and the rest of the domain:
-    // lengths 0, 1 and L-1 (the builtin's descending sequence gives
-    // degenerate windows there) and NULL
-    val docs = Seq("exactly-forty-characters-long-string-42!",
-      "the quick brown fox jumps over the lazy dog and keeps running onward",
-      "naïve café — résumé text with multibyte çhars über ånd mœre " +
-        "padded out to comfortably exceed forty characters",
-      "数据处理管道提取文档内容分析系统网络页面文本引擎多字节" * 3,
-      ("repeat me " * 30).trim,
-      "", "x", "thirty-nine-characters-long-string-39!!", "é" * 39,
-      null).zipWithIndex
-      .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
-    val l = 40
-    def grams(g: org.apache.spark.sql.Column) =
-      docs.select(col("doc_id"), g.as("g")).collect()
-        .map(r => r.getLong(0) ->
-          Option(r.getSeq[Array[Byte]](1)).map(_.map(_.toSeq))).toMap
-    val builtin = grams(expr(s"transform(sequence(1, length(text) - $l + 1)," +
-      s" i -> unhex(md5(substring(text, i, $l))))"))
-    val native = grams(expr(s"md5_grams(text, $l)"))
-    assert(builtin.size == 10 && builtin(9L).isEmpty)
-    assert(builtin(5L).exists(_.size == l + 1)) // "" → sequence(1, 1-L)
-    builtin.foreach { case (id, g) =>
-      assert(native(id) == g, s"doc $id md5_grams drift")
     }
   }
 
@@ -951,6 +953,28 @@ class OpsSpec extends AnyFunSuite {
     val (spread, jobs) = jobsDuring(Par.spread(grouped, "k"))
     assert(jobs == 0, s"$jobs job(s) ran while building")
     assert(spread.count() == 10)
+  }
+
+  test("substring operators: building runs no Spark job") {
+    import spark.implicits._
+    val df = Seq((1L, "a shared passage of text " * 3),
+      (2L, "x" + "a shared passage of text " * 2)).toDF("doc_id", "text")
+    val bench = Seq("a shared passage of text " * 2).toDF("text")
+    val builds: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "substringRuns" -> (() => Dedup.substringRuns(df, "doc_id", "text")),
+      "substringRunsKeepFirst" ->
+        (() => Dedup.substringRunsKeepFirst(df, "doc_id", "text")),
+      "substringRunsClean" ->
+        (() => Dedup.substringRunsClean(df, "doc_id", "text")),
+      "substringRunsCleanKeepFirst" ->
+        (() => Dedup.substringRunsCleanKeepFirst(df, "doc_id", "text")),
+      "decontaminateSubstring" -> (() => graft.ops.CorpusStats
+        .decontaminateSubstring(df, "doc_id", "text", bench, "text")))
+    for ((name, build) <- builds) {
+      val (out, jobs) = jobsDuring(build())
+      assert(jobs == 0, s"$name: $jobs job(s) ran while building")
+      assert(out.count() > 0, name)
+    }
   }
 
   test("simhash64 native expression is bit-identical to the builtin spec") {
@@ -1764,9 +1788,7 @@ class OpsSpec extends AnyFunSuite {
       "cosine_sim" -> (Seq(a, b), vectors),
       "simhash64" -> (Seq(str), texts),
       "minhash_sigs" -> (Seq(str), texts),
-      "rolling_hash2" -> (Seq(str, Literal(8), Literal(131), Literal(137)),
-        texts),
-      "md5_grams" -> (Seq(str, Literal(8)), texts))
+      "rolling_hash2" -> (Seq(str, Literal(8)), texts))
     val scalar = GraftFunctions.table
       .filterNot(f => classOf[AggregateFunction].isAssignableFrom(f.cls))
     assert(scalar.map(_.name).sorted == calls.keys.toSeq.sorted)

@@ -369,6 +369,13 @@ class PipelineSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSet
     assert(open == resolved) // no driver-side count needed for `end`
     assert(open.contains(299L) && !open.contains(150L))
+    // a bare `end` names the last row, which an open filter cannot know:
+    // it fails loudly instead of selecting nothing
+    Seq("1,end", "end-end", " end -300").foreach { bad =>
+      val e = intercept[IllegalArgumentException](
+        graft.spark.Jobs.subsetFilterOpenEnd(col("doc_id"), bad))
+      assert(e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
   }
 
   test("skew: salted key spreads the hot host across partitions") {

@@ -2,6 +2,7 @@
 """Local stand-in for the driver's DuckDB oracle compare.
 
 Usage: check_oracle.py [VERIFY_OUT_DIR]   (default /tmp/verify_out)
+       check_oracle.py --rows-equal DIR_A DIR_B
 
 Exits 1 at once if Verify left an INVARIANT_VIOLATIONS file. Otherwise
 runs each query in its own child process with a fresh DuckDB connection:
@@ -11,6 +12,13 @@ oracle SQL, sorts columns by name, and compares row counts, schemas
 The parent prints each child's verdict with its peak resident size, so
 one query's buffers cannot starve the next and a query that dies (say,
 SIGKILLed) fails alone instead of ending the run.
+
+--rows-equal compares two Verify out dirs with no oracle: per query
+(each subdirectory, read as <dir>/<query>/*.parquet) the rows must be
+equal as multisets, checked by EXCEPT ALL both ways after the column
+names and types match. It prints the compared-query count and exits 1
+on any difference, when the two dirs hold different query sets, or when
+there is no query to compare (a wrong path must not pass vacuously).
 """
 import json, os, subprocess, sys, math
 
@@ -69,6 +77,50 @@ def compare(outdir, name, sql):
         return False, f"[FAIL] {name}: col={col} row={i}: spark={x!r} oracle={y!r}"
     return True, f"[ ok ] {name}: {len(a)} rows"
 
+
+def queries(outdir):
+    """The query names of a Verify out dir: its subdirectories."""
+    return {e.name for e in os.scandir(outdir) if e.is_dir()}
+
+
+def rows_equal(dir_a, dir_b):
+    """Exit status of the --rows-equal comparison of two out dirs."""
+    import duckdb
+    names_a, names_b = queries(dir_a), queries(dir_b)
+    for only, where in ((names_a - names_b, dir_a), (names_b - names_a, dir_b)):
+        for name in sorted(only):
+            print(f"[FAIL] {name}: only in {where}")
+    con = duckdb.connect(config={"memory_limit": "4GB", "threads": 2})
+    same = 0
+    for name in sorted(names_a & names_b):
+        a = f"read_parquet('{dir_a}/{name}/*.parquet')"
+        b = f"read_parquet('{dir_b}/{name}/*.parquet')"
+        try:
+            cols_a = con.execute(f"DESCRIBE SELECT * FROM {a}").fetchall()
+            cols_b = con.execute(f"DESCRIBE SELECT * FROM {b}").fetchall()
+            if [c[:2] for c in cols_a] != [c[:2] for c in cols_b]:
+                print(f"[FAIL] {name}: columns differ")
+                continue
+            diff = [con.execute(
+                f"SELECT count(*) FROM (SELECT * FROM {x} EXCEPT ALL "
+                f"SELECT * FROM {y})").fetchone()[0]
+                for x, y in ((a, b), (b, a))]
+        except Exception as e:
+            print(f"[FAIL] {name}: {e}")
+            continue
+        if diff != [0, 0]:
+            print(f"[FAIL] {name}: {diff[0]} rows only in {dir_a}, "
+                  f"{diff[1]} only in {dir_b}")
+            continue
+        same += 1
+    compared = len(names_a & names_b)
+    print(f"\n{same} of {compared} queries equal "
+          f"({len(names_a)} in {dir_a}, {len(names_b)} in {dir_b})")
+    return 0 if compared and same == compared and names_a == names_b else 1
+
+
+if len(sys.argv) == 4 and sys.argv[1] == "--rows-equal":
+    sys.exit(rows_equal(sys.argv[2], sys.argv[3]))
 
 if len(sys.argv) == 4 and sys.argv[1] == "--one":
     # child: one query, verdict on stdout, exit status 0 iff it passed
