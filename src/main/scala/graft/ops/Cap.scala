@@ -42,7 +42,16 @@ private[graft] object Cap {
   /** The window shape: cap `rows` on `keys`, then persist — the barrier
     * that keeps Catalyst from inlining the (often md5-heavy) explode into
     * both self-join sides and that carries the window's partitioning to
-    * the join. */
+    * the join.
+    *
+    * On the lifetime of this and every other operator persist barrier:
+    * the barrier must outlive the returned LAZY DataFrame, so operators
+    * cannot unpersist internally. MEMORY_AND_DISK caching degrades by
+    * LRU eviction/spill (never job failure) when a long-lived session
+    * accumulates barriers; a session running many corpora should
+    * `spark.catalog.clearCache()` between them — and at warehouse scale
+    * the barrier is a written signature TABLE, not an RDD cache, by
+    * design. */
   def window(rows: DataFrame, keys: Seq[String], max: Int): DataFrame =
     rows.withColumn("bucket_n",
         count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * reproduces values bit-exactly with no float-rounding hazard.
   *
   * Persist barriers here follow the same lifetime contract documented at
-  * Dedup.substringRunsFromGrams: the barrier must outlive the returned
+  * Cap.window: the barrier must outlive the returned
   * lazy DataFrame, eviction degrades by LRU/spill, and at warehouse
   * scale each barrier is a written table, not an RDD cache.
   */

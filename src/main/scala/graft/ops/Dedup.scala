@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for the training-data pipeline. All of these
@@ -430,7 +431,7 @@ object Dedup {
   }
 
   /** [[resolveClusters]]' edge table: (src, dst) ids cast to long, in
-    * both directions, distinct. */
+    * both directions, distinct; `pairs` is read once. */
   private[graft] def edgeTable(pairs: DataFrame, aCol: String,
       bCol: String): DataFrame = {
     // numeric ids only, checked at the SCHEMA level: under LEGACY
@@ -444,10 +445,13 @@ object Dedup {
         s"resolveClusters needs integral ids; '$c' is $dt — map opaque " +
           "ids to longs (e.g. xxhash64) before clustering")
     }
-    val dir = pairs.select(col(aCol).cast("long").as("src"),
-      col(bCol).cast("long").as("dst"))
-    dir.union(dir.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
+    // both orientations from ONE scan: a union of the pairs with their
+    // mirror would plan the whole candidate pipeline twice, and AQE does
+    // not reuse the twin's exchanges
+    def edge(s: String, d: String) =
+      struct(col(s).cast("long").as("src"), col(d).cast("long").as("dst"))
+    pairs.select(explode(array(edge(aCol, bCol), edge(bCol, aCol))).as("e"))
+      .select("e.*").distinct()
   }
 
   /** [[resolveClusters]]' driver path over pulled (src, dst) edge rows:
@@ -688,17 +692,23 @@ object Dedup {
     *
     * 100 TB shape: the position table is O(total chars) compact rows
     * (16-byte hash, id, pos) — the same asymptotic footprint as the
-    * paper's suffix array, built with two shuffles (hash count, doc
-    * re-group) and no text movement. The gram table feeds both the count
-    * and the join-back, so it is persisted once (the signature-table
-    * barrier, same as minhashLsh). Windows are keyed by
+    * paper's suffix array — and it is read exactly once, never
+    * persisted. Two shuffles: one on `h`, where a window count over the
+    * key group keeps the duplicated windows in place (a count aggregate
+    * would need a join back to the grams, and so a second read or a
+    * cache of them), then the doc re-group of the islands merge. Text
+    * never moves. A hot `h` is one window group, which
+    * `WindowExec` buffers with spill — the same single-reducer exposure
+    * a join on `h` has. Windows are keyed by
     * [[TextGrams.charGramsExpr]], the native O(n) Karp-Rabin
     * `rolling_hash2`. */
   def substringRuns(docs: DataFrame, idCol: String, textCol: String,
       minLen: Int = 40): DataFrame =
-    substringRunsFromGrams(gramTable(docs, idCol, textCol, minLen), minLen)
+    runsFromDupPositions(gramTable(docs, idCol, textCol, minLen)
+      .withColumn("n", count(lit(1)).over(Window.partitionBy("h")))
+      .filter(col("n") > 1), minLen)
 
-  /** The persisted (doc_id, pos, h) gram table the substring operators
+  /** The (doc_id, pos, h) gram projection the substring operators
     * share: every `minLen`-gram of every long-enough doc, 1-based pos,
     * `h` its [[TextGrams.charGramsExpr]] key. */
   private def gramTable(docs: DataFrame, idCol: String, textCol: String,
@@ -710,7 +720,6 @@ object Dedup {
       .select(col("doc_id"),
         posexplode(TextGrams.charGramsExpr("text", minLen)))
       .select(col("doc_id"), (col("pos") + 1).as("pos"), col("col").as("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
   /** [[substringRuns]] under its earlier scale-path name, which the
@@ -730,25 +739,18 @@ object Dedup {
     * exactly the characters covered by some non-owner duplicated gram,
     * the removable-span twin of `substringRuns`' definition.
     *
-    * 100 TB shape: identical to `substringRuns` plus one extra
-    * column on the existing gram-count shuffle — the owner is a
-    * `min(struct(doc_id, pos))` carried by the same aggregation that
-    * counts the family, so no extra shuffle, no global coordination
-    * step, and text still never moves. */
+    * 100 TB shape: identical to `substringRuns` — the owner is a
+    * `min(struct(doc_id, pos))` over the same window on `h`, so no
+    * extra shuffle, no global coordination step, and text still never
+    * moves. No count is needed: a family of one is its own owner, so
+    * dropping owners drops it too. */
   def substringRunsKeepFirst(docs: DataFrame, idCol: String, textCol: String,
-      minLen: Int = 40): DataFrame = {
-    val grams = gramTable(docs, idCol, textCol, minLen)
-    val fam = grams.groupBy("h")
-      .agg(count(lit(1)).as("n"),
-        min(struct(col("doc_id"), col("pos"))).as("own"))
-      .filter(col("n") > 1)
-      .select(col("h"), col("own"))
-    val dupPos = grams.join(fam, Seq("h"))
+      minLen: Int = 40): DataFrame =
+    runsFromDupPositions(gramTable(docs, idCol, textCol, minLen)
+      .withColumn("own", min(struct(col("doc_id"), col("pos")))
+        .over(Window.partitionBy("h")))
       .filter(col("doc_id") =!= col("own.doc_id") ||
-        col("pos") =!= col("own.pos"))
-      .select("doc_id", "pos")
-    runsFromDupPositions(dupPos, minLen)
-  }
+        col("pos") =!= col("own.pos")), minLen)
 
   /** Substring-dedup APPLY: cut every duplicated run (ALL copies) out of
     * every document — the drop-all-occurrences variant of Lee et al.
@@ -787,8 +789,7 @@ object Dedup {
       .select(col("doc_id"), col("run_start"), col("run_end"),
         col("run_len"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id").orderBy("run_start")
+    val w = Window.partitionBy("doc_id").orderBy("run_start")
     val gaps = runs
       .withColumn("gs", coalesce(lag(col("run_end"), 1).over(w), lit(0L)) + 1)
       .withColumn("ge", col("run_start") - 1)
@@ -816,41 +817,20 @@ object Dedup {
         md5(coalesce(col("clean"), col("text")).cast("binary")).as("clean_md5"))
   }
 
-  /** Shared tail of the substring-dedup formulations: corpus-duplicated
-    * gram keys → per-doc surviving positions → maximal runs
-    * (gaps-and-islands). `grams` must have (doc_id, pos, h).
-    *
-    * On the persisted gram tables' lifetime: the barrier must outlive the
-    * returned LAZY DataFrame, so these operators cannot unpersist
-    * internally. MEMORY_AND_DISK caching degrades by LRU eviction/spill
-    * (never job failure) when a long-lived session accumulates barriers;
-    * a session running many corpora should `spark.catalog.clearCache()`
-    * between them — and at warehouse scale the barrier is a written
-    * signature TABLE, not an RDD cache, by design. */
-  private def substringRunsFromGrams(grams: DataFrame,
-      minLen: Int): DataFrame = {
-    val dupHashes = grams.groupBy("h")
-      .agg(count(lit(1)).as("n")).filter(col("n") > 1)
-      .select("h")
-    val dupPos = grams.join(dupHashes, Seq("h")).select("doc_id", "pos")
-    runsFromDupPositions(dupPos, minLen)
-  }
-
   /** Islands tail shared by the drop-all and keep-first formulations:
-    * surviving duplicated positions → maximal runs per doc. */
+    * surviving duplicated (doc_id, pos) positions → maximal runs per
+    * doc. */
   private def runsFromDupPositions(dupPos: DataFrame,
       minLen: Int): DataFrame = {
     // gaps-and-islands per doc: grams at p1 < p2 overlap/touch iff
     // p2 ≤ p1 + minLen, else a new run starts
-    val wOrd = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id").orderBy("pos")
-    dupPos
+    val wOrd = Window.partitionBy("doc_id").orderBy("pos")
+    dupPos.select("doc_id", "pos")
       .withColumn("newrun",
         when(col("pos") > lag(col("pos"), 1).over(wOrd) + minLen, 1)
           .otherwise(lit(0)))
       .withColumn("run_id", sum(col("newrun")).over(wOrd.rowsBetween(
-        org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)))
+        Window.unboundedPreceding, Window.currentRow)))
       .groupBy("doc_id", "run_id")
       .agg(min(col("pos")).as("run_start"),
         (max(col("pos")) + lit(minLen) - 1).as("run_end"))

@@ -552,21 +552,28 @@ class OpsSpec extends AnyFunSuite {
       .numElements() == 0)
   }
 
-  test("dedup substrings: runs and keep-first runs equal a brute-force reference") {
-    import spark.implicits._
-    val l = 12
-    // seeded multibyte corpus: short words from a small mixed-script
-    // vocabulary repeat often enough to duplicate many 12-codepoint
-    // windows, within and across docs, at arbitrary boundaries
+  /** Window length of [[bruteCorpus]]. */
+  private val bruteL = 12
+
+  /** Seeded multibyte corpus: short words from a small mixed-script
+    * vocabulary repeat often enough to duplicate many 12-codepoint
+    * windows, within and across docs, at arbitrary boundaries; plus two
+    * l-codepoint blocks found apart in docs 25 and 26 and TOUCHING in
+    * doc 27 (p2 = p1 + l): one run there, not two. */
+  private lazy val bruteCorpus: Seq[(Long, String)] = {
     val vocab = Seq("ab", "数据", "😀x", "café", "q", "ñé", "🚀", "zz", "文本")
     val rnd = new scala.util.Random(7)
-    // plus two l-codepoint blocks found apart in docs 25 and 26 and
-    // TOUCHING in doc 27 (p2 = p1 + l): one run there, not two
     val (x, y) = ("ΑΒΓΔΕΖΗΘΙΚΛΜ", "абвгдежзийкл")
-    val corpus = (1L to 24L).map { id =>
+    (1L to 24L).map { id =>
       id -> Seq.fill(4 + rnd.nextInt(16))(vocab(rnd.nextInt(vocab.size)))
         .mkString(" ")
     } ++ Seq(25L -> s"($x)", 26L -> s"[$y]", 27L -> s"<$x$y>")
+  }
+
+  test("dedup substrings: runs and keep-first runs equal a brute-force reference") {
+    import spark.implicits._
+    val l = bruteL
+    val corpus = bruteCorpus
     // every window as (doc_id, 1-based codepoint pos, window text)
     val windows = for {
       (id, t) <- corpus
@@ -598,6 +605,33 @@ class OpsSpec extends AnyFunSuite {
     assert(rows(Dedup.substringRuns(df, "doc_id", "text", l)) == dropAll)
     assert(rows(Dedup.substringRunsKeepFirst(df, "doc_id", "text", l)) ==
       keepFirst)
+  }
+
+  test("dedup substrings and clusters: rows do not depend on shuffle partitions") {
+    import spark.implicits._
+    val key = "spark.sql.shuffle.partitions"
+    val was = spark.conf.getOption(key)
+    // every operator's rows, built and collected under one setting
+    def at(parts: Int): Seq[Set[Seq[Any]]] = {
+      spark.conf.set(key, parts.toString)
+      val df = bruteCorpus.toDF("doc_id", "text")
+      val graphs = (1 to 4).map { seed =>
+        val rnd = new scala.util.Random(seed)
+        Seq.fill(30)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
+          .toDF("doc_a", "doc_b")
+      }
+      (Seq(Dedup.substringRuns(df, "doc_id", "text", bruteL),
+        Dedup.substringRunsKeepFirst(df, "doc_id", "text", bruteL)) ++
+        graphs.map(Dedup.resolveClusters(_)) ++
+        graphs.map(g => Dedup.minLabelClusters(
+          Dedup.edgeTable(g, "doc_a", "doc_b"), 50)))
+        .map(_.collect().map(_.toSeq).toSet)
+    }
+    try {
+      val one = at(1)
+      assert(one.forall(_.nonEmpty))
+      assert(at(8) == one)
+    } finally was.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("dedup substrings keep-first: owner copy kept, later copies run") {
@@ -3068,5 +3102,45 @@ class OpsSpec extends AnyFunSuite {
       "containmentPairs" -> Seq(0, 7, 7, 4),
       "winnow" -> Seq(0, 3, 3, 4),
       "allPairsSetCosine" -> Seq(4, 3, 3, 4)), got)
+  }
+
+  test("substring and edge plans: one gram shuffle, no cache, pairs read once") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val df = Seq((1L, "plan pin text for the gram window shape " * 3),
+      (2L, "y" + "plan pin text for the gram window shape " * 2))
+      .toDF("doc_id", "text")
+    def onH(e: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
+      e.exists(_.references.exists(_.name == "h"))
+    for ((name, runs) <- Seq(
+        "substringRuns" -> Dedup.substringRuns(df, "doc_id", "text"),
+        "substringRunsKeepFirst" ->
+          Dedup.substringRunsKeepFirst(df, "doc_id", "text"))) {
+      val plan = runs.queryExecution.optimizedPlan
+      val windows = plan.collect {
+        case w: logical.Window if onH(w.partitionSpec) => w }
+      assert(windows.size == 1, s"$name: ${windows.size} windows on h")
+      assert(runs.queryExecution.withCachedData
+        .collect { case m: InMemoryRelation => m }.isEmpty, s"$name persists")
+      assert(plan.collect {
+        case j: logical.Join if onH(j.condition.toSeq) => j }.isEmpty,
+        s"$name joins on h")
+      assert(runs.count() > 0, name)
+    }
+    // edgeTable mirrors its pairs from one scan: every leaf of the pairs
+    // plan appears once in the edge plan, for a plain range and for the
+    // cached LSH candidate pipeline alike
+    val lshDocs = (1L to 3L)
+      .map(i => (i, "edge table pin corpus words for the mirrored pair scan"))
+      .toDF("doc_id", "text")
+    for (pairs <- Seq(
+        spark.range(0, 10).select(col("id").as("doc_a"),
+          (col("id") + 1).as("doc_b")),
+        Dedup.minhashLsh(lshDocs, "doc_id", "text").select("doc_a", "doc_b"))) {
+      def leaves(d: org.apache.spark.sql.DataFrame) =
+        d.queryExecution.optimizedPlan.collectLeaves().size
+      assert(leaves(Dedup.edgeTable(pairs, "doc_a", "doc_b")) == leaves(pairs))
+    }
   }
 }
