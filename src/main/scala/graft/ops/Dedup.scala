@@ -698,8 +698,12 @@ object Dedup {
     * would need a join back to the grams, and so a second read or a
     * cache of them), then the doc re-group of the islands merge. Text
     * never moves. A hot `h` is one window group, which
-    * `WindowExec` buffers with spill — the same single-reducer exposure
-    * a join on `h` has. Windows are keyed by
+    * `WindowExec` buffers with spill on a single reducer. A join on `h`
+    * would not be held to one: under AQE, which `Jobs.scaleConfs` turns
+    * on, Spark's skew-join rule splits a skewed join partition, and
+    * Spark has no such rule for a window partition. That is Spark's
+    * documented behaviour, not measured here; a workload with hot grams
+    * is the measurement. Windows are keyed by
     * [[TextGrams.charGramsExpr]], the native O(n) Karp-Rabin
     * `rolling_hash2`. */
   def substringRuns(docs: DataFrame, idCol: String, textCol: String,
@@ -741,8 +745,9 @@ object Dedup {
     *
     * 100 TB shape: identical to `substringRuns` — the owner is a
     * `min(struct(doc_id, pos))` over the same window on `h`, so no
-    * extra shuffle, no global coordination step, and text still never
-    * moves. No count is needed: a family of one is its own owner, so
+    * extra shuffle, no global coordination step, text still never
+    * moves, and a hot `h` is the same single window partition that no
+    * skew rule splits. No count is needed: a family of one is its own owner, so
     * dropping owners drops it too. */
   def substringRunsKeepFirst(docs: DataFrame, idCol: String, textCol: String,
       minLen: Int = 40): DataFrame =

@@ -193,26 +193,6 @@ $steps"""
       .orderBy(col("auth_micro").desc, col("hub_micro").desc, col("host").asc)
   }
 
-  /** Bounded multi-source BFS over a directed edge table `(src, dst)`:
-    * hop distance from the graph's ROOTS (nodes with no inbound edge —
-    * a crawl's effective entry points) to every reachable node, the
-    * "how deep did we get" audit a breadth-limited recrawl budgets on.
-    * Classic frontier iteration: wave k expands ONLY nodes first
-    * reached at k−1 (the post-min filter makes each edge fire exactly
-    * once per BFS level), `unionAll` + `min` folds the new wave into
-    * the distance table. Nodes not reachable from any root (cycle-only
-    * components) get NO row — at web scale that absence IS the signal
-    * (orphaned link islands).
-    *
-    * 100 TB shape: every iteration shuffles only (node, long) pairs —
-    * never pages; the frontier shrinks geometrically on real web
-    * graphs. Each level takes a `localCheckpoint` lineage CUT, not a
-    * lazy persist: the distance table feeds level k twice (union +
-    * frontier join), so a lazy plan doubles per level — 2^maxDepth
-    * subtrees by the end (the same reason the connected-components
-    * walk cuts). At the full crawl the node column would be a 64-bit
-    * url hash, not the string — callers pick the key.
-    */
   /** Connected components over STRING-keyed edges → one row per node:
     * (key, keep_key, n_members) with keep_key the component's
     * lexicographic minimum — the mirror/site-cluster resolution step
@@ -268,6 +248,26 @@ $steps"""
       .select(col("key"), col("keep_key"), col("n_members"))
   }
 
+  /** Bounded multi-source BFS over a directed edge table `(src, dst)`:
+    * hop distance from the graph's ROOTS (nodes with no inbound edge —
+    * a crawl's effective entry points) to every reachable node, the
+    * "how deep did we get" audit a breadth-limited recrawl budgets on.
+    * Classic frontier iteration: wave k expands ONLY nodes first
+    * reached at k−1 (the post-min filter makes each edge fire exactly
+    * once per BFS level), `unionAll` + `min` folds the new wave into
+    * the distance table. Nodes not reachable from any root (cycle-only
+    * components) get NO row — at web scale that absence IS the signal
+    * (orphaned link islands).
+    *
+    * 100 TB shape: every iteration shuffles only (node, long) pairs —
+    * never pages; the frontier shrinks geometrically on real web
+    * graphs. Each level takes a `localCheckpoint` lineage CUT, not a
+    * lazy persist: the distance table feeds level k twice (union +
+    * frontier join), so a lazy plan doubles per level — 2^maxDepth
+    * subtrees by the end (the same reason the connected-components
+    * walk cuts). At the full crawl the node column would be a 64-bit
+    * url hash, not the string — callers pick the key.
+    */
   def bfsDepth(edges: DataFrame, maxDepth: Int = 8,
       seeds: Option[DataFrame] = None): DataFrame = {
     val e = edges.select(col("src"), col("dst"))

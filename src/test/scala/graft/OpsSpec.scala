@@ -950,35 +950,10 @@ class OpsSpec extends AnyFunSuite {
     } finally spark.conf.unset(key)
   }
 
-  /** `body`'s result and the number of Spark jobs it started, with AQE
-    * on (so each exchange runs as its own job). A sentinel job run
-    * afterwards flushes the ordered listener bus, so every earlier
-    * start has arrived before the count is read. */
+  /** `body`'s result and the number of Spark jobs it started. */
   private def jobsDuring[T](body: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqeWas = spark.conf.getOption(aqeKey)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties.getProperty("spark.job.description") == "sentinel")
-          flushed.countDown()
-        else jobs.incrementAndGet()
-    }
-    spark.conf.set(aqeKey, "true")
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = body
-      spark.sparkContext.setJobDescription("sentinel")
-      spark.sparkContext.parallelize(Seq(1), 1).count()
-      spark.sparkContext.setJobDescription(null)
-      assert(flushed.await(30, java.util.concurrent.TimeUnit.SECONDS))
-      (out, jobs.get)
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      aqeWas.fold(spark.conf.unset(aqeKey))(spark.conf.set(aqeKey, _))
-    }
+    val (out, jobs) = TestSpark.jobsDuring(spark)(body)
+    (out, jobs.size)
   }
 
   test("Par.spread: building over a groupBy result runs no Spark job") {
@@ -987,28 +962,6 @@ class OpsSpec extends AnyFunSuite {
     val (spread, jobs) = jobsDuring(Par.spread(grouped, "k"))
     assert(jobs == 0, s"$jobs job(s) ran while building")
     assert(spread.count() == 10)
-  }
-
-  test("substring operators: building runs no Spark job") {
-    import spark.implicits._
-    val df = Seq((1L, "a shared passage of text " * 3),
-      (2L, "x" + "a shared passage of text " * 2)).toDF("doc_id", "text")
-    val bench = Seq("a shared passage of text " * 2).toDF("text")
-    val builds: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
-      "substringRuns" -> (() => Dedup.substringRuns(df, "doc_id", "text")),
-      "substringRunsKeepFirst" ->
-        (() => Dedup.substringRunsKeepFirst(df, "doc_id", "text")),
-      "substringRunsClean" ->
-        (() => Dedup.substringRunsClean(df, "doc_id", "text")),
-      "substringRunsCleanKeepFirst" ->
-        (() => Dedup.substringRunsCleanKeepFirst(df, "doc_id", "text")),
-      "decontaminateSubstring" -> (() => graft.ops.CorpusStats
-        .decontaminateSubstring(df, "doc_id", "text", bench, "text")))
-    for ((name, build) <- builds) {
-      val (out, jobs) = jobsDuring(build())
-      assert(jobs == 0, s"$name: $jobs job(s) ran while building")
-      assert(out.count() > 0, name)
-    }
   }
 
   test("simhash64 native expression is bit-identical to the builtin spec") {
@@ -3065,82 +3018,6 @@ class OpsSpec extends AnyFunSuite {
       assert(pairs(n - 1).isEmpty, s"$name kept a key group over its cap")
       val want = if (name == "minhashIncremental") admitted.toSet else all
       assert(pairs(n) == want, s"$name at cap $n")
-    }
-  }
-
-  test("skew cap shapes: each candidate operator keeps its measured plan") {
-    import spark.implicits._
-    import org.apache.spark.sql.catalyst.plans.logical
-    import org.apache.spark.sql.execution.columnar.InMemoryRelation
-    // text no other test uses, so no foreign cache entry can stand in
-    // for a subplan of these operators
-    val text = "shape pin corpus words for the skew cap plan test alpha beta"
-    val docs = (1L to 3L).map(i => (i, text)).toDF("doc_id", "text")
-    val vec = Array.tabulate(64)(d => math.cos(d * 0.9).toFloat)
-    val vecs = (1L to 3L).map(i => (i, vec)).toDF("vec_id", "embedding")
-    // (Window, Aggregate, Join) nodes of the analyzed plan, then the
-    // cached relations it reads: the window shape shows as a Window and
-    // its persist, the two-phase shape as an Aggregate plus a Join
-    def shape(df: org.apache.spark.sql.DataFrame): Seq[Int] = {
-      val a = df.queryExecution.analyzed
-      Seq(a.collect { case w: logical.Window => w }.size,
-        a.collect { case g: logical.Aggregate => g }.size,
-        a.collect { case j: logical.Join => j }.size,
-        df.queryExecution.withCachedData
-          .collect { case m: InMemoryRelation => m }.size)
-    }
-    val got = cappedOps(docs, vecs).map { case (name, op) =>
-      name -> shape(op(100)) }.toMap
-    // the shapes r06 measured per site (OPTIMIZATION_r06.md "Skew-cap
-    // shape work"); a shape switch must change these visibly
-    assert(got == Map(
-      "minhashLsh" -> Seq(2, 1, 1, 2),
-      "minhashIncremental" -> Seq(2, 1, 1, 2),
-      "simhash" -> Seq(2, 0, 1, 2),
-      "embeddingCosineLsh" -> Seq(2, 0, 1, 2),
-      "ngramJaccard" -> Seq(0, 7, 7, 4),
-      "containmentPairs" -> Seq(0, 7, 7, 4),
-      "winnow" -> Seq(0, 3, 3, 4),
-      "allPairsSetCosine" -> Seq(4, 3, 3, 4)), got)
-  }
-
-  test("substring and edge plans: one gram shuffle, no cache, pairs read once") {
-    import spark.implicits._
-    import org.apache.spark.sql.catalyst.plans.logical
-    import org.apache.spark.sql.execution.columnar.InMemoryRelation
-    val df = Seq((1L, "plan pin text for the gram window shape " * 3),
-      (2L, "y" + "plan pin text for the gram window shape " * 2))
-      .toDF("doc_id", "text")
-    def onH(e: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
-      e.exists(_.references.exists(_.name == "h"))
-    for ((name, runs) <- Seq(
-        "substringRuns" -> Dedup.substringRuns(df, "doc_id", "text"),
-        "substringRunsKeepFirst" ->
-          Dedup.substringRunsKeepFirst(df, "doc_id", "text"))) {
-      val plan = runs.queryExecution.optimizedPlan
-      val windows = plan.collect {
-        case w: logical.Window if onH(w.partitionSpec) => w }
-      assert(windows.size == 1, s"$name: ${windows.size} windows on h")
-      assert(runs.queryExecution.withCachedData
-        .collect { case m: InMemoryRelation => m }.isEmpty, s"$name persists")
-      assert(plan.collect {
-        case j: logical.Join if onH(j.condition.toSeq) => j }.isEmpty,
-        s"$name joins on h")
-      assert(runs.count() > 0, name)
-    }
-    // edgeTable mirrors its pairs from one scan: every leaf of the pairs
-    // plan appears once in the edge plan, for a plain range and for the
-    // cached LSH candidate pipeline alike
-    val lshDocs = (1L to 3L)
-      .map(i => (i, "edge table pin corpus words for the mirrored pair scan"))
-      .toDF("doc_id", "text")
-    for (pairs <- Seq(
-        spark.range(0, 10).select(col("id").as("doc_a"),
-          (col("id") + 1).as("doc_b")),
-        Dedup.minhashLsh(lshDocs, "doc_id", "text").select("doc_a", "doc_b"))) {
-      def leaves(d: org.apache.spark.sql.DataFrame) =
-        d.queryExecution.optimizedPlan.collectLeaves().size
-      assert(leaves(Dedup.edgeTable(pairs, "doc_a", "doc_b")) == leaves(pairs))
     }
   }
 }

@@ -19,6 +19,39 @@ object TestSpark {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** `body`'s result and the stage name of each Spark job it started
+    * (`parquet at SparkEntry.scala:99`, `collect at …`), with AQE on in
+    * `s` (so each exchange runs as its own job). A sentinel job run
+    * afterwards flushes the ordered listener bus, so every earlier start
+    * has arrived before the names are read. */
+  def jobsDuring[T](s: SparkSession)(body: => T): (T, Seq[String]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val aqeKey = "spark.sql.adaptive.enabled"
+    val aqeWas = s.conf.getOption(aqeKey)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.job.description") == "sentinel")
+          flushed.countDown()
+        else jobs.add(e.stageInfos.map(_.name).headOption.getOrElse(""))
+    }
+    s.conf.set(aqeKey, "true")
+    s.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      s.sparkContext.setJobDescription("sentinel")
+      s.sparkContext.parallelize(Seq(1), 1).count()
+      s.sparkContext.setJobDescription(null)
+      assert(flushed.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      import scala.jdk.CollectionConverters._
+      (out, jobs.asScala.toSeq)
+    } finally {
+      s.sparkContext.removeSparkListener(listener)
+      aqeWas.fold(s.conf.unset(aqeKey))(s.conf.set(aqeKey, _))
+    }
+  }
 }
 
 /** End-to-end pipeline tests through the public surface (the reference's
@@ -119,6 +152,12 @@ class PipelineSpec extends AnyFunSuite {
     val b = Jobs.extract(Jobs.syntheticPages(spark, 120, parallelism = 8), 16)
       .collect().sortBy(_.url).map(r => (r.url, r.text, r.outcome)).toSeq
     assert(a == b)
+  }
+
+  test("entry: the flagship query breaks down every verify-corpus row") {
+    val df = SparkEntry.entry(spark)
+    assert(df.columns.toSeq == Seq("outcome", "engine", "n", "chars"))
+    assert(df.agg(sum("n")).head().getLong(0) == SparkEntry.verifyN)
   }
 
   test("golden: pipeline output matches frozen fixtures byte-identically") {
